@@ -12,10 +12,11 @@ manifest leaves only orphan files that no reader resolves (the
 Delta/Iceberg commit-protocol core, re-expressed on plain parquet +
 POSIX rename).
 
-Exactly-once streaming upserts fall out of the manifest name carrying
+Exactly-once streaming upserts fall out of the manifest body carrying
 the micro-batch id: a retried batch finds its own id already published
-and skips, so the at-least-once-on-retry caveat of the plain append
-sink (streaming/stream.py:start_hist_upsert) does not apply here.
+and skips. Every writer commits through one loop (_commit): token
+check, latest-manifest read, CAS-guarded publish, bounded retry, and
+the carry-forward of per-file stats and manifest extras.
 
 At 100 TB the manifest lists file paths (KBs per thousand files), new
 versions reuse prior data files (append = prior list + one new file),
@@ -30,14 +31,14 @@ import os
 import re
 import time
 import uuid
+from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
 _MANIFEST_RE = re.compile(r"manifest-(\d{6})\.json$")
-# Pre-CAS-protocol tables carried the batch token in the filename;
-# accept them on read so an existing table isn't silently reported as
-# nonexistent (which would restart versioning at 1 beside the orphans).
-_LEGACY_MANIFEST_RE = re.compile(r"manifest-(\d{6})-([^/]+)\.json$")
+# attempts before a writer (or latest_manifest) gives up on a table
+# that keeps moving underneath it
+_ATTEMPTS = 10
 
 
 def _manifests(table_dir: str,
@@ -59,28 +60,31 @@ def _manifests(table_dir: str,
         return out
     for name in os.listdir(table_dir):
         m = _MANIFEST_RE.match(name)
-        path = os.path.join(table_dir, name)
-        if m:
-            token = ""
-            if with_tokens:
-                try:
-                    with open(path) as f:
-                        token = json.load(f).get("batch", "")
-                except (FileNotFoundError, json.JSONDecodeError):
-                    continue  # vacuumed or half-written: not the latest
-            out.append((int(m.group(1)), token, path))
+        if not m:
             continue
-        lm = _LEGACY_MANIFEST_RE.match(name)
-        if lm:
-            out.append((int(lm.group(1)), lm.group(2), path))
+        path = os.path.join(table_dir, name)
+        token = ""
+        if with_tokens:
+            try:
+                with open(path) as f:
+                    token = json.load(f).get("batch", "")
+            except (FileNotFoundError, json.JSONDecodeError):
+                continue  # vacuumed or half-written: not the latest
+        out.append((int(m.group(1)), token, path))
     return sorted(out)
 
 
+def _has_token(table_dir: str, token: str) -> bool:
+    """True once any manifest of ``table_dir`` carries batch ``token``
+    (the exactly-once replay check)."""
+    return any(tok == token
+               for _, tok, _ in _manifests(table_dir, with_tokens=True))
+
+
 def latest_manifest(table_dir: str) -> dict | None:
-    # bounded retry, mirroring the CAS loops in upsert/delete: a
-    # pathological stream of zero-retention vacuums must surface as an
-    # error, not starve the reader forever
-    for _ in range(10):
+    # bounded re-resolve: a pathological stream of zero-retention
+    # vacuums must surface as an error, not starve the reader forever
+    for _ in range(_ATTEMPTS):
         ms = _manifests(table_dir)
         if not ms:
             return None
@@ -90,54 +94,138 @@ def latest_manifest(table_dir: str) -> dict | None:
         except FileNotFoundError:
             continue  # raced a zero-retention vacuum: re-resolve
     raise RuntimeError(
-        f"latest_manifest: top manifest vanished 10 times in a row at "
-        f"{table_dir} (concurrent zero-retention vacuum loop?)"
+        f"latest_manifest: top manifest vanished {_ATTEMPTS} times in a "
+        f"row at {table_dir} (concurrent zero-retention vacuum loop?)"
     )
 
 
 def _publish(table_dir: str, files: list[str], batch_token: str,
              extra: dict | None = None,
              expected_version: int | None = None) -> int:
-    """Commit = put-if-absent, not replace-on-rename: two concurrent
-    writers that both compute the same next version must not silently
-    overwrite each other (lost update). os.link refuses an existing
-    destination atomically; on EEXIST we re-read the version and retry,
-    exactly the optimistic-concurrency loop Delta/Iceberg run against a
-    conditional PUT.
+    """One commit attempt: put-if-absent, not replace-on-rename. Two
+    concurrent writers that both compute the same next version must
+    not silently overwrite each other (lost update); os.link refuses
+    an existing destination atomically, the conditional PUT
+    Delta/Iceberg run their optimistic concurrency against.
 
-    ``expected_version`` is the CAS guard for writers whose file list
-    DERIVES from a read version (upsert's prior-files carryover,
-    delete's keep-list, compact's rewrite): if the table advanced past
-    it, blindly retrying would publish a list computed from stale state
-    and silently drop the interleaved commit's files. Returns -1 so the
-    caller re-reads the new latest and recomputes; pass None only when
-    the file list is version-independent (publish_snapshot's full
-    replace)."""
+    Returns the published version, or -1 when the attempt lost: either
+    the table advanced past ``expected_version`` (the CAS guard for a
+    file list DERIVED from a read version — publishing it anyway would
+    drop the interleaved commit's files) or another writer linked this
+    version first. Retrying is _commit's job."""
     os.makedirs(table_dir, exist_ok=True)
-    while True:
-        ms = _manifests(table_dir)
-        version = (ms[-1][0] + 1) if ms else 1
-        if expected_version is not None and version != expected_version + 1:
-            return -1  # table advanced: caller must recompute
-        body = {"version": version, "batch": batch_token, "files": files}
-        if extra:
-            body.update(extra)
-        # Stamped AFTER the extras merge so a restore/clone that
-        # carries an old manifest's metadata can never publish a
-        # stale commit time — every version's committed_at is its own
-        # wall-clock, the read_asof/history contract.
-        body["committed_at"] = time.time()
-        tmp = os.path.join(table_dir, f".manifest-{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(body, f)
-        final = os.path.join(table_dir, f"manifest-{version:06d}.json")
-        try:
-            os.link(tmp, final)  # atomic create-exclusive
-        except FileExistsError:
-            os.remove(tmp)
-            continue  # lost the race: recompute version, retry
+    ms = _manifests(table_dir)
+    version = (ms[-1][0] + 1) if ms else 1
+    if expected_version is not None and version != expected_version + 1:
+        return -1  # table advanced: caller must recompute
+    body = {"version": version, "batch": batch_token, "files": files}
+    if extra:
+        body.update(extra)
+    # Stamped AFTER the extras merge so a restore/clone that carries an
+    # old manifest's metadata can never publish a stale commit time —
+    # every version's committed_at is its own wall-clock, the
+    # read_asof/history contract.
+    body["committed_at"] = time.time()
+    tmp = os.path.join(table_dir, f".manifest-{uuid.uuid4().hex}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(body, f)
+    final = os.path.join(table_dir, f"manifest-{version:06d}.json")
+    try:
+        os.link(tmp, final)  # atomic create-exclusive
+    except FileExistsError:
+        return -1  # lost the race for this version
+    finally:
         os.remove(tmp)
-        return version
+    return version
+
+
+class _Commit(NamedTuple):
+    """What a writer computed from the manifest it read: the next
+    version lists ``keep`` (files of the read version, by reference)
+    then ``new`` (files this writer wrote). ``stats`` holds fresh
+    {key: {path: [min, max]}} entries and ``extra`` the manifest keys
+    to set (None drops a carried key). ``result`` maps the published
+    version to the writer's return value."""
+    result: Callable[[int], Any]
+    new: list = []
+    keep: list = []
+    stats: dict = {}
+    extra: dict = {}
+
+
+def _carry_extras(man: dict | None) -> dict:
+    """Caller-supplied manifest metadata (hash_version, constraints, a
+    BM25 index's ``bm25_terms``, ...) carried forward verbatim into
+    every new version — without this, a compact/delete/merge would
+    silently drop the metadata and downstream readers would fall back
+    to defaults."""
+    return {k: v for k, v in (man or {}).items()
+            if k not in ("version", "batch", "files", "stats",
+                         "committed_at")}
+
+
+def _carry_stats(man: dict | None, keep: list[str]) -> dict:
+    """The data-skipping stats of ``man`` for the files a new version
+    keeps by reference, for EVERY tracked key: kept files are
+    unchanged, so all their entries stay valid — narrowing the map to
+    the writer's own key would wipe the skipping index of tables
+    written under several keys (e.g. the mutable LSH flow's doc_id +
+    band_key)."""
+    keep_set = set(keep)
+    return {
+        k: {p: s for p, s in m.items() if p in keep_set}
+        for k, m in (man or {}).get("stats", {}).items()
+    }
+
+
+_LATEST = object()
+
+
+def _commit(table_dir: str, what: str, token: str,
+            plan: Callable[[dict | None], Any],
+            skipped: Any = None, base: Any = _LATEST) -> Any:
+    """The commit protocol — the single place it is written. Each
+    attempt: when ``skipped`` is given and a manifest already carries
+    ``token``, return ``skipped`` (exactly-once replay); read the
+    latest manifest; let ``plan`` compute from it; publish CAS-guarded
+    on the version read. A lost race re-reads and recomputes, so a
+    commit that lands in between is never dropped and never slips past
+    an anti-join; after _ATTEMPTS losses it raises.
+
+    ``plan(man)`` returns a _Commit, or any other value meaning
+    "nothing to publish", which is returned as is. Stats and extras of
+    ``man`` carry forward under the commit's own (_carry_stats /
+    _carry_extras).
+
+    ``base`` is for writers whose file list does not derive from the
+    table's latest version (a full replace, a restore, a clone): they
+    plan and carry from ``base`` and publish unguarded, so only a
+    lost link race retries."""
+    for _attempt in range(_ATTEMPTS):
+        if skipped is not None and _has_token(table_dir, token):
+            return skipped
+        man = latest_manifest(table_dir) if base is _LATEST else base
+        step = plan(man)
+        if not isinstance(step, _Commit):
+            return step
+        stats = _carry_stats(man, step.keep)
+        for k, fresh in step.stats.items():
+            stats[k] = {**stats.get(k, {}), **fresh}
+        extra = {**_carry_extras(man), **step.extra}
+        if stats:
+            extra["stats"] = stats
+        v = _publish(
+            table_dir, step.keep + step.new, token,
+            extra={k: x for k, x in extra.items() if x is not None},
+            expected_version=(
+                (man or {}).get("version", 0) if base is _LATEST else None
+            ),
+        )
+        if v != -1:
+            return step.result(v)
+    raise RuntimeError(
+        f"{what}: lost the publish race {_ATTEMPTS} times at {table_dir}"
+    )
 
 
 def _write_data(df: DataFrame, table_dir: str) -> list[str]:
@@ -209,8 +297,13 @@ def _prune_by_stats(stats: dict, files: list[str], keys: list) -> tuple[
 def publish_snapshot(df: DataFrame, table_dir: str,
                      batch_token: str = "manual") -> int:
     """Write ``df`` as a full new table version (data files first,
-    manifest rename last). Returns the published version number."""
-    return _publish(table_dir, _write_data(df, table_dir), batch_token)
+    manifest rename last). Returns the published version number. A
+    full replace derives nothing from the current version, so it
+    carries nothing forward and publishes unguarded."""
+    files = _write_data(df, table_dir)
+    return _commit(table_dir, "publish_snapshot", batch_token,
+                   lambda _man: _Commit(new=files, result=lambda v: v),
+                   base=None)
 
 
 def _read_files(spark: SparkSession, files: list[str]) -> DataFrame:
@@ -253,64 +346,34 @@ def upsert_batch(batch: DataFrame, batch_id: int, table_dir: str,
     metadata such as an index's term list); reserved body keys
     (version/batch/files/stats) must not be used.
     """
-    token = f"batch{batch_id}"
     spark = batch.sparkSession
     # like the reference's ON CONFLICT DO NOTHING, intra-batch key
     # collisions also keep exactly one row
     batch = batch.dropDuplicates([key])
-    cons_checked: dict | None = None
-    for _attempt in range(10):
-        if any(tok == token
-               for _, tok, _ in _manifests(table_dir, with_tokens=True)):
-            return "skipped_duplicate"
-        man = latest_manifest(table_dir)
-        cons_now = (man or {}).get("constraints")
-        if _attempt == 0 or cons_now != cons_checked:
-            # after the token check (a replayed batch still skips) and
-            # before any data write — a violating batch leaves no
-            # file. Re-validated on a CAS retry whenever the
-            # constraint set changed underneath us (an interleaved
-            # set_constraint must gate THIS batch too, not just the
-            # next one); an unchanged set skips the extra scan.
-            _enforce_constraints(batch, man, "upsert_batch")
-            cons_checked = cons_now
+
+    def plan(man):
+        # after the token check (a replayed batch still skips) and
+        # before any data write — a violating batch leaves no file.
+        # Re-run on every attempt, so a set_constraint that lands
+        # between a lost race and its retry gates THIS batch too.
+        _enforce_constraints(batch, man, "upsert_batch")
         if man is None:
-            base_version = 0
-            new_rows = batch
-            prior: list[str] = []
-            all_stats: dict = {}
+            prior, new_rows = [], batch
         else:
-            base_version = man["version"]
             prior = man["files"]
-            all_stats = man.get("stats", {})
             hist_keys = _read_files(spark, prior).select(key)
             new_rows = batch.join(hist_keys, key, "left_anti")
         files = _write_data(new_rows, table_dir)
         # data-skipping stats ride the manifest (Delta-style): footer
         # min/max paid once per file at write time, carried forward by
         # reference with the prior files; deletes and point reads then
-        # prune without any footer IO. EVERY tracked key's map carries
-        # over (prior files are unchanged, so their other-key stats
-        # stay valid) — replacing the dict with a single-key map would
-        # wipe the skipping index for tables written under several
-        # keys (e.g. the mutable LSH flow's doc_id + band_key).
-        new_stats = _file_stats(files, key)
-        prior_set = set(prior)
-        stats = dict(all_stats)
-        stats[key] = {
-            **{p: v for p, v in all_stats.get(key, {}).items()
-               if p in prior_set},
-            **(new_stats or {}),
-        }
-        v = _publish(table_dir, prior + files, token,
-                     extra={"stats": stats, **_carry_extras(man),
-                            **(extra or {})},
-                     expected_version=base_version)
-        if v != -1:
-            return "published"
-    raise RuntimeError(
-        f"upsert_batch: lost the publish race {10} times at {table_dir}"
-    )
+        # prune without any footer IO
+        return _Commit(new=files, keep=prior,
+                       stats={key: _file_stats(files, key) or {}},
+                       extra=extra or {}, result=lambda v: "published")
+
+    return _commit(table_dir, "upsert_batch", f"batch{batch_id}", plan,
+                   skipped="skipped_duplicate")
 
 
 # Formula version of _content_hash. Manifests record the version that
@@ -396,9 +459,7 @@ def upsert_replacing(batch: DataFrame, batch_id: int, table_dir: str,
     A replacement costs two manifest versions (the delete, then the
     append) — the honest price of an update on immutable files.
     """
-    token = f"batch{batch_id}"
-    if any(tok == token
-           for _, tok, _ in _manifests(table_dir, with_tokens=True)):
+    if _has_token(table_dir, f"batch{batch_id}"):
         return "skipped_duplicate"
     from pyspark.sql import functions as F
 
@@ -446,19 +507,6 @@ def upsert_replacing(batch: DataFrame, batch_id: int, table_dir: str,
     # so the marker is assertable
     return upsert_batch(b, batch_id, table_dir, key=key,
                         extra={"hash_version": _HASH_VERSION})
-
-
-def _carry_extras(man: dict | None) -> dict:
-    """Caller-supplied manifest metadata (e.g. a BM25 index's
-    ``bm25_terms``) carried forward verbatim by every writer that
-    republishes a table version — without this, a compact/delete/merge
-    would silently drop the metadata and downstream readers would fall
-    back to defaults."""
-    if not man:
-        return {}
-    return {k: v for k, v in man.items()
-            if k not in ("version", "batch", "files", "stats",
-                         "committed_at")}
 
 
 def merge_into(source: DataFrame, batch_id: int, table_dir: str,
@@ -523,7 +571,6 @@ def merge_into(source: DataFrame, batch_id: int, table_dir: str,
     """
     from pyspark.sql import functions as F
 
-    token = f"batch{batch_id}"
     spark = source.sparkSession
     data_cols = sorted(c for c in source.columns
                        if c not in (key, content_col))
@@ -544,39 +591,29 @@ def merge_into(source: DataFrame, batch_id: int, table_dir: str,
         )
     else:
         ins_pred = F.lit(bool(when_not_matched_insert))
-    cons_checked: dict | None = None
-    for _attempt in range(10):
-        if any(tok == token
-               for _, tok, _ in _manifests(table_dir, with_tokens=True)):
-            return {"status": "skipped_duplicate",
-                    "deleted": 0, "updated": 0, "inserted": 0}
-        man = latest_manifest(table_dir)
-        cons_now = (man or {}).get("constraints")
-        if _attempt == 0 or cons_now != cons_checked:
-            # every row a merge can write (insert or rewrite) comes
-            # from src, so one batch-scan validation covers both
-            # paths; re-validated on a CAS retry whenever the
-            # constraint set changed underneath us
-            _enforce_constraints(src, man, "merge_into")
-            cons_checked = cons_now
+
+    def outcome(status, deleted=0, updated=0, inserted=0):
+        return {"status": status, "deleted": deleted, "updated": updated,
+                "inserted": inserted}
+
+    def plan(man):
+        # every row a merge can write (insert or rewrite) comes from
+        # src, so one batch-scan validation covers both paths; re-run
+        # on every attempt like upsert_batch's
+        _enforce_constraints(src, man, "merge_into")
         if man is None or not man["files"]:
             ins = src.where(ins_pred)
             n_ins = ins.count()
             if n_ins == 0:
                 # nothing survives the insert predicate: no version
                 # churn (mirrors the non-empty-table noop path)
-                return {"status": "noop",
-                        "deleted": 0, "updated": 0, "inserted": 0}
+                return outcome("noop")
             files = _write_data(ins, table_dir)
-            stats = {key: _file_stats(files, key) or {}}
-            v = _publish(table_dir, files, token,
-                         extra={"stats": stats, **_carry_extras(man),
-                                "hash_version": _HASH_VERSION},
-                         expected_version=(man or {}).get("version", 0))
-            if v != -1:
-                return {"status": "published",
-                        "deleted": 0, "updated": 0, "inserted": n_ins}
-            continue
+            return _Commit(
+                new=files, stats={key: _file_stats(files, key) or {}},
+                extra={"hash_version": _HASH_VERSION},
+                result=lambda v: outcome("published", inserted=n_ins),
+            )
         hist = _read_files(spark, man["files"])
         hist = _backfill_missing(hist, data_cols, src.schema)
         # rows written without a stored hash (plain upsert_batch
@@ -614,8 +651,7 @@ def merge_into(source: DataFrame, batch_id: int, table_dir: str,
         if n_del + n_upd + n_ins == 0:
             # nothing to do: no version churn, no token — a replay of
             # this batch is the same no-op against the same state
-            return {"status": "noop",
-                    "deleted": 0, "updated": 0, "inserted": 0}
+            return outcome("noop")
         removed = deletes.unionByName(updates.select(key))
         appends = updates.unionByName(inserts).select(*src.columns)
         kdf = removed.select(F.col(key).alias("_k")).distinct()
@@ -639,30 +675,21 @@ def merge_into(source: DataFrame, batch_id: int, table_dir: str,
         new_rows = (kept.unionByName(appends) if kept is not None
                     else appends)
         files = _write_data(new_rows, table_dir)
-        new_stats = _file_stats(files, key) if files else {}
-        keep_set = set(keep_files)
-        all_stats = {
-            k: {p: s for p, s in m.items() if p in keep_set}
-            for k, m in man.get("stats", {}).items()
-        }
-        all_stats[key] = {**all_stats.get(key, {}), **(new_stats or {})}
         # the marker means "EVERY stored hash in this version is
-        # current-formula": carry it only when it already held, or
+        # current-formula": keep it only when it already held, or
         # assert it when this merge rewrote every prior file (rows
         # written here always hash under the current formula)
-        extras = _carry_extras(man)
-        extras.pop("hash_version", None)
-        if trusted or not keep_files:
-            extras["hash_version"] = _HASH_VERSION
-        v = _publish(table_dir, keep_files + files, token,
-                     extra={"stats": all_stats, **extras},
-                     expected_version=man["version"])
-        if v != -1:
-            return {"status": "published", "deleted": n_del,
-                    "updated": n_upd, "inserted": n_ins}
-    raise RuntimeError(
-        f"merge_into: lost the publish race 10 times at {table_dir}"
-    )
+        return _Commit(
+            new=files, keep=keep_files,
+            stats={key: _file_stats(files, key) or {}},
+            extra={"hash_version": (_HASH_VERSION
+                                    if trusted or not keep_files
+                                    else None)},
+            result=lambda v: outcome("published", n_del, n_upd, n_ins),
+        )
+
+    return _commit(table_dir, "merge_into", f"batch{batch_id}", plan,
+                   skipped=outcome("skipped_duplicate"))
 
 
 def rehash_table(spark: SparkSession, table_dir: str,
@@ -673,27 +700,17 @@ def rehash_table(spark: SparkSession, table_dir: str,
     manifest with ``hash_version`` so upsert_replacing / merge_into /
     change_feed trust stored hashes again (until then they recompute
     on the fly — correct, but one extra md5 projection per history
-    scan). Idempotent: a table already marked current is a no-op, and
-    the batch token makes a replayed migration a no-op too. Content is
-    unchanged, so a change_feed crossing the rehash boundary emits
+    scan). Idempotent: a table already marked current is a no-op, so a
+    replayed migration is one too, while a table whose marker was lost
+    (e.g. to a full-replace publish_snapshot) migrates again. Content
+    is unchanged, so a change_feed crossing the rehash boundary emits
     nothing for untouched keys (the feed recomputes hashes whenever
     the endpoints' markers differ)."""
-    for _attempt in range(10):
-        man = latest_manifest(table_dir)
-        if man is None or not man["files"]:
+
+    def plan(man):
+        if (man is None or not man["files"]
+                or man.get("hash_version") == _HASH_VERSION):
             return {"status": "noop"}
-        if man.get("hash_version") == _HASH_VERSION:
-            return {"status": "noop"}
-        # idempotence token is SCOPED TO THE SOURCE VERSION (marker
-        # first, token second): a bare formula-wide token would lock
-        # the migration out forever if the marker were later lost to a
-        # non-extras-carrying writer — the version scope lets a fresh
-        # rehash of the new state run while a replay of THIS rehash
-        # stays a no-op
-        token = f"rehash-v{_HASH_VERSION}-from{man['version']}"
-        if any(tok == token
-               for _, tok, _ in _manifests(table_dir, with_tokens=True)):
-            return {"status": "skipped_duplicate"}
         rows = _read_files(spark, man["files"])
         data_cols = sorted(c for c in rows.columns
                            if c not in (key, content_col))
@@ -701,71 +718,17 @@ def rehash_table(spark: SparkSession, table_dir: str,
         files = _write_data(rows, table_dir)
         # every file was rewritten: refresh the skipping stats for
         # EVERY key the prior manifest tracked, not just the passed
-        # one — replacing the dict with a single-key map would wipe
-        # the index for multi-key tables (the compact contract)
+        # one (the compact contract)
         tracked = set(man.get("stats", {})) | {key}
-        stats = {k: (_file_stats(files, k) or {}) for k in tracked
-                 if k in rows.columns}
-        extras = _carry_extras(man)
-        extras.pop("hash_version", None)
-        v = _publish(table_dir, files, token,
-                     extra={"stats": stats, **extras,
-                            "hash_version": _HASH_VERSION},
-                     expected_version=man["version"])
-        if v != -1:
-            return {"status": "published", "version": v}
-    raise RuntimeError(
-        f"rehash_table: lost the publish race 10 times at {table_dir}"
-    )
+        return _Commit(
+            new=files,
+            stats={k: _file_stats(files, k) or {} for k in tracked},
+            extra={"hash_version": _HASH_VERSION},
+            result=lambda v: {"status": "published", "version": v},
+        )
 
-
-def adopt_legacy_parquet(table_dir: str) -> int | None:
-    """One-shot adoption of a state dir written by the pre-manifest
-    overwrite-parquet protocol: if ``table_dir`` holds bare part files
-    but NO manifest, publish them as version 1 so manifest readers see
-    the accumulated state instead of silently restarting from empty
-    (the stream checkpoint would prevent ever re-deriving it). CAS on
-    version 1: if a concurrent writer published first, nothing is
-    adopted. Returns the published version, or None when there was
-    nothing to adopt (already a manifest table, or no parquet files).
-
-    Torn-state guard: the overwrite protocol this rescues is exactly
-    the one that can crash mid-write and leave a partial part-file
-    set. When the dir carries Spark's ``_SUCCESS`` commit marker the
-    set is known complete; without it every file's parquet FOOTER is
-    verified readable (the footer is written last, so a torn file
-    fails here) — an unreadable file raises instead of adopting
-    corrupt rows as durable state, leaving the operator to repair or
-    delete the dir explicitly. KNOWN LIMIT of the no-marker path: a
-    job that crashed after only SOME tasks committed leaves files
-    that are individually complete — nothing in a bare dir records
-    the intended file count, so the subset is indistinguishable from
-    a legitimate small write and is adopted as-is. Only ``_SUCCESS``
-    proves set-completeness; treat marker-less adoption as
-    best-effort rescue of whatever the legacy writer durably left."""
-    if not os.path.isdir(table_dir) or latest_manifest(table_dir) is not None:
-        return None
-    files = sorted(
-        os.path.join(table_dir, n) for n in os.listdir(table_dir)
-        if n.endswith(".parquet")
-    )
-    if not files:
-        return None
-    if not os.path.exists(os.path.join(table_dir, "_SUCCESS")):
-        import pyarrow.parquet as pq
-
-        for p in files:
-            try:
-                pq.ParquetFile(p).close()
-            except Exception as exc:
-                raise ValueError(
-                    f"adopt_legacy_parquet: {p} has no readable parquet "
-                    "footer and the dir has no _SUCCESS commit marker — "
-                    "refusing to adopt a possibly torn legacy write; "
-                    "repair or remove the file and retry"
-                ) from exc
-    v = _publish(table_dir, files, "legacy-adopt", expected_version=0)
-    return None if v == -1 else v
+    return _commit(table_dir, "rehash_table",
+                   f"rehash-v{_HASH_VERSION}-{uuid.uuid4().hex[:8]}", plan)
 
 
 def start_snapshot_merge(source: DataFrame, table_dir: str,
@@ -821,17 +784,10 @@ def read_version(spark: SparkSession, table_dir: str,
     published. Prior versions stay readable because appends and
     deletes never mutate published data files — they publish new
     manifests (and new files) on top."""
-    for v, _tok, path in _manifests(table_dir):
-        if v == version:
-            try:
-                with open(path) as f:
-                    man = json.load(f)
-            except FileNotFoundError:
-                return None  # retired by a concurrent vacuum
-            if not man["files"]:
-                return None
-            return _read_files(spark, man["files"])
-    return None
+    man = _manifest_at(table_dir, version)
+    if man is None or not man["files"]:
+        return None
+    return _read_files(spark, man["files"])
 
 
 def history(table_dir: str) -> list[dict]:
@@ -842,7 +798,7 @@ def history(table_dir: str) -> list[dict]:
     timestamp time-travel uses on its commit files). Vacuum-retired
     versions are skipped rather than half-reported."""
     out = []
-    for v, tok, path in _manifests(table_dir):
+    for v, _tok, path in _manifests(table_dir):
         try:
             with open(path) as f:
                 man = json.load(f)
@@ -850,7 +806,7 @@ def history(table_dir: str) -> list[dict]:
             continue  # retired by a concurrent vacuum
         out.append({
             "version": v,
-            "batch": man.get("batch", tok),
+            "batch": man.get("batch", ""),
             "n_files": len(man.get("files", [])),
             "committed_at": man.get(
                 "committed_at", os.path.getmtime(path)),
@@ -894,7 +850,8 @@ def restore(table_dir: str, version: int) -> dict:
     as across a compaction boundary.
 
     The file list depends only on the TARGET version (not the current
-    latest), so the publish needs no CAS guard — like Delta RESTORE,
+    latest), so the commit carries from the target and needs no CAS
+    guard — like Delta RESTORE,
     it intentionally REPLACES whatever the latest view holds,
     including commits that land while the restore is in flight.
     Fails loudly (ValueError) if the target version is unknown or any
@@ -913,19 +870,14 @@ def restore(table_dir: str, version: int) -> dict:
             f"vacuumed data file(s) at {table_dir} (e.g. {missing[0]}); "
             f"its data is gone — restore a retained version"
         )
-    extras = {
-        k: v for k, v in man.items()
-        if k not in ("version", "batch", "files")
-    }
-    new_version = _publish(
-        table_dir, list(man["files"]),
-        f"restore-{uuid.uuid4().hex[:8]}", extra=extras,
+    return _commit(
+        table_dir, "restore", f"restore-{uuid.uuid4().hex[:8]}",
+        lambda _man: _Commit(keep=man["files"], result=lambda v: {
+            "restored_from": version, "version": v,
+            "files": len(man["files"]),
+        }),
+        base=man,
     )
-    return {
-        "restored_from": version,
-        "version": new_version,
-        "files": len(man["files"]),
-    }
 
 
 def analyze(table_dir: str, keys: list[str]) -> dict:
@@ -946,38 +898,24 @@ def analyze(table_dir: str, keys: list[str]) -> dict:
     CAS-guarded like every derived-list writer: the file list and
     stats derive from a read version, so an interleaved commit
     forces a re-read instead of silently erasing its files."""
-    for _attempt in range(10):
-        man = latest_manifest(table_dir)
+
+    def plan(man):
         if man is None or not man["files"]:
             return {"version": None, "added": [], "skipped": list(keys)}
-        added, skipped = [], []
-        stats = {k: dict(v) for k, v in man.get("stats", {}).items()}
-        for k in keys:
-            fresh = _file_stats(man["files"], k)
-            if fresh is None:
-                skipped.append(k)
-                continue
-            stats[k] = {**stats.get(k, {}), **fresh}
-            added.append(k)
+        fresh = {k: _file_stats(man["files"], k) for k in keys}
+        added = [k for k in keys if fresh[k] is not None]
+        skipped = [k for k in keys if fresh[k] is None]
         if not added:
             return {"version": man["version"], "added": [],
                     "skipped": skipped}
-        extras = {
-            kk: vv for kk, vv in man.items()
-            if kk not in ("version", "batch", "files", "stats")
-        }
-        version = _publish(
-            table_dir, list(man["files"]),
-            f"analyze-{uuid.uuid4().hex[:8]}",
-            extra={"stats": stats, **extras},
-            expected_version=man["version"],
+        return _Commit(
+            keep=man["files"], stats={k: fresh[k] for k in added},
+            result=lambda v: {"version": v, "added": added,
+                              "skipped": skipped},
         )
-        if version != -1:
-            return {"version": version, "added": added,
-                    "skipped": skipped}
-    raise RuntimeError(
-        f"analyze: lost the publish race 10 times at {table_dir}"
-    )
+
+    return _commit(table_dir, "analyze",
+                   f"analyze-{uuid.uuid4().hex[:8]}", plan)
 
 
 def _enforce_constraints(df: DataFrame, man: dict | None,
@@ -1027,8 +965,8 @@ def set_constraint(spark: SparkSession, table_dir: str,
     merge_into) then reject any batch carrying a violating row before
     writing a single data file. Metadata-only commit under the CAS
     guard (file list carried by reference)."""
-    for _attempt in range(10):
-        man = latest_manifest(table_dir)
+
+    def plan(man):
         if man is None or not man["files"]:
             raise ValueError(
                 f"set_constraint: no published table at {table_dir} — "
@@ -1039,23 +977,14 @@ def set_constraint(spark: SparkSession, table_dir: str,
             {"constraints": {name: expr}},
             "set_constraint(existing data)",
         )
-        cons = dict(man.get("constraints") or {})
-        cons[name] = expr
-        extras = {
-            k: v for k, v in man.items()
-            if k not in ("version", "batch", "files", "constraints")
-        }
-        v = _publish(
-            table_dir, list(man["files"]),
-            f"constraint-{uuid.uuid4().hex[:8]}",
-            extra={**extras, "constraints": cons},
-            expected_version=man["version"],
+        cons = {**(man.get("constraints") or {}), name: expr}
+        return _Commit(
+            keep=man["files"], extra={"constraints": cons},
+            result=lambda v: {"version": v, "constraints": cons},
         )
-        if v != -1:
-            return {"version": v, "constraints": cons}
-    raise RuntimeError(
-        f"set_constraint: lost the publish race 10 times at {table_dir}"
-    )
+
+    return _commit(table_dir, "set_constraint",
+                   f"constraint-{uuid.uuid4().hex[:8]}", plan)
 
 
 def drop_constraint(table_dir: str, name: str) -> dict:
@@ -1063,31 +992,21 @@ def drop_constraint(table_dir: str, name: str) -> dict:
     constraints map as a metadata-only commit. Unknown names raise
     (a typo'd drop silently succeeding would leave the caller
     believing enforcement stopped)."""
-    for _attempt in range(10):
-        man = latest_manifest(table_dir)
+
+    def plan(man):
         cons = dict((man or {}).get("constraints") or {})
         if name not in cons:
             raise ValueError(
                 f"drop_constraint: no constraint {name!r} at {table_dir}"
             )
         del cons[name]
-        extras = {
-            k: v for k, v in man.items()
-            if k not in ("version", "batch", "files", "constraints")
-        }
-        if cons:
-            extras["constraints"] = cons
-        v = _publish(
-            table_dir, list(man["files"]),
-            f"constraint-{uuid.uuid4().hex[:8]}",
-            extra=extras,
-            expected_version=man["version"],
+        return _Commit(
+            keep=man["files"], extra={"constraints": cons or None},
+            result=lambda v: {"version": v, "constraints": cons},
         )
-        if v != -1:
-            return {"version": v, "constraints": cons}
-    raise RuntimeError(
-        f"drop_constraint: lost the publish race 10 times at {table_dir}"
-    )
+
+    return _commit(table_dir, "drop_constraint",
+                   f"constraint-{uuid.uuid4().hex[:8]}", plan)
 
 
 def clone_table(src_dir: str, dst_dir: str,
@@ -1128,16 +1047,15 @@ def clone_table(src_dir: str, dst_dir: str,
             f"clone_table: {dst_dir} is already a snapshot table — "
             f"clone only into a fresh directory"
         )
-    extras = {
-        k: v for k, v in man.items()
-        if k not in ("version", "batch", "files")
-    }
-    extras["cloned_from"] = {
+    cloned_from = {
         "table": os.path.abspath(src_dir), "version": man["version"],
     }
-    v = _publish(
-        dst_dir, list(man["files"]),
-        f"clone-{uuid.uuid4().hex[:8]}", extra=extras,
+    v = _commit(
+        dst_dir, "clone_table", f"clone-{uuid.uuid4().hex[:8]}",
+        lambda _man: _Commit(keep=man["files"],
+                             extra={"cloned_from": cloned_from},
+                             result=lambda v: v),
+        base=man,
     )
     # consumer registration in the SOURCE (metadata-only sidecar, no
     # source version churn): lets the source's vacuum() protect data
@@ -1453,8 +1371,7 @@ def delete_keys(spark: SparkSession, table_dir: str,
     else:
         want = sorted(set(keys))
 
-    for _attempt in range(10):
-        man = latest_manifest(table_dir)
+    def plan(man):
         if man is None:
             return {
                 "files_total": 0, "files_rewritten": 0, "rows_deleted": 0,
@@ -1499,31 +1416,20 @@ def delete_keys(spark: SparkSession, table_dir: str,
             kept = df.where(~F.col(key).isin(want))
         rows_deleted = before - kept.count()
         new_files = _write_data(kept, table_dir)
-        # untouched files keep EVERY tracked key's stats by reference;
         # rewritten files get fresh stats for the delete key (other
         # keys' entries for them fall back to footer pruning)
-        new_stats = _file_stats(new_files, key) if new_files else {}
-        keep_set = set(keep_files)
-        all_stats = {
-            k: {p: v for p, v in m.items() if p in keep_set}
-            for k, m in man.get("stats", {}).items()
-        }
-        all_stats[key] = {**all_stats.get(key, {}), **(new_stats or {})}
-        # CAS on the read version: the keep-list derives from it, so a
-        # racing commit means this rewrite would drop its files
-        v = _publish(table_dir, keep_files + new_files,
-                     f"delete-{uuid.uuid4().hex[:8]}",
-                     extra={"stats": all_stats, **_carry_extras(man)},
-                     expected_version=man["version"])
-        if v != -1:
-            return {
+        return _Commit(
+            new=new_files, keep=keep_files,
+            stats={key: _file_stats(new_files, key) or {}},
+            result=lambda v: {
                 "files_total": len(man["files"]),
                 "files_rewritten": len(hit_files),
                 "rows_deleted": rows_deleted,
-            }
-    raise RuntimeError(
-        f"delete_keys: lost the publish race {10} times at {table_dir}"
-    )
+            },
+        )
+
+    return _commit(table_dir, "delete_keys",
+                   f"delete-{uuid.uuid4().hex[:8]}", plan)
 
 
 def read_point(spark: SparkSession, table_dir: str, key: str,
@@ -1594,8 +1500,12 @@ def compact(spark: SparkSession, table_dir: str,
     target; here the knob is the file count, which is what the local
     tests can assert.
     """
-    for _attempt in range(10):
-        man = latest_manifest(table_dir)
+    cluster_cols = (
+        [cluster_by] if isinstance(cluster_by, str)
+        else list(cluster_by or [])
+    )
+
+    def plan(man):
         if man is None or not man["files"]:
             return {"files_before": 0, "files_after": 0, "version": None}
         if only_smaller_than is None:
@@ -1613,10 +1523,6 @@ def compact(spark: SparkSession, table_dir: str,
                     "files_after": len(man["files"]),
                     "version": man["version"],
                 }
-        cluster_cols = (
-            [cluster_by] if isinstance(cluster_by, str)
-            else list(cluster_by or [])
-        )
         df = _read_files(spark, rewrite)
         if not cluster_cols:
             out = df.repartition(target_files)
@@ -1634,38 +1540,23 @@ def compact(spark: SparkSession, table_dir: str,
                 .drop("_z")
             )
         new_files = _write_data(out, table_dir)
-        all_files = keep + new_files
-        # data-skipping stats: carry the kept files' entries verbatim
-        # (their footers were already paid for), recompute for the
-        # rewritten files, for every key the prior manifest tracked
-        # plus the cluster key(s) (kept files simply lack entries for
-        # a NEW key — readers treat missing as a hit, defensively)
+        # fresh stats for the rewritten files, for every key the prior
+        # manifest tracked plus the cluster key(s) (kept files simply
+        # lack entries for a NEW key — readers treat missing as a hit,
+        # defensively)
         keys = set(man.get("stats", {})) | set(cluster_cols)
-        stats = {}
-        for k in keys:
-            fresh = _file_stats(new_files, k) or {}
-            carried = {
-                p: v for p, v in man.get("stats", {}).get(k, {}).items()
-                if p in keep
-            }
-            stats[k] = {**carried, **fresh}
-        # CAS on the read version: compaction rewrites EXACTLY the read
-        # file list — publishing over an interleaved append would erase
-        # the appended rows from the latest view
-        version = _publish(
-            table_dir, all_files, f"compact-{uuid.uuid4().hex[:8]}",
-            extra={"stats": stats, **_carry_extras(man)},
-            expected_version=man["version"],
-        )
-        if version != -1:
-            return {
+        return _Commit(
+            new=new_files, keep=keep,
+            stats={k: _file_stats(new_files, k) or {} for k in keys},
+            result=lambda v: {
                 "files_before": len(man["files"]),
-                "files_after": len(all_files),
-                "version": version,
-            }
-    raise RuntimeError(
-        f"compact: lost the publish race {10} times at {table_dir}"
-    )
+                "files_after": len(keep) + len(new_files),
+                "version": v,
+            },
+        )
+
+    return _commit(table_dir, "compact",
+                   f"compact-{uuid.uuid4().hex[:8]}", plan)
 
 
 def _clone_referenced_dirs(table_dir: str) -> dict[str, set]:

@@ -18,19 +18,17 @@ from pyspark.sql import functions as F
 from ..functions import money as M
 from ..functions.hashing import record_key
 from ..pipeline.trips import TRIPS_SCHEMA
+from ..sources.snapshot import read_latest
 
 
-def read_trips_stream(spark: SparkSession, path: str,
-                      max_files_per_trigger: int | None = None) -> DataFrame:
+def read_trips_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-source stream of trips CSV drops (the S3-landing pattern the
     reference sketches with Lambda+EMR)."""
-    reader = (
+    return (
         spark.readStream.option("header", "true")
         .schema(TRIPS_SCHEMA)
+        .csv(path)
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.csv(path)
 
 
 def with_event_time(trips: DataFrame) -> DataFrame:
@@ -68,43 +66,6 @@ def windowed_trip_counts(trips: DataFrame, window: str = "1 hour",
             "n_trips",
         )
     )
-
-
-def start_hist_upsert(dedup: DataFrame, hist_path: str, checkpoint: str,
-                      trigger_available_now: bool = False):
-    """foreachBatch idempotent upsert into the parquet hist store.
-
-    Each micro-batch anti-joins the existing hist keys (ON CONFLICT DO
-    NOTHING) then appends. Duplicate-safety caveat: parquet appends are
-    not transactional, so a batch that is retried AFTER its append
-    partially landed can re-append rows the anti-join did not yet see —
-    at-least-once per trip_key on retry, exactly-once in steady state.
-    The deployment-grade sink is sources/snapshot.py
-    (manifest-rename commit protocol, batch-id idempotence): use
-    snapshot.start_snapshot_upsert for exactly-once under replay. Only a genuinely-missing hist path
-    falls back to the full append; any other read failure (perms,
-    corrupt footer, transient IO) must fail the batch loudly rather
-    than silently duplicating it.
-    """
-
-    def upsert_batch(batch: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
-        spark = batch.sparkSession
-        try:
-            hist_keys = spark.read.parquet(hist_path).select("trip_key")
-        except AnalysisException:  # first batch: hist does not exist yet
-            new_rows = batch
-        else:
-            new_rows = batch.join(hist_keys, "trip_key", "left_anti")
-        new_rows.write.mode("append").parquet(hist_path)
-
-    writer = dedup.writeStream.foreachBatch(upsert_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 _STREAM_QUERY_SEQ = [0]
@@ -387,7 +348,7 @@ def stream_hll_upsert(events: DataFrame, state_path: str, checkpoint: str):
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         delta = hll_registers(batch_df, "user_id", ["event_type"])
-        state = _state_or_adopt(spark, state_path)
+        state = read_latest(spark, state_path)
         merged = (
             delta if state is None else state.unionByName(delta)
         ).groupBy("event_type", "reg").agg(F.max("mx").alias("mx"))
@@ -401,26 +362,11 @@ def stream_hll_upsert(events: DataFrame, state_path: str, checkpoint: str):
     )
 
 
-def _state_or_adopt(spark: SparkSession, state_path: str):
-    """Resolve a sketch maintainer's state, adopting a pre-manifest
-    deployment's bare overwrite-parquet state as version 1 when no
-    manifest exists yet — silently ignoring legacy parquet would
-    restart accumulation from empty, and the stream checkpoint
-    prevents ever re-deriving it (round-6 ADVICE finding)."""
-    from ..sources.snapshot import adopt_legacy_parquet, read_latest
-
-    st = read_latest(spark, state_path)
-    if st is None and adopt_legacy_parquet(state_path) is not None:
-        st = read_latest(spark, state_path)
-    return st
-
-
 def sketch_state(spark: SparkSession, state_path: str) -> DataFrame:
     """The latest published state of a manifest-protocol sketch
     maintainer (stream_hll_upsert / stream_decayed_upsert /
-    stream_m4_upsert); adopts legacy bare-parquet state (see
-    _state_or_adopt) and raises if nothing has ever been written."""
-    st = _state_or_adopt(spark, state_path)
+    stream_m4_upsert); raises if nothing has ever been written."""
+    st = read_latest(spark, state_path)
     if st is None:
         raise ValueError(f"no published sketch state at {state_path}")
     return st
@@ -440,9 +386,9 @@ def stream_decayed_upsert(events: DataFrame, state_path: str,
     stream-maintained state equals the batch answer over the union of
     all micro-batches. Unlike the HLL register merge (max is
     absorbing), an add-merge is NOT idempotent — batch replay after a
-    partial failure double-counts, so deployment needs the
-    transactional-sink / idempotent-write caveat documented on
-    start_hist_upsert. The state itself lives in a snapshot table
+    partial failure double-counts, so deployment needs an idempotent
+    (batch-token) commit such as snapshot.upsert_batch's to be
+    replay-safe. The state itself lives in a snapshot table
     (atomic manifest publishes — a crash mid-rewrite cannot lose the
     accumulated state the way overwrite-mode parquet can); read it
     with sketch_state / snapshot.read_latest.
@@ -472,7 +418,7 @@ def stream_decayed_upsert(events: DataFrame, state_path: str,
                 F.sum(wgt * F.col("value")).alias("dvalue"),
             )
         )
-        state = _state_or_adopt(spark, state_path)
+        state = read_latest(spark, state_path)
         if state is None:
             merged = delta
         else:
@@ -620,13 +566,11 @@ def lsh_index_merge_mutable(batch_df: DataFrame, batch_id: int,
     replay path is directly testable). Returns the outcome:
     'skipped_duplicate' | 'published' | 'empty'."""
     from ..operators.dedup import minhash_bands_frame
-    from ..sources.snapshot import _manifests, delete_keys, upsert_batch
+    from ..sources.snapshot import _has_token, delete_keys, upsert_batch
 
     if batch_df.isEmpty():
         return "empty"
-    token = f"batch{batch_id}"
-    if any(tok == token
-           for _, tok, _ in _manifests(table_dir, with_tokens=True)):
+    if _has_token(table_dir, f"batch{batch_id}"):
         return "skipped_duplicate"  # fully committed on a prior attempt
     spark = batch_df.sparkSession
     # DataFrame-native delete: the batch's key set never materializes
@@ -649,7 +593,6 @@ def lsh_index_candidates(spark: SparkSession, table_dir: str,
     (band_id, band_hash) — one shuffle, never all-pairs. Self-matches
     drop; (doc_a < doc_b) normalizes pair order like the batch path."""
     from ..operators.dedup import minhash_bands_frame
-    from ..sources.snapshot import read_latest
 
     idx = read_latest(spark, table_dir)
     if idx is None:
@@ -830,7 +773,7 @@ def stream_m4_upsert(events: DataFrame, state_path: str, checkpoint: str,
             )
             upsert_batch(cnt, batch_id, count_path, key="delta_key")
         delta = m4_state_frame(batch_df)
-        state = _state_or_adopt(spark, state_path)
+        state = read_latest(spark, state_path)
         merged = (
             delta if state is None else state.unionByName(delta)
         ).groupBy("event_type", "bucket").agg(
@@ -856,7 +799,7 @@ def m4_from_state(spark: SparkSession, state_path: str,
     rides along when the maintainer was given a ``count_path`` —
     sum-merged from the token-idempotent per-batch deltas, identical
     to the batch count by construction."""
-    st = _state_or_adopt(spark, state_path)
+    st = read_latest(spark, state_path)
     if st is None:
         raise ValueError(f"no published M4 state at {state_path}")
     cols = [
@@ -866,7 +809,6 @@ def m4_from_state(spark: SparkSession, state_path: str,
     ]
     if count_path is None:
         return st.select(*cols)
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, count_path)
     if deltas is None:
@@ -926,7 +868,6 @@ def hdr_from_index(spark: SparkSession, table_dir: str) -> DataFrame:
     per-batch bucket counts, then the shared read kernel — identical
     arithmetic to the batch events_hdr_quantiles by construction."""
     from ..operators.relational11 import hdr_quantiles_from_counts
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -984,7 +925,6 @@ def cms_from_state(spark: SparkSession, table_dir: str,
     (textops.cms_point_estimates) — identical arithmetic to the batch
     events_count_min_sketch by construction."""
     from ..operators.textops import cms_point_estimates
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -1053,7 +993,6 @@ def welch_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     bit-identical to batch events_welch_ttest over the same rows by
     construction."""
     from ..operators.relational12 import welch_stats
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -1124,7 +1063,6 @@ def classifier_yield_from_state(spark: SparkSession,
     bit-identical to batch docs_classifier_yield over the same corpus
     at the same weights, without touching a single document."""
     from ..operators.relational14 import classifier_yield_from_counts
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -1186,7 +1124,6 @@ def monthly_rev_from_state(spark: SparkSession,
     """The calendar-bounded monthly revenue frame recovered from the
     maintained deltas — exact integer cents, identical to the batch
     _monthly_rev aggregate over the same orders."""
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -1274,7 +1211,7 @@ def stream_kmv_upsert(events: DataFrame, state_path: str,
                 ).alias("mins")
             )
         )
-        state = _state_or_adopt(spark, state_path)
+        state = read_latest(spark, state_path)
         merged = (
             delta if state is None else state.unionByName(delta)
         ).groupBy("event_type").agg(
@@ -1299,7 +1236,7 @@ def kmv_from_state(spark: SparkSession, state_path: str,
     """Distinct-count estimates served from the maintained KMV state:
     (k-1)/h_k, or the exact member count while the sketch still holds
     every distinct hash (m < k) — the batch twin's estimator."""
-    st = _state_or_adopt(spark, state_path)
+    st = read_latest(spark, state_path)
     if st is None:
         raise ValueError(f"no published KMV state at {state_path}")
     est = F.when(
@@ -1336,7 +1273,7 @@ def stream_bloom_upsert(events: DataFrame, state_path: str,
             return
         spark = batch_df.sparkSession
         delta = bloom_words(batch_df, key_col, m_bits, k_hashes)
-        state = _state_or_adopt(spark, state_path)
+        state = read_latest(spark, state_path)
         merged = (
             delta if state is None else state.unionByName(delta)
         ).groupBy("w").agg(F.expr("bit_or(b)").alias("b"))
@@ -1357,7 +1294,7 @@ def bloom_filter_from_state(spark: SparkSession, state_path: str,
     STREAM-MAINTAINED filter without touching the build corpus."""
     from ..operators.skew import bloom_bits_dense
 
-    st = _state_or_adopt(spark, state_path)
+    st = read_latest(spark, state_path)
     if st is None:
         raise ValueError(f"no published Bloom state at {state_path}")
     return bloom_bits_dense(st, m_bits)
@@ -1415,7 +1352,6 @@ def cbloom_filter_from_state(spark: SparkSession, table_dir: str,
     from ..operators.skew import (
         bloom_bits_dense, bloom_words_from_counts,
     )
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -1465,7 +1401,7 @@ def stream_topk_upsert(events: DataFrame, state_path: str,
                 1, k,
             ).alias("_tk")
         )
-        state = _state_or_adopt(spark, state_path)
+        state = read_latest(spark, state_path)
         merged = (
             delta if state is None else state.unionByName(delta)
         ).groupBy(*group_cols).agg(
@@ -1492,7 +1428,7 @@ def topk_from_state(spark: SparkSession, state_path: str,
     the grouped_topk output shape (group cols + payload cols +
     1-based rank), bit-identical to the batch kernel over the same
     rows by the absorbing-merge argument on stream_topk_upsert."""
-    st = _state_or_adopt(spark, state_path)
+    st = read_latest(spark, state_path)
     if st is None:
         raise ValueError(f"no published top-k state at {state_path}")
     group_cols = [c for c in st.columns if c != "_tk"]
@@ -1519,7 +1455,7 @@ def kmv_overlap_from_state(spark: SparkSession, state_path: str,
     BEFORE truncation)."""
     from ..operators.relational14 import kmv_pair_overlap
 
-    st = _state_or_adopt(spark, state_path)
+    st = read_latest(spark, state_path)
     if st is None:
         raise ValueError(f"no published KMV state at {state_path}")
     return kmv_pair_overlap(st, k=k)
@@ -1619,7 +1555,6 @@ def kanon_from_state(spark: SparkSession, table_dir: str,
     bit-identical to batch docs_k_anonymity over the same corpus
     without touching a single document."""
     from ..operators.relational15 import KANON_RISK_K, kanon_dist
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -1675,7 +1610,6 @@ def ks_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     ks_from_counts kernel — bit-identical to batch
     docs_ks_source_drift over the same corpus, corpus-free."""
     from ..operators.relational15 import ks_from_counts
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -1694,7 +1628,6 @@ def ad_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     ad_from_counts kernel — bit-identical to batch
     docs_ad_source_drift over the same corpus, corpus-free."""
     from ..operators.relational15 import ad_from_counts
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -1748,7 +1681,6 @@ def ldiv_from_state(spark: SparkSession, table_dir: str,
     shared ldiv_dist kernel — bit-identical to batch
     docs_l_diversity over the same corpus, corpus-free."""
     from ..operators.relational15 import LDIV_RISK_L, ldiv_dist
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -1771,7 +1703,6 @@ def mk_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     kernel — bit-identical to batch events_trend_mannkendall over
     the same events, corpus-free."""
     from ..operators.relational16 import mannkendall_from_daily
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -1789,7 +1720,6 @@ def kw_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     to batch events_kruskalwallis over the same corpus,
     corpus-free."""
     from ..operators.relational16 import kw_from_counts
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -1809,7 +1739,6 @@ def cramersv_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     — bit-identical to batch docs_cramers_v over the same corpus,
     corpus-free."""
     from ..operators.relational16 import cramers_from_classes
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -1830,7 +1759,6 @@ def benford_mad_from_state(spark: SparkSession,
     kernel — bit-identical to batch events_benford_mad over the same
     corpus, corpus-free."""
     from ..operators.relational17 import benford_mad_from_counts
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -1850,7 +1778,6 @@ def js_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     shared js_from_counts kernel — bit-identical to batch
     docs_js_divergence over the same corpus, corpus-free."""
     from ..operators.relational17 import js_from_counts
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -1870,7 +1797,6 @@ def theilsu_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     bit-identical to batch docs_theils_u over the same corpus,
     corpus-free."""
     from ..operators.relational17 import theilsu_from_classes
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -1890,7 +1816,6 @@ def spearman_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     spearman_acf_from_daily kernel — bit-identical to batch
     events_spearman_acf over the same events, corpus-free."""
     from ..operators.relational17 import spearman_acf_from_daily
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -1909,7 +1834,6 @@ def theilsen_from_state(spark: SparkSession,
     bit-identical to batch events_trend_theilsen over the same
     events, corpus-free."""
     from ..operators.relational15 import theilsen_from_daily
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -1927,7 +1851,6 @@ def acf_from_state(spark: SparkSession, table_dir: str,
     — bit-identical to batch events_acf over the same corpus,
     corpus-free."""
     from ..operators.relational15 import ACF_MAX_LAG, acf_from_daily
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -1974,7 +1897,6 @@ def benford_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     benford_from_counts kernel — bit-identical to batch
     events_benford over the same corpus, corpus-free."""
     from ..operators.relational15 import benford_from_counts
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -2008,7 +1930,7 @@ def stream_lastship_upsert(lineitems: DataFrame, state_path: str,
             return
         spark = batch_df.sparkSession
         delta = lastship_counts(batch_df)
-        state = _state_or_adopt(spark, state_path)
+        state = read_latest(spark, state_path)
         merged = (
             delta if state is None else state.unionByName(delta)
         ).groupBy("l_orderkey").agg(
@@ -2032,7 +1954,7 @@ def km_from_state(spark: SparkSession, state_path: str,
     (shared km_table kernel), without touching a single line item."""
     from ..operators.relational15 import km_table
 
-    st = _state_or_adopt(spark, state_path)
+    st = read_latest(spark, state_path)
     if st is None:
         raise ValueError(f"no published last-ship state at {state_path}")
     return km_table(spark, orders, st)
@@ -2050,7 +1972,7 @@ def logrank_from_state(spark: SparkSession, state_path: str,
     single line item."""
     from ..operators.relational16 import logrank_pairs, surv_removals
 
-    st = _state_or_adopt(spark, state_path)
+    st = read_latest(spark, state_path)
     if st is None:
         raise ValueError(f"no published last-ship state at {state_path}")
     return logrank_pairs(surv_removals(orders, st, "o_orderpriority"))
@@ -2068,7 +1990,7 @@ def na_from_state(spark: SparkSession, state_path: str,
     from ..operators.relational16 import surv_removals
     from ..operators.relational17 import na_table
 
-    st = _state_or_adopt(spark, state_path)
+    st = read_latest(spark, state_path)
     if st is None:
         raise ValueError(f"no published last-ship state at {state_path}")
     per = (
@@ -2119,7 +2041,6 @@ def mw_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     shared mw_from_counts kernel — bit-identical to batch
     events_mannwhitney over the same corpus, corpus-free."""
     from ..operators.relational15 import mw_from_counts
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -2138,7 +2059,6 @@ def cliffs_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     cliffs_from_counts kernel — bit-identical to batch
     events_cliffs_delta over the same corpus, corpus-free."""
     from ..operators.relational18 import cliffs_from_counts
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -2158,7 +2078,6 @@ def gk_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     shared gk_lambda_from_classes kernel — bit-identical to batch
     docs_gk_lambda over the same corpus, corpus-free."""
     from ..operators.relational18 import gk_lambda_from_classes
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -2179,7 +2098,6 @@ def runs_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     bit-identical to batch events_runs_test over the same events,
     corpus-free."""
     from ..operators.relational18 import runs_from_daily
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -2198,7 +2116,6 @@ def cvm_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     bit-identical to batch docs_cvm_source_drift over the same
     corpus, corpus-free."""
     from ..operators.relational18 import cvm_from_counts
-    from ..sources.snapshot import read_latest
 
     deltas = read_latest(spark, table_dir)
     if deltas is None:
@@ -2222,7 +2139,7 @@ def rmst_from_state(spark: SparkSession, state_path: str,
     from ..operators.relational15 import km_table
     from ..operators.relational18 import rmst_from_curve
 
-    st = _state_or_adopt(spark, state_path)
+    st = read_latest(spark, state_path)
     if st is None:
         raise ValueError(f"no published last-ship state at {state_path}")
     return rmst_from_curve(km_table(spark, orders, st))

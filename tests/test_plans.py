@@ -323,10 +323,11 @@ def test_pq_ann_joins_codes_before_scoring(spark):
     from jobsity_data_pipeline_spark.operators import relational8 as R8
 
     plan = _plan(R8.emb_pq_ann(spark, SF_SMOKE))
-    # the query distance table must broadcast; per-query top-k is the
-    # mergeable grouped_topk two-stage aggregate (round 7) — no
-    # WindowExec funnels the candidate frame through one task per qid
-    assert "BroadcastHashJoin" in plan
+    # codes are scored against the query distance table inside a
+    # MapInPandas kernel (no join); per-query top-k is the mergeable
+    # grouped_topk two-stage aggregate (round 7) — no WindowExec
+    # funnels the candidate frame through one task per qid
+    assert "MapInPandas" in plan
     assert "Window" not in plan
     assert plan.count("ObjectHashAggregate") >= 2  # salt stage + merge
     assert "CartesianProduct" not in plan

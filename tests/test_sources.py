@@ -3,6 +3,7 @@ bucketed-table path for shuffle-free upserts."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from jobsity_data_pipeline_spark.pipeline import trips as TP
@@ -589,32 +590,86 @@ def test_upsert_recomputes_after_interleaved_commit(spark, tmp_path,
     assert rows == {1: "a", 2: "racer", 3: "racer", 4: "new"}
 
 
-def test_snapshot_reads_legacy_manifest_filenames(spark, tmp_path):
-    """Tables published by the pre-CAS protocol carried the batch token
-    in the manifest FILENAME; the reader must still resolve them (and a
-    new writer must continue their version numbering) instead of
-    silently reporting the table as nonexistent."""
-    import json
-    import os
-
+@pytest.mark.parametrize("writer", [
+    "delete_keys", "compact", "merge_into", "analyze", "set_constraint",
+])
+def test_cas_writer_recomputes_after_interleaved_commit(
+        spark, tmp_path, monkeypatch, writer):
+    """The same race for every other CAS writer: a commit that lands
+    between the writer's manifest read and its first publish must
+    fail the CAS, and the retry recomputes from the racer's version —
+    the racer's files stay referenced (or, for a full rewrite, its
+    rows survive) and the writer's result reflects the racer's
+    version, not the stale one."""
     from jobsity_data_pipeline_spark.sources import snapshot as SN
 
     t = str(tmp_path / "tbl")
-    df1 = spark.createDataFrame([(1, "a")], "k long, v string")
-    files = SN._write_data(df1, t)
-    with open(os.path.join(t, "manifest-000001-batch7.json"), "w") as f:
-        json.dump({"version": 1, "batch": "batch7", "files": files}, f)
+    schema = "trip_key long, v string"
+    base = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], schema)
+    assert SN.upsert_batch(base, 0, t) == "published"
+    man0 = SN.latest_manifest(t)
+    prior = man0["files"]
+    # two racer files, so a writer that rewrites the one holding key 10
+    # must still keep the other by reference
+    r10, r11 = (
+        SN._write_data(
+            spark.createDataFrame([(k, "racer")], schema).coalesce(1), t)
+        for k in (10, 11)
+    )
+    racer_stats = {"trip_key": {**man0["stats"]["trip_key"],
+                                **SN._file_stats(r10 + r11, "trip_key")}}
 
-    got = {tuple(r) for r in SN.read_latest(spark, t).collect()}
-    assert got == {(1, "a")}
-    # legacy token is visible to the idempotence scan (from filename)
-    assert [(v, tok) for v, tok, _ in SN._manifests(t, with_tokens=True)] \
-        == [(1, "batch7")]
-    # a new-style publish continues the legacy numbering
-    df2 = spark.createDataFrame([(2, "b")], "k long, v string")
-    assert SN.publish_snapshot(df2, t, "next") == 2
-    got2 = {tuple(r) for r in SN.read_latest(spark, t).collect()}
-    assert got2 == {(2, "b")}
+    real_publish = SN._publish
+    raced = {}
+
+    def race_then_publish(table_dir, files, token, extra=None,
+                          expected_version=None):
+        if not raced:
+            raced["version"] = real_publish(
+                table_dir, prior + r10 + r11, "racerbatch",
+                extra={"stats": racer_stats},
+            )
+        return real_publish(table_dir, files, token, extra,
+                            expected_version)
+
+    monkeypatch.setattr(SN, "_publish", race_then_publish)
+    want = {1: "a", 2: "b", 3: "c", 10: "racer", 11: "racer"}
+    n_racer_files = len(prior) + 2
+    if writer == "delete_keys":
+        res = SN.delete_keys(spark, t, [1])
+        assert res["files_total"] == n_racer_files
+        del want[1]
+        kept = r10 + r11
+    elif writer == "compact":
+        res = SN.compact(spark, t)
+        assert res["files_before"] == n_racer_files
+        kept = []  # every file is rewritten; the rows must survive
+    elif writer == "merge_into":
+        src = spark.createDataFrame([(10, "merged")], schema)
+        res = SN.merge_into(src, 1, t)
+        # key 10 exists only in the racer's version: matched, so an
+        # update — the stale version would have inserted it
+        assert res == {"status": "published", "deleted": 0,
+                       "updated": 1, "inserted": 0}
+        want[10] = "merged"
+        kept = r11
+    elif writer == "analyze":
+        res = SN.analyze(t, ["v"])
+        assert res["added"] == ["v"]
+        assert set(r10 + r11) <= set(SN.latest_manifest(t)["stats"]["v"])
+        kept = r10 + r11
+    else:
+        res = SN.set_constraint(spark, t, "key_pos", "trip_key > 0")
+        assert res["constraints"] == {"key_pos": "trip_key > 0"}
+        kept = r10 + r11
+
+    assert raced, "the racer never fired"
+    man = SN.latest_manifest(t)
+    assert man["version"] == raced["version"] + 1
+    assert set(kept) <= set(man["files"])
+    rows = {r.trip_key: r.v for r in SN.read_latest(spark, t).collect()}
+    assert rows == want
+    assert SN.read_latest(spark, t).count() == len(want)
 
 
 def test_manifest_scan_survives_concurrent_vacuum(spark, tmp_path,
@@ -1586,36 +1641,6 @@ def test_change_feed_no_phantom_cdc_across_unmarked_merge(spark, tmp_path):
         "phantom delete+insert for an untouched key across an "
         "unmarked merge boundary"
     )
-
-
-def test_adopt_legacy_parquet_rejects_torn_writes(spark, tmp_path):
-    """Round-8 ADVICE: the legacy overwrite protocol can crash
-    mid-write and leave a torn part-file set with no _SUCCESS marker —
-    adoption must verify footers and refuse, not publish corrupt rows
-    as durable version-1 state. An intact set without the marker still
-    adopts (footers verify), and _SUCCESS short-circuits the check."""
-    import pytest
-
-    from jobsity_data_pipeline_spark.sources import snapshot as SN
-
-    d = tmp_path / "legacy"
-    spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string").coalesce(
-        1
-    ).write.mode("overwrite").parquet(str(d))
-    (d / "_SUCCESS").unlink()
-    part = next(p for p in d.iterdir() if p.name.endswith(".parquet"))
-    data = part.read_bytes()
-    part.write_bytes(data[: len(data) // 2])  # footer is written last
-    with pytest.raises(ValueError, match="torn legacy write"):
-        SN.adopt_legacy_parquet(str(d))
-    assert SN.latest_manifest(str(d)) is None
-
-    d2 = tmp_path / "legacy2"
-    spark.createDataFrame([(1, "a")], "k long, v string").coalesce(
-        1
-    ).write.mode("overwrite").parquet(str(d2))
-    (d2 / "_SUCCESS").unlink()
-    assert SN.adopt_legacy_parquet(str(d2)) == 1
 
 
 def test_merge_into_bootstrap_insert_predicate_noop(spark, tmp_path):

@@ -37,26 +37,32 @@ def src_dir(tmp_path):
 
 
 def _run_upsert(spark, src_dir, tmp_path):
+    from jobsity_data_pipeline_spark.sources.snapshot import (
+        start_snapshot_upsert,
+    )
+
     hist = str(tmp_path / "hist")
     ckpt = str(tmp_path / "ckpt")
     trips = ST.read_trips_stream(spark, str(src_dir))
     deduped = ST.dedup_stream(trips)
-    q = ST.start_hist_upsert(deduped, hist, ckpt, trigger_available_now=True)
+    q = start_snapshot_upsert(deduped, hist, ckpt)
     q.awaitTermination(120)
     return hist
 
 
 def test_stream_dedup_and_upsert(spark, src_dir, tmp_path):
+    from jobsity_data_pipeline_spark.sources.snapshot import read_latest
+
     _write_csv(src_dir, "b1.csv", BATCH1)
     hist = _run_upsert(spark, src_dir, tmp_path)
-    got = spark.read.parquet(hist)
+    got = read_latest(spark, hist)
     assert got.count() == 2  # in-batch duplicate dropped
     assert got.select("trip_key").distinct().count() == 2
 
     # second drop: replayed row skipped by hist anti-join, new row added
     _write_csv(src_dir, "b2.csv", BATCH2)
     hist = _run_upsert(spark, src_dir, tmp_path)
-    got = spark.read.parquet(hist)
+    got = read_latest(spark, hist)
     assert got.count() == 3
     assert got.select("trip_key").distinct().count() == 3
 
@@ -915,70 +921,6 @@ def test_bm25_index_persists_terms_and_rejects_mismatch(spark, tmp_path):
     ] == want
     with pytest.raises(ValueError, match="was built with"):
         bm25_from_index(spark, table, terms=BM25_TERMS)
-
-
-def test_legacy_bare_parquet_state_is_adopted(spark, tmp_path):
-    """Round-6 ADVICE: a pre-manifest deployment stored sketch state as
-    bare overwrite-mode parquet at state_path. The manifest-protocol
-    maintainers must adopt that state as version 1 instead of silently
-    restarting accumulation from empty (the stream checkpoint prevents
-    ever re-deriving it)."""
-    import datetime as dt
-
-    import pyspark.sql.functions as F
-
-    from jobsity_data_pipeline_spark.operators.relational7 import (
-        hll_registers,
-    )
-    from jobsity_data_pipeline_spark.streaming.stream import (
-        sketch_state, stream_hll_upsert,
-    )
-
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    base = dt.datetime(2024, 1, 1)
-    old_rows = [
-        (i, base, i % 13, "legacy", 1.0, "{}") for i in range(50)
-    ]
-    new_rows = [
-        (100 + i, base + dt.timedelta(hours=1), 200 + (i % 7), "click",
-         1.0, "{}")
-        for i in range(30)
-    ]
-    state = str(tmp_path / "state")
-    # the OLD protocol: registers written straight to state_path
-    hll_registers(
-        spark.createDataFrame(old_rows, schema), "user_id",
-        ["event_type"]
-    ).write.mode("overwrite").parquet(state)
-
-    # reader-side adoption: sketch_state sees the legacy rows
-    legacy = sketch_state(spark, state)
-    assert legacy.where(F.col("event_type") == "legacy").count() > 0
-
-    src = tmp_path / "src"
-    src.mkdir()
-    spark.createDataFrame(new_rows, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(src))
-    stream = spark.readStream.schema(schema).parquet(str(src))
-    q = stream_hll_upsert(stream, state, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-
-    got = {
-        (r.event_type, r.reg): r.mx
-        for r in sketch_state(spark, state).collect()
-    }
-    want = {
-        (r.event_type, r.reg): r.mx
-        for r in hll_registers(
-            spark.createDataFrame(old_rows + new_rows, schema),
-            "user_id", ["event_type"],
-        ).collect()
-    }
-    assert got == want
 
 
 def test_stream_kmv_upsert_equals_batch_and_merge_is_absorbing(
