@@ -146,14 +146,11 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if a.cmd == "ingest":
-        from .pipeline.trips import (
-            dedup_staging, read_trips_csv, with_trip_key,
-        )
+        from .pipeline.trips import read_trips_csv, with_trip_key
         from .sources.snapshot import read_latest, upsert_batch
 
         spark = get_spark(app_name="cli-ingest")
-        staging = dedup_staging(with_trip_key(
-            read_trips_csv(spark, a.csv)))
+        staging = with_trip_key(read_trips_csv(spark, a.csv))
         status = upsert_batch(staging, a.batch_id, a.table_dir)
         n = read_latest(spark, a.table_dir).count()
         print(f"{status}: table now has {n} rows")

@@ -6,8 +6,8 @@ Reference flow (populate_postgres.sql / create_objects.sql):
 
 Spark-first translation: the "staging table" is just the source scan,
 the unique-index upsert is a left-anti join on the hashed key (one
-shuffle on trip_key; with the hist table bucketed by trip_key at scale
-this is co-located), and the "materialized view" is a plan the caller
+shuffle on trip_key; sources/snapshot.upsert_batch is the committed
+form), and the "materialized view" is a plan the caller
 can write out or register — Catalyst handles the rest.
 """
 
@@ -56,39 +56,10 @@ def upsert(hist: DataFrame, staging: DataFrame) -> DataFrame:
     """ON CONFLICT (trip_key) DO NOTHING (populate_postgres.sql:16-31).
 
     Existing hist rows win; only unseen keys are appended. Left-anti
-    join shuffles both sides on trip_key once — at scale, write hist
-    bucketed by trip_key so the anti join is shuffle-free.
+    join shuffles both sides on trip_key once.
     """
     new_rows = dedup_staging(staging).join(hist.select("trip_key"), "trip_key", "left_anti")
     return hist.unionByName(new_rows)
-
-
-def upsert_bucketed(spark: SparkSession, staging: DataFrame,
-                    table: str = "trips_hist", buckets: int = 64) -> None:
-    """Co-located ON CONFLICT (trip_key) DO NOTHING against a BUCKETED
-    hist table (written by sources.writers.write_hist_bucketed).
-
-    The hist side arrives pre-hash-partitioned on trip_key straight off
-    disk — the anti-join plan has NO Exchange on the hist side — so
-    each batch costs one shuffle of the (small) staging batch, never a
-    reshuffle of the accumulated history. The append preserves the
-    bucket spec, so every subsequent upsert stays co-located. This is
-    the scale form of populate_postgres.sql:16-31 unique-index
-    semantics: hist grows to 100 TB, per-batch work stays O(batch).
-    """
-    hist = spark.table(table)
-    new_rows = (
-        dedup_staging(staging)
-        .join(hist.select("trip_key"), "trip_key", "left_anti")
-        .select(hist.columns)
-    )
-    (
-        new_rows.write.mode("append")
-        .bucketBy(buckets, "trip_key")
-        .sortBy("trip_key")
-        .format("parquet")
-        .saveAsTable(table)
-    )
 
 
 def week_of_month(ts: Column) -> Column:

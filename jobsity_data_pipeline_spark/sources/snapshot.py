@@ -731,6 +731,42 @@ def rehash_table(spark: SparkSession, table_dir: str,
                    f"rehash-v{_HASH_VERSION}-{uuid.uuid4().hex[:8]}", plan)
 
 
+def start_batch_stream(stream: DataFrame, checkpoint: str,
+                       apply: Callable[[DataFrame, int], Any]):
+    """The one streaming sink: run ``apply(batch, batch_id)`` on every
+    micro-batch of ``stream`` until the data available at start is
+    consumed. The engine's batch_id is stable across a checkpoint
+    restart, so an ``apply`` that commits under a token derived from
+    it (upsert_batch, merge_into, fold_batch) makes the stream
+    exactly-once."""
+    return (
+        stream.writeStream.foreachBatch(apply)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def fold_batch(spark: SparkSession, table_dir: str, token: str,
+               fold: Callable[[DataFrame | None], DataFrame]) -> str:
+    """Exactly-once state fold: publish ``fold(state)`` as the full
+    next version of ``table_dir``, where ``state`` is the version the
+    commit read (None before the first). A token already published
+    makes the call a no-op, so a replayed micro-batch is never folded
+    in twice — the guard a non-absorbing fold (a sum) needs. The
+    publish is CAS-guarded on the version read; a lost race re-folds
+    against the new state. Returns "published" | "skipped_duplicate"."""
+
+    def plan(man):
+        state = (_read_files(spark, man["files"])
+                 if man and man["files"] else None)
+        files = _write_data(fold(state), table_dir)
+        return _Commit(new=files, result=lambda v: "published")
+
+    return _commit(table_dir, "fold_batch", token, plan,
+                   skipped="skipped_duplicate")
+
+
 def start_snapshot_merge(source: DataFrame, table_dir: str,
                          checkpoint: str, key: str = "trip_key",
                          when_matched_delete: str | None = None,
@@ -754,12 +790,7 @@ def start_snapshot_merge(source: DataFrame, table_dir: str,
                    when_matched_update=when_matched_update,
                    when_not_matched_insert=when_not_matched_insert)
 
-    return (
-        source.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(source, checkpoint, _apply)
 
 
 def start_snapshot_upsert(dedup: DataFrame, table_dir: str,
@@ -770,12 +801,7 @@ def start_snapshot_upsert(dedup: DataFrame, table_dir: str,
     def _merge(batch: DataFrame, batch_id: int) -> None:
         upsert_batch(batch, batch_id, table_dir, key)
 
-    return (
-        dedup.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(dedup, checkpoint, _merge)
 
 
 def read_version(spark: SparkSession, table_dir: str,

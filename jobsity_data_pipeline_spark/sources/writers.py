@@ -1,47 +1,18 @@
-"""Batch sinks: partitioned/bucketed parquet hist tables, gated JDBC.
+"""Batch sinks: partitioned and clustered parquet layouts, gated JDBC.
 
 The reference persists to Postgres via COPY + upsert
 (populate_postgres.sql) and suggests parquet-on-S3 for cloud (README
-"cloud environment" sketch). The Spark-native hist store is a parquet
-table partitioned by a date column (partition pruning for time-range
-queries) and optionally bucketed by trip_key (shuffle-free upsert
-anti-joins at scale).
+"cloud environment" sketch). The Spark-native layouts here are a
+parquet table partitioned by a date column (partition pruning for
+time-range queries) and range/Z-order clustered files (footer-stat
+pruning); the committed, exactly-once hist table is
+sources/snapshot.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def write_hist_parquet(df: DataFrame, path: str,
-                       partition_by: tuple[str, ...] = (),
-                       mode: str = "overwrite") -> None:
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
-def write_hist_bucketed(df: DataFrame, table: str, key: str = "trip_key",
-                        buckets: int = 64, mode: str = "overwrite",
-                        path: str | None = None) -> None:
-    """Bucketed table: co-locates rows by key so the upsert anti-join
-    (pipeline.trips.upsert_bucketed) needs no shuffle on the hist side.
-    Pass ``path`` for an external-location table (else the warehouse
-    dir). Size ``buckets`` to the join parallelism
-    (spark.sql.shuffle.partitions): if they differ, EnsureRequirements
-    re-shuffles the bucketed side to match the other side's
-    partition count and the co-location is wasted."""
-    w = (
-        df.write.mode(mode)
-        .bucketBy(buckets, key)
-        .sortBy(key)
-        .format("parquet")
-    )
-    if path is not None:
-        w = w.option("path", path)
-    w.saveAsTable(table)
 
 
 def write_jdbc(df: DataFrame, url: str, table: str,

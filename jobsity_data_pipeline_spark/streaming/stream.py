@@ -18,7 +18,9 @@ from pyspark.sql import functions as F
 from ..functions import money as M
 from ..functions.hashing import record_key
 from ..pipeline.trips import TRIPS_SCHEMA
-from ..sources.snapshot import read_latest
+from ..sources.snapshot import (
+    fold_batch, read_latest, start_batch_stream, upsert_batch,
+)
 
 
 def read_trips_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -326,9 +328,8 @@ def stream_hll_upsert(events: DataFrame, state_path: str, checkpoint: str):
     """Maintain a HyperLogLog distinct-user sketch per event_type over
     a stream: each micro-batch computes its own register maxima and
     max-merges them into the parquet state table — O(groups × 256)
-    state regardless of stream volume, and the merge is idempotent
-    under batch replay (max is absorbing), so retries can't inflate
-    the estimate the way a count-merge would.
+    state regardless of stream volume. The fold commits under its
+    batch token (snapshot.fold_batch), so a replayed batch is skipped.
 
     The batch twin (operators/relational7.py:events_hll_distinct) reads
     the same register layout; tests prove stream-maintained state
@@ -338,28 +339,21 @@ def stream_hll_upsert(events: DataFrame, state_path: str, checkpoint: str):
     overwrite-mode parquet dir: overwrite deletes the target before
     writing, so a crash mid-rewrite would lose ALL accumulated
     registers while checkpoint replay only re-runs the last batch.
-    Each merged state publishes as a new atomic manifest version;
-    replay against post-merge state is harmless (max is absorbing).
+    Each merged state publishes as a new atomic manifest version.
     Read it with sketch_state (below) / snapshot.read_latest.
     """
     from ..operators.relational7 import hll_registers
-    from ..sources.snapshot import publish_snapshot
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         delta = hll_registers(batch_df, "user_id", ["event_type"])
-        state = read_latest(spark, state_path)
-        merged = (
-            delta if state is None else state.unionByName(delta)
-        ).groupBy("event_type", "reg").agg(F.max("mx").alias("mx"))
-        publish_snapshot(merged, state_path, f"hllbatch{batch_id}")
+        fold_batch(
+            batch_df.sparkSession, state_path, f"hllbatch{batch_id}",
+            lambda state: (
+                delta if state is None else state.unionByName(delta)
+            ).groupBy("event_type", "reg").agg(F.max("mx").alias("mx")),
+        )
 
-    return (
-        events.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(events, checkpoint, _merge)
 
 
 def sketch_state(spark: SparkSession, state_path: str) -> DataFrame:
@@ -384,22 +378,17 @@ def stream_decayed_upsert(events: DataFrame, state_path: str,
     The batch twin (operators/relational8.events_decayed_value)
     computes the same definition in one pass; tests prove the
     stream-maintained state equals the batch answer over the union of
-    all micro-batches. Unlike the HLL register merge (max is
-    absorbing), an add-merge is NOT idempotent — batch replay after a
-    partial failure double-counts, so deployment needs an idempotent
-    (batch-token) commit such as snapshot.upsert_batch's to be
-    replay-safe. The state itself lives in a snapshot table
+    all micro-batches. The fold commits under its batch token
+    (snapshot.fold_batch), so a replayed batch is never added twice.
+    The state itself lives in a snapshot table
     (atomic manifest publishes — a crash mid-rewrite cannot lose the
     accumulated state the way overwrite-mode parquet can); read it
     with sketch_state / snapshot.read_latest.
     """
-    from ..sources.snapshot import publish_snapshot
-
     ln2 = 0.6931471805599453
     hl_us = float(half_life_h) * 3_600_000_000.0
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         if batch_df.isEmpty():
             return
         ref = batch_df.agg(F.max(F.unix_micros("ts")).alias("ref_us"))
@@ -418,10 +407,10 @@ def stream_decayed_upsert(events: DataFrame, state_path: str,
                 F.sum(wgt * F.col("value")).alias("dvalue"),
             )
         )
-        state = read_latest(spark, state_path)
-        if state is None:
-            merged = delta
-        else:
+
+        def fold(state):
+            if state is None:
+                return delta
             u = state.unionByName(delta)
             # ONE corpus-wide reference instant (not per-type): a batch
             # missing some event_type must still advance that type's
@@ -433,7 +422,7 @@ def stream_decayed_upsert(events: DataFrame, state_path: str,
                 * (F.col("new_ref") - F.col("ref_us"))
                 / F.lit(hl_us)
             )
-            merged = (
+            return (
                 u.crossJoin(F.broadcast(gref))
                 .groupBy("event_type")
                 .agg(
@@ -443,14 +432,11 @@ def stream_decayed_upsert(events: DataFrame, state_path: str,
                     F.sum(F.col("dvalue") * scale).alias("dvalue"),
                 )
             )
-        publish_snapshot(merged, state_path, f"decayedbatch{batch_id}")
 
-    return (
-        events.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+        fold_batch(batch_df.sparkSession, state_path,
+                   f"decayedbatch{batch_id}", fold)
+
+    return start_batch_stream(events, checkpoint, _merge)
 
 
 def _band_key():
@@ -503,7 +489,6 @@ def stream_lsh_index(docs: DataFrame, table_dir: str, checkpoint: str):
     those keys, so a replacement removes the stale bands.
     """
     from ..operators.dedup import minhash_bands_frame
-    from ..sources.snapshot import upsert_batch
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -513,12 +498,7 @@ def stream_lsh_index(docs: DataFrame, table_dir: str, checkpoint: str):
         )
         upsert_batch(bands, batch_id, table_dir, key="band_key")
 
-    return (
-        docs.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(docs, checkpoint, _merge)
 
 
 def stream_lsh_index_mutable(docs: DataFrame, table_dir: str,
@@ -551,12 +531,7 @@ def stream_lsh_index_mutable(docs: DataFrame, table_dir: str,
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         lsh_index_merge_mutable(batch_df, batch_id, table_dir)
 
-    return (
-        docs.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(docs, checkpoint, _merge)
 
 
 def lsh_index_merge_mutable(batch_df: DataFrame, batch_id: int,
@@ -566,7 +541,7 @@ def lsh_index_merge_mutable(batch_df: DataFrame, batch_id: int,
     replay path is directly testable). Returns the outcome:
     'skipped_duplicate' | 'published' | 'empty'."""
     from ..operators.dedup import minhash_bands_frame
-    from ..sources.snapshot import _has_token, delete_keys, upsert_batch
+    from ..sources.snapshot import _has_token, delete_keys
 
     if batch_df.isEmpty():
         return "empty"
@@ -691,7 +666,6 @@ def stream_bm25_postings(docs: DataFrame, table_dir: str, checkpoint: str,
     instead of silently mis-scoring.
     """
     from ..operators.textops import BM25_TERMS, bm25_postings
-    from ..sources.snapshot import upsert_batch
 
     terms = BM25_TERMS if terms is None else tuple(terms)
 
@@ -704,31 +678,23 @@ def stream_bm25_postings(docs: DataFrame, table_dir: str, checkpoint: str,
         upsert_batch(rows, batch_id, table_dir, key="doc_key",
                      extra={"bm25_terms": list(terms)})
 
-    return (
-        docs.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(docs, checkpoint, _merge)
 
 
 def stream_m4_upsert(events: DataFrame, state_path: str, checkpoint: str,
                      count_path: str | None = None):
     """Maintain the M4 downsample state over a stream: per micro-batch
     compute the per-(type, bucket) archetypes and merge into the
-    parquet state table. UNLIKE counts, all four M4 aggregates are
-    ABSORBING merges — min/max on the value, min/max on the
-    (micros, event_id, cents) selection struct — so replayed batches
-    cannot corrupt the state (the stream_hll_upsert property) and no
-    commit-protocol idempotence is needed.
+    parquet state table: min/max on the value, min/max on the
+    (micros, event_id, cents) selection struct. The fold commits under
+    its batch token (snapshot.fold_batch), so a replayed batch is
+    skipped.
 
-    The row COUNT is the one non-absorbing aggregate a dashboard
-    still wants: pass ``count_path`` and each batch ALSO writes its
-    per-(type, bucket) counts as token-idempotent DELTAS to a second
-    snapshot table (the stream_hdr_deltas pattern — replay is a no-op
-    because the manifest batch token is checked, not because the
-    merge absorbs). The two writes are each individually idempotent,
-    so a crash between them replays into exactly-once for both.
+    The row COUNT is the one aggregate M4 does not keep: pass
+    ``count_path`` and each batch ALSO writes its per-(type, bucket)
+    counts as token-idempotent DELTAS to a second snapshot table (the
+    stream_hdr_deltas pattern). Each write commits under the batch
+    token, so a crash between them replays into exactly-once for both.
     m4_from_state sums the deltas back in and serves the batch
     operator's FULL shape including n.
 
@@ -740,17 +706,13 @@ def stream_m4_upsert(events: DataFrame, state_path: str, checkpoint: str,
     writing, so a crash mid-rewrite would lose ALL accumulated state
     while checkpoint replay only re-runs the last batch. Publishing
     each merged state as a new manifest version keeps the previous
-    version readable until the new one commits atomically; replaying
-    a batch against post-merge state is harmless because the merge is
-    absorbing.
+    version readable until the new one commits atomically.
     """
     from ..operators.relational11 import M4_BUCKET_HOURS, m4_state_frame
-    from ..sources.snapshot import publish_snapshot, upsert_batch
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
         if count_path is not None:
             us_per_bucket = M4_BUCKET_HOURS * 3_600_000_000
             cnt = (
@@ -773,23 +735,19 @@ def stream_m4_upsert(events: DataFrame, state_path: str, checkpoint: str,
             )
             upsert_batch(cnt, batch_id, count_path, key="delta_key")
         delta = m4_state_frame(batch_df)
-        state = read_latest(spark, state_path)
-        merged = (
-            delta if state is None else state.unionByName(delta)
-        ).groupBy("event_type", "bucket").agg(
-            F.min("min_cents").alias("min_cents"),
-            F.max("max_cents").alias("max_cents"),
-            F.min("first_k").alias("first_k"),
-            F.max("last_k").alias("last_k"),
+        fold_batch(
+            batch_df.sparkSession, state_path, f"m4batch{batch_id}",
+            lambda state: (
+                delta if state is None else state.unionByName(delta)
+            ).groupBy("event_type", "bucket").agg(
+                F.min("min_cents").alias("min_cents"),
+                F.max("max_cents").alias("max_cents"),
+                F.min("first_k").alias("first_k"),
+                F.max("last_k").alias("last_k"),
+            ),
         )
-        publish_snapshot(merged, state_path, f"m4batch{batch_id}")
 
-    return (
-        events.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(events, checkpoint, _merge)
 
 
 def m4_from_state(spark: SparkSession, state_path: str,
@@ -838,7 +796,6 @@ def stream_hdr_deltas(events: DataFrame, table_dir: str,
     snapshot.compact reclaims file count when wanted.
     """
     from ..operators.relational11 import hdr_bucket_counts
-    from ..sources.snapshot import upsert_batch
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -855,12 +812,7 @@ def stream_hdr_deltas(events: DataFrame, table_dir: str,
         )
         upsert_batch(delta, batch_id, table_dir, key="delta_key")
 
-    return (
-        events.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(events, checkpoint, _merge)
 
 
 def hdr_from_index(spark: SparkSession, table_dir: str) -> DataFrame:
@@ -894,7 +846,6 @@ def stream_cms_upsert(events: DataFrame, table_dir: str,
     with the batch events_count_min_sketch, so index-served estimates
     match the batch operator value-for-value."""
     from ..operators.textops import cms_counts
-    from ..sources.snapshot import upsert_batch
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -909,12 +860,7 @@ def stream_cms_upsert(events: DataFrame, table_dir: str,
         )
         upsert_batch(delta, batch_id, table_dir, key="delta_key")
 
-    return (
-        events.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(events, checkpoint, _merge)
 
 
 def cms_from_state(spark: SparkSession, table_dir: str,
@@ -952,7 +898,6 @@ def stream_moments_upsert(events: DataFrame, table_dir: str,
     via snapshot.compact when wanted."""
     from ..functions import money as M
     from ..operators.relational12 import welch_moments
-    from ..sources.snapshot import upsert_batch
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -978,12 +923,7 @@ def stream_moments_upsert(events: DataFrame, table_dir: str,
         )
         upsert_batch(delta, batch_id, table_dir, key="delta_key")
 
-    return (
-        events.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(events, checkpoint, _merge)
 
 
 def welch_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
@@ -1031,7 +971,6 @@ def stream_classifier_counts(docs: DataFrame, table_dir: str,
     from ..operators.relational14 import (
         classifier_scored, classifier_source_counts,
     )
-    from ..sources.snapshot import upsert_batch
 
     w = list(weights)
 
@@ -1047,12 +986,7 @@ def stream_classifier_counts(docs: DataFrame, table_dir: str,
         )
         upsert_batch(delta, batch_id, table_dir, key="delta_key")
 
-    return (
-        docs.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(docs, checkpoint, _merge)
 
 
 def classifier_yield_from_state(spark: SparkSession,
@@ -1092,7 +1026,6 @@ def stream_monthly_rev_upsert(orders: DataFrame, table_dir: str,
     State grows O(batches × months) — a few rows per batch regardless
     of stream volume; snapshot.compact reclaims file count."""
     from ..functions import money as M
-    from ..sources.snapshot import upsert_batch
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1111,12 +1044,7 @@ def stream_monthly_rev_upsert(orders: DataFrame, table_dir: str,
         )
         upsert_batch(delta, batch_id, table_dir, key="delta_key")
 
-    return (
-        orders.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(orders, checkpoint, _merge)
 
 
 def monthly_rev_from_state(spark: SparkSession,
@@ -1173,25 +1101,22 @@ def stream_kmv_upsert(events: DataFrame, state_path: str,
     alternative to stream_hll_upsert when estimates must reproduce
     across engines/runs. Each micro-batch reduces to its per-type
     bottom-k distinct hashes; the state merge is bottom-k of the
-    DISTINCT union — an ABSORBING merge like the HLL register maxima
-    (min-k of a union = min-k of the per-side min-k's, and
-    array_distinct collapses a replayed member), so batch replay can
-    never corrupt the estimate and no commit-protocol idempotence is
-    needed. State is O(types x k) regardless of stream volume, on the
-    manifest protocol (atomic versions; crash mid-rewrite cannot lose
-    accumulated state). Read with kmv_from_state; the estimator and
-    hash match the batch twin events_kmv_distinct
+    DISTINCT union (min-k of a union = min-k of the per-side min-k's).
+    The fold commits under its batch token (snapshot.fold_batch), so a
+    replayed batch is skipped. State is O(types x k) regardless of
+    stream volume, on the manifest protocol (atomic versions; crash
+    mid-rewrite cannot lose accumulated state). Read with
+    kmv_from_state; the estimator and hash match the batch twin
+    events_kmv_distinct
     (operators/relational5.py) value-for-value. (The state is the
     textbook value-distinct hash set; it diverges from the batch
     twin's per-USER distinct only if two users collide in the 32-bit
     hash prefix — in which case the sketch, an estimator with ~1/sqrt(k)
     error by design, counts the pair once.)"""
-    from ..sources.snapshot import publish_snapshot
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
         hv = (
             F.conv(
                 F.substring(
@@ -1211,24 +1136,20 @@ def stream_kmv_upsert(events: DataFrame, state_path: str,
                 ).alias("mins")
             )
         )
-        state = read_latest(spark, state_path)
-        merged = (
-            delta if state is None else state.unionByName(delta)
-        ).groupBy("event_type").agg(
-            F.slice(
-                F.array_sort(
-                    F.array_distinct(F.flatten(F.collect_list("mins")))
-                ), 1, k,
-            ).alias("mins")
+        fold_batch(
+            batch_df.sparkSession, state_path, f"kmvbatch{batch_id}",
+            lambda state: (
+                delta if state is None else state.unionByName(delta)
+            ).groupBy("event_type").agg(
+                F.slice(
+                    F.array_sort(F.array_distinct(
+                        F.flatten(F.collect_list("mins")))),
+                    1, k,
+                ).alias("mins")
+            ),
         )
-        publish_snapshot(merged, state_path, f"kmvbatch{batch_id}")
 
-    return (
-        events.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(events, checkpoint, _merge)
 
 
 def kmv_from_state(spark: SparkSession, state_path: str,
@@ -1255,9 +1176,8 @@ def stream_bloom_upsert(events: DataFrame, state_path: str,
     over a stream — the join-pruning filter kept CURRENT as data
     arrives, so a nightly bloom_pruned_join never rebuilds the build
     side's bitset from scratch. The state merge is per-word
-    ``bit_or`` — associative, commutative, and ABSORBING (re-OR-ing a
-    replayed batch's bits is a no-op), the HLL-register replay-safety
-    class, so no commit-protocol idempotence is needed. State is
+    ``bit_or``; the fold commits under its batch token
+    (snapshot.fold_batch), so a replayed batch is skipped. State is
     <= m_bits/64 rows regardless of stream volume, on the manifest
     protocol. Serve with bloom_filter_from_state + skew.bloom_probe;
     bits are IDENTICAL to a batch bloom_words over the union by the
@@ -1266,25 +1186,19 @@ def stream_bloom_upsert(events: DataFrame, state_path: str,
     (stream_cbloom_upsert), which tracks per-position counters and
     serves the identical packed filter over the surviving keys."""
     from ..operators.skew import bloom_words
-    from ..sources.snapshot import publish_snapshot
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
         delta = bloom_words(batch_df, key_col, m_bits, k_hashes)
-        state = read_latest(spark, state_path)
-        merged = (
-            delta if state is None else state.unionByName(delta)
-        ).groupBy("w").agg(F.expr("bit_or(b)").alias("b"))
-        publish_snapshot(merged, state_path, f"bloombatch{batch_id}")
+        fold_batch(
+            batch_df.sparkSession, state_path, f"bloombatch{batch_id}",
+            lambda state: (
+                delta if state is None else state.unionByName(delta)
+            ).groupBy("w").agg(F.expr("bit_or(b)").alias("b")),
+        )
 
-    return (
-        events.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(events, checkpoint, _merge)
 
 
 def bloom_filter_from_state(spark: SparkSession, state_path: str,
@@ -1319,7 +1233,6 @@ def stream_cbloom_upsert(keys: DataFrame, table_dir: str,
     O(batches × touched positions), bounded by m_bits per batch;
     snapshot.compact reclaims file count."""
     from ..operators.skew import bloom_pos_counts
-    from ..sources.snapshot import upsert_batch
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1333,12 +1246,7 @@ def stream_cbloom_upsert(keys: DataFrame, table_dir: str,
         )
         upsert_batch(delta, batch_id, table_dir, key="delta_key")
 
-    return (
-        keys.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(keys, checkpoint, _merge)
 
 
 def cbloom_filter_from_state(spark: SparkSession, table_dir: str,
@@ -1373,24 +1281,21 @@ def stream_topk_upsert(events: DataFrame, state_path: str,
     Per micro-batch the input reduces to its per-group bottom-k
     struct array (the grouped_topk item layout: ascending
     ``order_cols`` fields, payload nested so it never decides
-    placement); the state merge is bottom-k of the DISTINCT union —
-    an ABSORBING merge exactly like stream_kmv_upsert's (min-k of a
-    union = min-k of the per-side min-k's, and array_distinct
-    collapses a replayed item), so batch replay cannot corrupt the
-    leaderboard and no commit-protocol idempotence is needed. The
-    absorbing claim leans on grouped_topk's documented contract that
+    placement); the state merge is bottom-k of the DISTINCT union,
+    exactly like stream_kmv_upsert's (min-k of a union = min-k of the
+    per-side min-k's). The fold commits under its batch token
+    (snapshot.fold_batch), so a replayed batch is skipped. The
+    distinct leans on grouped_topk's documented contract that
     ``order_cols`` end with a unique id: full-struct distinctness
-    then equals row identity, and a replayed row collapses while two
-    legitimately tied rows never share a struct. State is
+    then equals row identity, so two legitimately tied rows never
+    share a struct. State is
     O(groups x k) regardless of stream volume, on the manifest
     protocol. Read with topk_from_state — ranks match the batch
     ``grouped_topk`` over the unioned corpus value-for-value."""
-    from ..sources.snapshot import publish_snapshot
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
         item = F.struct(
             *[c.alias(f"_o{i}") for i, c in enumerate(order_cols)],
             F.struct(*payload_cols).alias("_p"),
@@ -1401,25 +1306,20 @@ def stream_topk_upsert(events: DataFrame, state_path: str,
                 1, k,
             ).alias("_tk")
         )
-        state = read_latest(spark, state_path)
-        merged = (
-            delta if state is None else state.unionByName(delta)
-        ).groupBy(*group_cols).agg(
-            F.slice(
-                F.array_sort(
-                    F.array_distinct(F.flatten(F.collect_list("_tk")))
-                ),
-                1, k,
-            ).alias("_tk")
+        fold_batch(
+            batch_df.sparkSession, state_path, f"topkbatch{batch_id}",
+            lambda state: (
+                delta if state is None else state.unionByName(delta)
+            ).groupBy(*group_cols).agg(
+                F.slice(
+                    F.array_sort(F.array_distinct(
+                        F.flatten(F.collect_list("_tk")))),
+                    1, k,
+                ).alias("_tk")
+            ),
         )
-        publish_snapshot(merged, state_path, f"topkbatch{batch_id}")
 
-    return (
-        events.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(events, checkpoint, _merge)
 
 
 def topk_from_state(spark: SparkSession, state_path: str,
@@ -1427,7 +1327,7 @@ def topk_from_state(spark: SparkSession, state_path: str,
     """Per-group leaderboard served from the maintained top-k state:
     the grouped_topk output shape (group cols + payload cols +
     1-based rank), bit-identical to the batch kernel over the same
-    rows by the absorbing-merge argument on stream_topk_upsert."""
+    rows by the bottom-k merge argument on stream_topk_upsert."""
     st = read_latest(spark, state_path)
     if st is None:
         raise ValueError(f"no published top-k state at {state_path}")
@@ -1524,7 +1424,6 @@ def stream_kanon_counts(docs: DataFrame, table_dir: str,
     stream_moments_upsert key rule. State grows O(batches x classes);
     snapshot.compact reclaims file count when wanted."""
     from ..operators.relational15 import KANON_BUCKET_CHARS, kanon_classes
-    from ..sources.snapshot import upsert_batch
 
     bc = KANON_BUCKET_CHARS if bucket_chars is None else int(bucket_chars)
 
@@ -1539,12 +1438,7 @@ def stream_kanon_counts(docs: DataFrame, table_dir: str,
         )
         upsert_batch(delta, batch_id, table_dir, key="delta_key")
 
-    return (
-        docs.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(docs, checkpoint, _merge)
 
 
 def kanon_from_state(spark: SparkSession, table_dir: str,
@@ -1583,7 +1477,6 @@ def stream_sourcelen_counts(docs: DataFrame, table_dir: str,
     docs_ks_source_drift over the same documents. Delta key is
     namespaced token-first ('kl|<batch>|<source>|<x>')."""
     from ..operators.relational15 import ks_counts
-    from ..sources.snapshot import upsert_batch
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1595,12 +1488,7 @@ def stream_sourcelen_counts(docs: DataFrame, table_dir: str,
         )
         upsert_batch(delta, batch_id, table_dir, key="delta_key")
 
-    return (
-        docs.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(docs, checkpoint, _merge)
 
 
 def ks_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
@@ -1652,7 +1540,6 @@ def stream_daily_counts(events: DataFrame, table_dir: str,
     over the same events. Delta key is namespaced token-first
     ('dc|<batch>|<day>')."""
     from ..operators.relational15 import daily_counts
-    from ..sources.snapshot import upsert_batch
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1664,12 +1551,7 @@ def stream_daily_counts(events: DataFrame, table_dir: str,
         )
         upsert_batch(delta, batch_id, table_dir, key="delta_key")
 
-    return (
-        events.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(events, checkpoint, _merge)
 
 
 def ldiv_from_state(spark: SparkSession, table_dir: str,
@@ -1871,7 +1753,6 @@ def stream_digit_counts(events: DataFrame, table_dir: str,
     with benford_from_state, bit-identical to batch events_benford.
     Delta key is namespaced token-first ('bf|<batch>|<digit>')."""
     from ..operators.relational15 import benford_digit_counts
-    from ..sources.snapshot import upsert_batch
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1883,12 +1764,7 @@ def stream_digit_counts(events: DataFrame, table_dir: str,
         )
         upsert_batch(delta, batch_id, table_dir, key="delta_key")
 
-    return (
-        events.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(events, checkpoint, _merge)
 
 
 def benford_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
@@ -1916,34 +1792,27 @@ def stream_lastship_upsert(lineitems: DataFrame, state_path: str,
     one compact row per order instead of re-scanning the (much wider
     and many-times-larger) line-item corpus.
 
-    The state merge is per-order MAX — associative, commutative, and
-    ABSORBING (re-maxing a replayed batch's dates is a no-op, the
-    stream_kmv_upsert replay-safety class), so no commit-protocol
-    idempotence is needed. Serve with km_from_state; the table is
+    The state merge is per-order MAX; the fold commits under its batch
+    token (snapshot.fold_batch), so a replayed batch is skipped.
+    Serve with km_from_state; the table is
     bit-identical to batch orders_survival_km because both run the
     shared km_table kernel and max-of-maxes equals the corpus max."""
     from ..operators.relational15 import lastship_counts
-    from ..sources.snapshot import publish_snapshot
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
         delta = lastship_counts(batch_df)
-        state = read_latest(spark, state_path)
-        merged = (
-            delta if state is None else state.unionByName(delta)
-        ).groupBy("l_orderkey").agg(
-            F.max("last_ship").alias("last_ship")
+        fold_batch(
+            batch_df.sparkSession, state_path, f"lastshipbatch{batch_id}",
+            lambda state: (
+                delta if state is None else state.unionByName(delta)
+            ).groupBy("l_orderkey").agg(
+                F.max("last_ship").alias("last_ship")
+            ),
         )
-        publish_snapshot(merged, state_path, f"lastshipbatch{batch_id}")
 
-    return (
-        lineitems.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(lineitems, checkpoint, _merge)
 
 
 def km_from_state(spark: SparkSession, state_path: str,
@@ -2015,7 +1884,6 @@ def stream_mw_counts(events: DataFrame, table_dir: str,
     ('mw|<batch>|<type>|<vc>'). State grows O(batches x types x
     distinct cents values); snapshot.compact reclaims file count."""
     from ..operators.relational15 import mw_counts
-    from ..sources.snapshot import upsert_batch
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -2027,12 +1895,7 @@ def stream_mw_counts(events: DataFrame, table_dir: str,
         )
         upsert_batch(delta, batch_id, table_dir, key="delta_key")
 
-    return (
-        events.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(events, checkpoint, _merge)
 
 
 def mw_from_state(spark: SparkSession, table_dir: str) -> DataFrame:

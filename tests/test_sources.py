@@ -1,5 +1,5 @@
-"""Sink tests: partitioned hist store with partition pruning, and the
-bucketed-table path for shuffle-free upserts."""
+"""Sink tests: partitioned hist store with partition pruning, readers,
+clustered layouts and the manifest-based snapshot table."""
 
 from __future__ import annotations
 
@@ -28,7 +28,7 @@ def _trips(spark):
 
 def test_partitioned_hist_prunes(spark, tmp_path):
     hist = str(tmp_path / "hist")
-    W.write_hist_parquet(_trips(spark), hist, partition_by=("region",))
+    W.write_partitioned(_trips(spark), hist, ["region"])
     got = spark.read.parquet(hist)
     assert got.count() == 2
 
@@ -42,20 +42,6 @@ def test_partitioned_hist_prunes(spark, tmp_path):
     plan = buf.getvalue()
     assert "PartitionFilters: [isnotnull(region" in plan
     assert got.where(F.col("region") == "Prague").count() == 1
-
-
-def test_bucketed_hist_table(spark, tmp_path):
-    table = "hist_bucketed_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    W.write_hist_bucketed(_trips(spark).drop("trip_date"), table, buckets=4,
-                          path=str(tmp_path / "hist_bucketed"))
-    got = spark.table(table)
-    assert got.count() == 2
-    desc = spark.sql(f"DESCRIBE EXTENDED {table}").collect()
-    info = {r.col_name: r.data_type for r in desc}
-    assert info.get("Num Buckets") == "4"
-    assert info.get("Bucket Columns") == "[`trip_key`]"
-    spark.sql(f"DROP TABLE {table}")
 
 
 def test_jsonl_roundtrip_with_explicit_schema(spark, tmp_path):
@@ -99,24 +85,6 @@ def test_orc_roundtrip_and_pushdown(spark, tmp_path):
     # same pushdown + pruning contract as parquet
     assert "PushedFilters: [IsNotNull(region), EqualTo(region,Prague)]" in plan
     assert "ReadSchema: struct<region:string,trip_key:string>" in plan
-
-
-def test_compact_parquet_preserves_rows(spark, tmp_path):
-    import os
-
-    from jobsity_data_pipeline_spark.sources.maintenance import compact_parquet
-
-    path = str(tmp_path / "hist")
-    df = spark.range(0, 1000).withColumnRenamed("id", "k")
-    df.repartition(20).write.parquet(path)
-    n_before = len([f for f in os.listdir(path) if f.endswith(".parquet")])
-    assert n_before >= 10
-    stats = compact_parquet(spark, path, target_rows_per_file=500)
-    assert stats["rows"] == 1000
-    assert stats["files_after"] == 2
-    back = spark.read.parquet(path)
-    assert back.count() == 1000
-    assert set(r.k for r in back.collect()) == set(range(1000))
 
 
 def test_range_clustered_write_prunes_files(spark, tmp_path):

@@ -2231,3 +2231,61 @@ def test_stream_mw_counts_serves_batch_ranksum_bitexact(spark, tmp_path):
     assert [tuple(r)
             for r in cliffs_from_state(spark, table).collect()] \
         == want_cd and len(want_cd) == 3
+
+
+@pytest.mark.parametrize(
+    "maintainer", ["stream_decayed_upsert", "stream_hll_upsert"]
+)
+def test_fold_replay_after_crash_is_exactly_once(spark, tmp_path,
+                                                 maintainer):
+    """Run the maintainer to completion, drop the checkpoint's last
+    commit entry (a crash after the state publish, before the commit
+    log write) and run it again: the engine replays that batch id,
+    and the fold must skip it. The decayed add-merge would count the
+    batch twice; the HLL register max absorbs it but would still
+    publish it as a second version."""
+    import datetime as dt
+    import os
+
+    from jobsity_data_pipeline_spark.sources.snapshot import history
+
+    schema = (
+        "event_id long, ts timestamp, user_id long, event_type string,"
+        " value double, props string"
+    )
+    base = dt.datetime(2024, 1, 1)
+    src = str(tmp_path / "events")
+    for f in range(2):  # two files read one per trigger: batches 0, 1
+        spark.createDataFrame(
+            [(f * 100 + i, base + dt.timedelta(hours=f, minutes=i),
+              (f * 7 + i) % 23, "ab"[i % 2], float(i % 11), "{}")
+             for i in range(100)],
+            schema,
+        ).coalesce(1).write.mode("append").parquet(src)
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    start = getattr(ST, maintainer)
+    state, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
+
+    def rows():
+        return sorted(
+            (r.asDict() for r in ST.sketch_state(spark, state).collect()),
+            key=lambda r: sorted(r.items()),
+        )
+
+    start(stream, state, ckpt).awaitTermination(120)
+    first = rows()
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    os.remove(os.path.join(commits, str(last)))
+    crc = os.path.join(commits, f".{last}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    start(stream, state, ckpt).awaitTermination(120)
+
+    assert rows() == first
+    tokens = [h["batch"] for h in history(state)]
+    assert len(tokens) == len(set(tokens)) == 2

@@ -143,48 +143,6 @@ def test_read_trips_csv_roundtrip(spark, tmp_path):
     ]
 
 
-def test_bucketed_upsert_is_colocated_and_idempotent(spark, trips_df, tmp_path):
-    import contextlib
-    import io
-
-    from jobsity_data_pipeline_spark.sources.writers import write_hist_bucketed
-
-    table = "trips_hist_buckettest"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    # buckets must equal the join parallelism (the session's LIVE
-    # shuffle-partition count — read it rather than assuming the
-    # fixture's 8, since another test may have retuned the shared
-    # session): a mismatch makes EnsureRequirements re-shuffle the
-    # bucketed side instead of the batch
-    nbk = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    write_hist_bucketed(
-        TP.dedup_staging(trips_df).limit(3), table, buckets=nbk,
-        path=str(tmp_path / "hist"),
-    )
-    hist = spark.table(table)
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        anti = TP.dedup_staging(trips_df).join(
-            hist.select("trip_key"), "trip_key", "left_anti"
-        )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            anti.explain("formatted")
-        plan = buf.getvalue()
-        # hist is read pre-partitioned off disk; only staging shuffles
-        assert "Bucketed: true" in plan
-        assert plan.count("hashpartitioning(trip_key") == 1
-        TP.upsert_bucketed(spark, trips_df, table=table, buckets=nbk)
-        assert spark.table(table).count() == 5
-        # re-ingesting the same batch adds nothing (ON CONFLICT DO NOTHING)
-        TP.upsert_bucketed(spark, trips_df, table=table, buckets=nbk)
-        assert spark.table(table).count() == 5
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
 def test_reference_trips_csv_end_to_end(spark):
     """The genuine challenge dataset (/root/reference/trips.csv, the
     file insert_postgres.py:21-23 loads) through the full pipeline:
