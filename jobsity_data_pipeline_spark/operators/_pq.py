@@ -180,16 +180,18 @@ def qid_explode(qids: list[int]) -> Column:
     """explode'able literal array of (qid, qidx) structs — replaces
     the broadcast join of the query set against a flat scan. qid is
     re-marked nullable to match the former aggregate-derived column's
-    declared schema."""
-    return F.explode(
-        F.array(*[
-            F.struct(
-                as_nullable(F.lit(int(q)).cast("long")).alias("qid"),
-                F.lit(i).cast("int").alias("qidx"),
-            )
-            for i, q in enumerate(qids)
-        ])
-    )
+    declared schema. An empty query set gets a typed empty array
+    (a bare F.array() is array<void>, and '_q.qid' would not resolve)."""
+    arr = F.array(*[
+        F.struct(
+            as_nullable(F.lit(int(q)).cast("long")).alias("qid"),
+            F.lit(i).cast("int").alias("qidx"),
+        )
+        for i, q in enumerate(qids)
+    ])
+    if not qids:
+        arr = arr.cast("array<struct<qid:bigint,qidx:int>>")
+    return F.explode(arr)
 
 
 def qd_flat_micro(spark: SparkSession,

@@ -714,7 +714,11 @@ def emb_ivfpq_ann(spark: SparkSession, sf_dir: str, n_queries: int = 8,
     qidx = F.create_map(
         *[x for i, q in enumerate(qids)
           for x in (F.lit(int(q)), F.lit(i))]
-    )[F.col("qid")]
+    )
+    if not qids:
+        # a pairless create_map is map<void,void>: type the empty map
+        qidx = qidx.cast("map<bigint,int>")
+    qidx = qidx[F.col("qid")]
     # codes AND per-query ADC sums computed ONCE per corpus on the
     # assignment table, before the probe join (the index stores codes
     # with the row; the distance tables ride the kernel closure, never
@@ -901,7 +905,12 @@ def emb_ivfpq_residual_ann(spark: SparkSession, sf_dir: str,
     pair_idx = F.create_map(
         *[x for i, (q, c) in enumerate(pairs)
           for x in (F.struct(F.lit(int(q)), F.lit(int(c))), F.lit(i))]
-    )[F.struct(F.col("qid").cast("int"), F.col("cell").cast("int"))]
+    )
+    if not pairs:
+        pair_idx = pair_idx.cast("map<struct<col1:int,col2:int>,int>")
+    pair_idx = pair_idx[
+        F.struct(F.col("qid").cast("int"), F.col("cell").cast("int"))
+    ]
     # residual codes AND per-(qid, cell) ADC sums computed ONCE per
     # corpus on the assignment table (residual derivation inside the
     # same Arrow pass; a row's table entry for a pair whose cell it is

@@ -154,8 +154,8 @@ class _Commit(NamedTuple):
 
 
 def _carry_extras(man: dict | None) -> dict:
-    """Caller-supplied manifest metadata (hash_version, constraints, a
-    BM25 index's ``bm25_terms``, ...) carried forward verbatim into
+    """Caller-supplied manifest metadata (constraints, a BM25 index's
+    ``bm25_terms``, ...) carried forward verbatim into
     every new version — without this, a compact/delete/merge would
     silently drop the metadata and downstream readers would fall back
     to defaults."""
@@ -376,21 +376,6 @@ def upsert_batch(batch: DataFrame, batch_id: int, table_dir: str,
                    skipped="skipped_duplicate")
 
 
-# Formula version of _content_hash. Manifests record the version that
-# produced a table's STORED hashes ("hash_version"); writers trust a
-# stored hash only when the marker matches, otherwise they recompute on
-# the fly — so bumping the formula can never register a spurious
-# replacement (no migration wave). rehash_table() rewrites a table
-# under the current formula and sets the marker, retiring the per-merge
-# recompute cost.
-#   v1 (pre-round-7): "<flag>:<value>" joined with \x1f — NOT injective
-#   across column boundaries (a value containing "\x1f1:" shifts the
-#   split, so two different rows could hash equal and a real change be
-#   dropped as a no-op).
-#   v2: length-prefixed fields — injective.
-_HASH_VERSION = 2
-
-
 def _backfill_missing(df, data_cols: list, ref_schema) -> "DataFrame":
     """Add-column schema evolution: null-backfill any of ``data_cols``
     the frame lacks, typed from ``ref_schema`` (the batch/source side).
@@ -413,8 +398,11 @@ def _content_hash(data_cols: list):
     distinct row contents can never collide by construction (md5
     aside); a null and the empty string still hash differently, and
     every declared column always contributes (to_json would silently
-    omit null fields; see upsert_replacing's docstring). Formula
-    version: _HASH_VERSION."""
+    omit null fields, so a row hashed before an added null-defaulted
+    column and after it would compare hashes over different column
+    sets). Adding a column therefore changes every row's hash exactly
+    once: one replacement wave, the CDC signal for "the row's declared
+    content schema changed"."""
     from pyspark.sql import functions as F
 
     def _enc(c):
@@ -427,86 +415,17 @@ def _content_hash(data_cols: list):
     return F.md5(F.concat_ws("\x1f", *[_enc(c) for c in data_cols]))
 
 
-def upsert_replacing(batch: DataFrame, batch_id: int, table_dir: str,
-                     key: str = "trip_key",
-                     content_col: str = "_chash") -> str:
-    """Keyed upsert with UPDATE semantics for tables that cannot put
-    their content in the key: a re-emitted key whose content CHANGED
-    replaces the old row (delete-then-append, the lsh_index_mutable
-    pattern generalized), while an identical re-emit stays a no-op.
-    The generic content hash (md5 over all non-key columns, stored as
-    ``content_col``) is what makes the replacement visible to CDC:
-    pass the same ``content_col`` to change_feed / consume_changes and
-    a replaced key surfaces as delete(old row) + insert(new row)
-    instead of disappearing into the keyed anti-joins (their
-    key-immutability premise).
-
-    The hash is TOTAL over the declared column list: each column is
-    encoded as an explicit null flag + string form before hashing
-    (to_json would silently omit null fields, so a schema evolution
-    that adds a null-defaulted column would leave old-row hashes
-    unchanged while widening the hashed struct — old and new rows
-    would then compare hashes computed over different column sets).
-    Adding a column therefore changes every row's hash exactly once,
-    which surfaces as one replacement wave — the correct CDC signal
-    for "the row's declared content schema changed".
-
-    Exactly-once under replay at both crash points, like the mutable
-    LSH merge: the batch token is checked before any delete; a crash
-    after the delete but before the append's publish replays into a
-    no-op delete (the old content is already gone) and a single
-    append; a crash after the publish replays into skipped_duplicate.
-    A replacement costs two manifest versions (the delete, then the
-    append) — the honest price of an update on immutable files.
-    """
-    if _has_token(table_dir, f"batch{batch_id}"):
-        return "skipped_duplicate"
+def _with_hash(df: DataFrame, content_col: str,
+               data_cols: list) -> DataFrame:
+    """``df`` with ``content_col`` holding each row's stored hash, or
+    _content_hash(data_cols) where the row has none (plain upsert_batch
+    files, or files written before the column appeared)."""
     from pyspark.sql import functions as F
 
-    spark = batch.sparkSession
-    data_cols = sorted(c for c in batch.columns
-                       if c not in (key, content_col))
-    b = batch.dropDuplicates([key]).withColumn(
-        content_col, _content_hash(data_cols)
-    )
-    man = latest_manifest(table_dir)
-    # enforce CHECK constraints BEFORE the delete leg: delete_keys
-    # publishes a version of its own, so deferring validation to
-    # upsert_batch would leave the table missing the replaced rows
-    # when the batch violates — a violating replace batch must raise
-    # with the table untouched, like every other ingest writer
-    _enforce_constraints(b, man, "upsert_replacing")
-    if man is not None and man["files"]:
-        hist = _read_files(spark, man["files"])
-        hist = _backfill_missing(hist, data_cols, b.schema)
-        # trust a stored hash only when the manifest says it was
-        # computed under the CURRENT formula; otherwise recompute on
-        # the fly — a formula bump then compares v-current against
-        # v-current and an identical re-emit stays a no-op (no
-        # spurious replacement wave). rehash_table() sets the marker.
-        if (content_col in hist.columns
-                and man.get("hash_version") == _HASH_VERSION):
-            old_h = F.coalesce(F.col(content_col),
-                               _content_hash(data_cols))
-        else:
-            old_h = _content_hash(data_cols)
-        hist = hist.select(key, old_h.alias("_old_h"))
-        changed = (
-            b.select(key, content_col)
-            .join(hist, key)
-            .where(F.col(content_col) != F.col("_old_h"))
-            .select(key)
-        )
-        # DataFrame delete path: the changed-key set never touches the
-        # driver; after it, upsert_batch's plain keyed anti-join is
-        # sufficient (changed keys are gone, unchanged ones dedup away)
-        delete_keys(spark, table_dir, changed, key=key,
-                    footer_confirm=True)
-        return upsert_batch(b, batch_id, table_dir, key=key)
-    # bootstrap: every stored hash in version 1 is current-formula,
-    # so the marker is assertable
-    return upsert_batch(b, batch_id, table_dir, key=key,
-                        extra={"hash_version": _HASH_VERSION})
+    h = _content_hash(data_cols)
+    if content_col in df.columns:
+        h = F.coalesce(F.col(content_col), h)
+    return df.withColumn(content_col, h)
 
 
 def merge_into(source: DataFrame, batch_id: int, table_dir: str,
@@ -533,14 +452,13 @@ def merge_into(source: DataFrame, batch_id: int, table_dir: str,
       express this with a bare boolean);
     - everything else is a no-op (identical re-emits never rewrite).
 
-    Unlike upsert_replacing's delete-then-append two-version dance,
-    the rewrite (hit files minus removed keys), the appends, and the
+    This is the one writer that replaces rows under an existing key.
+    The rewrite (hit files minus removed keys), the appends, and the
     untouched-file carryover publish as a SINGLE manifest version
-    carrying the batch token — so a replay after a crash at ANY point
-    either sees the token (full no-op) or recomputes from the intact
-    pre-merge state. That closes the update-in-flight window a
-    two-phase emulation has when inserts are disabled: exactly-once
-    for every clause.
+    carrying the batch token — so no published version ever lacks a
+    key mid-update, and a replay after a crash at ANY point either
+    sees the token (full no-op) or recomputes from the intact
+    pre-merge state: exactly-once for every clause.
 
     File IO is bounded like delete_keys: only files whose key range
     can contain a removed key are rewritten (manifest-stats pruning
@@ -552,14 +470,8 @@ def merge_into(source: DataFrame, batch_id: int, table_dir: str,
     clause counts and the rewrite do not re-scan history). Rows are
     stored with ``content_col`` (the null-total hash), so
     change_feed's content-aware mode sees updates as
-    delete(old)+insert(new). Hash-formula migrations are a no-op by
-    construction: stored hashes are trusted only when the manifest's
-    ``hash_version`` marker matches the current formula, otherwise
-    history hashes are recomputed on the fly for the comparison — so
-    rows written under ANY older formula (including the pre-round-6
-    to_json one) never register a spurious replacement. Run
-    rehash_table() once to set the marker and retire the per-merge
-    recompute.
+    delete(old)+insert(new); history rows without a stored hash are
+    compared under one computed over the source's column list.
     Returns {"status", "deleted", "updated", "inserted"}; a merge
     with nothing to do returns status "noop" without publishing (no
     manifest churn, and its replay is the same no-op) — including on
@@ -567,7 +479,7 @@ def merge_into(source: DataFrame, batch_id: int, table_dir: str,
 
     Precondition: the source schema equals the table schema (minus
     ``content_col``) — rewritten rows are projected onto the source's
-    column list, the same contract upsert_replacing carries.
+    column list.
     """
     from pyspark.sql import functions as F
 
@@ -611,27 +523,13 @@ def merge_into(source: DataFrame, batch_id: int, table_dir: str,
             files = _write_data(ins, table_dir)
             return _Commit(
                 new=files, stats={key: _file_stats(files, key) or {}},
-                extra={"hash_version": _HASH_VERSION},
                 result=lambda v: outcome("published", inserted=n_ins),
             )
-        hist = _read_files(spark, man["files"])
-        hist = _backfill_missing(hist, data_cols, src.schema)
-        # rows written without a stored hash (plain upsert_batch
-        # history, or pre-merge files after the column first appears)
-        # get it computed on the fly over the merge's declared column
-        # list — never compared against null. Stored hashes are
-        # trusted ONLY when the manifest's hash_version marker matches
-        # the current formula; otherwise every history hash is
-        # recomputed, so a formula bump can never register a spurious
-        # replacement (rehash_table() retires the recompute cost).
-        computed = _content_hash(data_cols)
-        trusted = man.get("hash_version") == _HASH_VERSION
-        if content_col in hist.columns and trusted:
-            hist = hist.withColumn(
-                content_col, F.coalesce(F.col(content_col), computed)
-            )
-        else:
-            hist = hist.withColumn(content_col, computed)
+        hist = _with_hash(
+            _backfill_missing(_read_files(spark, man["files"]),
+                              data_cols, src.schema),
+            content_col, data_cols,
+        )
         hist_keyed = hist.select(key, F.col(content_col).alias("_old_h"))
         # ONE history scan: the classified frame (|src| rows) is
         # pinned, so the clause counts and the append projection all
@@ -662,73 +560,23 @@ def merge_into(source: DataFrame, batch_id: int, table_dir: str,
             kept = _read_files(spark, hit_files).join(
                 kdf, F.col(key) == F.col("_k"), "left_anti"
             )
-            kept = _backfill_missing(kept, data_cols, src.schema)
-            if content_col in kept.columns and trusted:
-                kept = kept.withColumn(
-                    content_col, F.coalesce(F.col(content_col), computed)
-                )
-            else:
-                kept = kept.withColumn(content_col, computed)
-            kept = kept.select(*src.columns)
+            kept = _with_hash(
+                _backfill_missing(kept, data_cols, src.schema),
+                content_col, data_cols,
+            ).select(*src.columns)
         else:
             kept = None
         new_rows = (kept.unionByName(appends) if kept is not None
                     else appends)
         files = _write_data(new_rows, table_dir)
-        # the marker means "EVERY stored hash in this version is
-        # current-formula": keep it only when it already held, or
-        # assert it when this merge rewrote every prior file (rows
-        # written here always hash under the current formula)
         return _Commit(
             new=files, keep=keep_files,
             stats={key: _file_stats(files, key) or {}},
-            extra={"hash_version": (_HASH_VERSION
-                                    if trusted or not keep_files
-                                    else None)},
             result=lambda v: outcome("published", n_del, n_upd, n_ins),
         )
 
     return _commit(table_dir, "merge_into", f"batch{batch_id}", plan,
                    skipped=outcome("skipped_duplicate"))
-
-
-def rehash_table(spark: SparkSession, table_dir: str,
-                 key: str = "trip_key",
-                 content_col: str = "_chash") -> dict:
-    """One-shot hash-formula migration: rewrite every row with
-    ``content_col`` recomputed under the CURRENT formula and stamp the
-    manifest with ``hash_version`` so upsert_replacing / merge_into /
-    change_feed trust stored hashes again (until then they recompute
-    on the fly — correct, but one extra md5 projection per history
-    scan). Idempotent: a table already marked current is a no-op, so a
-    replayed migration is one too, while a table whose marker was lost
-    (e.g. to a full-replace publish_snapshot) migrates again. Content
-    is unchanged, so a change_feed crossing the rehash boundary emits
-    nothing for untouched keys (the feed recomputes hashes whenever
-    the endpoints' markers differ)."""
-
-    def plan(man):
-        if (man is None or not man["files"]
-                or man.get("hash_version") == _HASH_VERSION):
-            return {"status": "noop"}
-        rows = _read_files(spark, man["files"])
-        data_cols = sorted(c for c in rows.columns
-                           if c not in (key, content_col))
-        rows = rows.withColumn(content_col, _content_hash(data_cols))
-        files = _write_data(rows, table_dir)
-        # every file was rewritten: refresh the skipping stats for
-        # EVERY key the prior manifest tracked, not just the passed
-        # one (the compact contract)
-        tracked = set(man.get("stats", {})) | {key}
-        return _Commit(
-            new=files,
-            stats={k: _file_stats(files, k) or {} for k in tracked},
-            extra={"hash_version": _HASH_VERSION},
-            result=lambda v: {"status": "published", "version": v},
-        )
-
-    return _commit(table_dir, "rehash_table",
-                   f"rehash-v{_HASH_VERSION}-{uuid.uuid4().hex[:8]}", plan)
 
 
 def start_batch_stream(stream: DataFrame, checkpoint: str,
@@ -865,7 +713,7 @@ def read_asof(spark: SparkSession, table_dir: str,
 
 def restore(table_dir: str, version: int) -> dict:
     """Delta-style RESTORE: republish version ``version``'s exact file
-    list — and its stats map and carried extras (hash_version,
+    list — and its stats map and carried extras (constraints,
     bm25_terms, ...) — as a NEW latest version. Published data files
     are never mutated, so this is a METADATA-ONLY commit: no data is
     copied, every version in between stays time-travelable, and the
@@ -983,13 +831,13 @@ def set_constraint(spark: SparkSession, table_dir: str,
                    name: str, expr: str) -> dict:
     """ADD CONSTRAINT — Delta-style table-level CHECK: persist
     ``name -> expr`` in the manifest's ``constraints`` map (carried
-    forward by every writer via _carry_extras, like hash_version),
+    forward by every writer via _carry_extras),
     after validating the CURRENT table data against it — adding a
     constraint existing rows violate would make the table lie, so it
     fails loudly instead (the Delta ALTER TABLE ADD CONSTRAINT
-    contract). Ingest writers (upsert_batch / upsert_replacing /
-    merge_into) then reject any batch carrying a violating row before
-    writing a single data file. Metadata-only commit under the CAS
+    contract). Ingest writers (upsert_batch / merge_into) then reject
+    any batch carrying a violating row before writing a single data
+    file. Metadata-only commit under the CAS
     guard (file list carried by reference)."""
 
     def plan(man):
@@ -1133,13 +981,14 @@ def change_feed(spark: SparkSession, table_dir: str, from_version: int,
     compactions, not across them, at 100 TB).
 
     Premise: a KEY's row is immutable once published (the upsert
-    contract). A writer that replaces content under a reused key
-    (delete-then-append) is invisible to the keyed anti-joins — such
-    flows must either put the content in the key (as the LSH index
-    does with band_hash) or write through upsert_replacing and pass
-    its ``content_col`` here: the anti-joins then compare
-    (key, content hash), so a replacement surfaces as delete(old) +
-    insert(new).
+    contract). A writer that replaces content under a reused key is
+    invisible to the keyed anti-joins — such flows must either put
+    the content in the key (as the LSH index does with band_hash) or
+    write through merge_into and pass its ``content_col`` here: the
+    anti-joins then compare (key, content hash), so a replacement
+    surfaces as delete(old) + insert(new). Rows without a stored hash
+    on either side compare under one computed over the new version's
+    data columns.
 
     ``to_version=None`` means the current latest. Returns None only
     when there is genuinely no change between the versions; raises
@@ -1177,30 +1026,12 @@ def change_feed(spark: SparkSession, table_dir: str, from_version: int,
     old = _read_files(spark, sorted(f_from))
     new = _read_files(spark, sorted(f_to))
     join_cols = [key] + ([content_col] if content_col else [])
-    if content_col and (
-        man_from.get("hash_version") != _HASH_VERSION
-        or man_to.get("hash_version") != _HASH_VERSION
-        or content_col not in old.columns
-        or content_col not in new.columns
-    ):
-        # stored hashes are trusted raw ONLY when BOTH endpoints carry
-        # the current-formula marker. Comparing an unmarked endpoint
-        # raw is wrong even when both markers are equal (both None):
-        # merge_into on an unmarked table rewrites untouched kept rows
-        # in hit files with CURRENT-formula hashes while the published
-        # manifest stays unmarked (keep_files survive), so a single
-        # unmarked version can hold MIXED v1/v2 stored hashes — a feed
-        # spanning that merge would emit phantom delete+insert for
-        # untouched keys co-located with a changed key. Recompute BOTH
-        # sides under the current formula over the current data
-        # columns — equal content then compares equal regardless of
-        # what is stored.
+    if content_col:
         data_cols = sorted(c for c in new.columns
                            if c not in (key, content_col))
-        old = _backfill_missing(old, data_cols, new.schema)
-        h = _content_hash(data_cols)
-        old = old.withColumn(content_col, h)
-        new = new.withColumn(content_col, h)
+        old = _with_hash(_backfill_missing(old, data_cols, new.schema),
+                         content_col, data_cols)
+        new = _with_hash(new, content_col, data_cols)
     inserts = new.join(
         old.select(*join_cols), join_cols, "left_anti"
     ).select("*", ins_type)
@@ -1378,50 +1209,33 @@ def delete_keys(spark: SparkSession, table_dir: str,
     delete-heavy flows (the mutable LSH index passes it), but off by
     default to keep the manifest-only zero-footer-IO pruning path.
 
-    ``keys`` may be a single-column DataFrame instead of a list: the
-    key set then NEVER materializes on the driver — file pruning is a
-    broadcast range-join of the (tiny) per-row-group range table
-    against the key frame, only hit file PATHS (bounded by the
-    manifest) are collected, and the delete itself is a left-anti
-    join. This is the path for data-dependent key sets (e.g. the
-    mutable streaming LSH index's per-batch doc_ids)."""
+    ``keys`` is a list or a single-column DataFrame; either becomes
+    one key frame, so there is one pruning path (the one merge_into
+    uses): a broadcast range-join of the (tiny) per-row-group range
+    table against the key frame, collecting only hit file PATHS
+    (bounded by the manifest), then a left-anti join. A DataFrame key
+    set NEVER materializes on the driver — the path for data-dependent
+    key sets (e.g. the mutable streaming LSH index's per-batch
+    doc_ids). An empty list is a no-op."""
     from pyspark.sql import functions as F
 
-    keys_df = keys if isinstance(keys, DataFrame) else None
-    if keys_df is not None:
-        kdf = (
-            keys_df.select(F.col(keys_df.columns[0]).alias("_k"))
-            .distinct()
-        )
-        want = None
+    if isinstance(keys, DataFrame):
+        kdf = keys.select(F.col(keys.columns[0]).alias("_k")).distinct()
+    elif keys:
+        kdf = spark.createDataFrame([(k,) for k in sorted(set(keys))],
+                                    ["_k"])
     else:
-        want = sorted(set(keys))
+        kdf = None  # an empty key list deletes nothing
 
     def plan(man):
         if man is None:
             return {
                 "files_total": 0, "files_rewritten": 0, "rows_deleted": 0,
             }
-        stats = man.get("stats", {}).get(key, {})
-        if keys_df is not None:
-            hit_files, keep_files = _split_hit_files(
-                spark, man, key, kdf, footer_confirm
-            )
-        else:
-            maybe, keep_files = _prune_by_stats(stats, man["files"], want)
-            hit_files = []
-            for path in maybe:
-                if path in stats and not footer_confirm:
-                    hit_files.append(path)  # manifest stats: maybe-hit
-                    continue
-                # no stats entry, or footer_confirm: check the
-                # per-row-group footer ranges (the published per-file
-                # [min,max] bridges inter-row-group gaps)
-                hit = any(
-                    lo is None or any(lo <= k <= hi for k in want)
-                    for lo, hi in _rg_ranges_for(path, key)
-                )
-                (hit_files if hit else keep_files).append(path)
+        hit_files, keep_files = (
+            _split_hit_files(spark, man, key, kdf, footer_confirm)
+            if kdf is not None else ([], man["files"])
+        )
         if not hit_files:
             # nothing can contain the keys: no rewrite, no new version
             # (a no-op delete publishing manifest churn would double
@@ -1434,12 +1248,7 @@ def delete_keys(spark: SparkSession, table_dir: str,
             }
         df = _read_files(spark, hit_files)
         before = df.count()
-        if keys_df is not None:
-            kept = df.join(
-                kdf, df[key] == F.col("_k"), "left_anti"
-            )
-        else:
-            kept = df.where(~F.col(key).isin(want))
+        kept = df.join(kdf, df[key] == F.col("_k"), "left_anti")
         rows_deleted = before - kept.count()
         new_files = _write_data(kept, table_dir)
         # rewritten files get fresh stats for the delete key (other

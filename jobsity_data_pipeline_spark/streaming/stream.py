@@ -441,11 +441,12 @@ def stream_decayed_upsert(events: DataFrame, state_path: str,
 
 def _band_key():
     """Content-dependent idempotence key for index band rows:
-    (doc_id, band_id, band_hash). Including the hash keeps
-    change_feed's key-immutability premise intact for the MUTABLE
-    path — a re-emitted doc's replacement bands carry NEW keys, so the
-    delete-then-append surfaces as delete + insert rows downstream
-    instead of an invisible in-place value change. On the immutable
+    (doc_id, band_id, band_hash). Putting the content in the key is
+    the alternative to merge_into's content hash that change_feed's
+    key-immutability premise allows: on the MUTABLE path a re-emitted
+    doc's replacement bands carry NEW keys, so its delete_keys +
+    upsert_batch surface as delete + insert rows downstream instead of
+    an invisible in-place value change, with no content column. On the immutable
     path, identical-text replays still dedup (same text ⇒ same hash ⇒
     same key); a changed re-emission — outside that path's documented
     precondition — appends fresh bands beside the stale ones rather

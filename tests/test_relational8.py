@@ -392,3 +392,19 @@ def test_dup_spans_coverage_never_exceeds_doc(spark, tmp_path):
         assert rows[d].dup_tokens == 10
         assert rows[d].max_span_tokens == 10
         assert rows[d].dup_frac <= 1.0
+
+
+@pytest.mark.parametrize("op", [
+    "emb_pq_ann", "emb_pq_trained_ann", "emb_ivfpq_ann",
+    "emb_ivfpq_residual_ann",
+])
+def test_pq_ann_empty_query_set_is_empty_frame(spark, op):
+    """An empty query set is an empty answer, not an analysis error:
+    the literal query array / qid->ordinal map must stay typed when it
+    has no elements, and the output schema must not depend on n."""
+    from jobsity_data_pipeline_spark.operators import similarity as S
+
+    fn = getattr(R8, op, None) or getattr(S, op)
+    empty = fn(spark, SF_SMOKE, n_queries=0)
+    assert empty.count() == 0
+    assert empty.schema == fn(spark, SF_SMOKE, n_queries=2).schema

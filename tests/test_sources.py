@@ -1182,20 +1182,18 @@ def test_delete_keys_row_group_gap_is_not_a_hit(spark, tmp_path):
     assert SN.latest_manifest(t)["version"] == before
 
 
-def test_upsert_replacing_updates_and_cdc_sees_them(spark, tmp_path):
-    """Round-5 (judge 'missing' #3): tables that cannot re-key get
-    UPDATE semantics via the content-hash upsert — a re-emitted key
-    with changed content replaces the row, an identical re-emit is a
-    no-op, and a content-aware change_feed surfaces the replacement
-    as delete(old) + insert(new) instead of losing it to the keyed
-    anti-joins."""
+def test_merge_into_updates_and_cdc_sees_them(spark, tmp_path):
+    """Tables that cannot re-key get UPDATE semantics via merge_into's
+    content hash: a content-aware change_feed surfaces a replaced key
+    as delete(old) + insert(new) beside a plain insert, an unchanged
+    re-emit emits nothing, and the key-only feed hides the update."""
     from jobsity_data_pipeline_spark.sources import snapshot as SN
 
     t = str(tmp_path / "trep")
     v1 = spark.createDataFrame(
         [(1, "alpha"), (2, "bravo")], "trip_key long, v string"
     )
-    assert SN.upsert_replacing(v1, 0, t) == "published"
+    assert SN.merge_into(v1, 0, t)["status"] == "published"
     v_pre = SN.latest_manifest(t)["version"]
 
     # key 1 changes content, key 2 re-emits unchanged, key 3 is new
@@ -1203,12 +1201,13 @@ def test_upsert_replacing_updates_and_cdc_sees_them(spark, tmp_path):
         [(1, "ALPHA2"), (2, "bravo"), (3, "charlie")],
         "trip_key long, v string",
     )
-    assert SN.upsert_replacing(v2, 1, t) == "published"
+    res = SN.merge_into(v2, 1, t)
+    assert (res["deleted"], res["updated"], res["inserted"]) == (0, 1, 1)
+    # one version for the update: no published version lacks key 1
+    assert SN.latest_manifest(t)["version"] == v_pre + 1
     now = {r.trip_key: r.v for r in SN.read_latest(spark, t).collect()}
     assert now == {1: "ALPHA2", 2: "bravo", 3: "charlie"}
 
-    # content-aware feed: replacement = delete(old)+insert(new);
-    # unchanged key 2 emits nothing
     feed = SN.change_feed(
         spark, t, v_pre, key="trip_key", content_col="_chash"
     )
@@ -1222,15 +1221,6 @@ def test_upsert_replacing_updates_and_cdc_sees_them(spark, tmp_path):
     keyed = SN.change_feed(spark, t, v_pre, key="trip_key")
     kg = {(r.trip_key, r._change_type) for r in keyed.collect()}
     assert (1, "insert") not in kg and (1, "delete") not in kg
-
-    # idempotent replay: the same batch id is a full no-op
-    v_now = SN.latest_manifest(t)["version"]
-    assert SN.upsert_replacing(v2, 1, t) == "skipped_duplicate"
-    assert SN.latest_manifest(t)["version"] == v_now
-    # identical content under a NEW batch id: no delete, no new rows
-    assert SN.upsert_replacing(v2, 2, t) == "published"
-    assert {r.trip_key: r.v for r in SN.read_latest(spark, t).collect()} \
-        == now
 
 
 def test_merge_into_three_clauses_single_commit(spark, tmp_path):
@@ -1436,7 +1426,7 @@ def test_streaming_merge_applies_cdc_ops(spark, tmp_path):
     assert SN.latest_manifest(t)["version"] == v
 
 
-def test_upsert_replacing_hash_is_total_over_nulls(spark, tmp_path):
+def test_merge_into_hash_is_total_over_nulls(spark, tmp_path):
     """The content hash must encode nulls explicitly (to_json omits
     null fields): null -> '' IS a content change, and a null column
     still contributes to the hash so two rows differing only in which
@@ -1446,7 +1436,7 @@ def test_upsert_replacing_hash_is_total_over_nulls(spark, tmp_path):
     t = str(tmp_path / "tnull")
     schema = "trip_key long, a string, b string"
     v1 = spark.createDataFrame([(1, None, "x"), (2, "x", None)], schema)
-    assert SN.upsert_replacing(v1, 0, t) == "published"
+    assert SN.merge_into(v1, 0, t)["status"] == "published"
     h = {r.trip_key: r._chash for r in SN.read_latest(spark, t).collect()}
     # (null,'x') vs ('x',null): same non-null field set under to_json,
     # distinct under the null-total encoding
@@ -1455,7 +1445,7 @@ def test_upsert_replacing_hash_is_total_over_nulls(spark, tmp_path):
     # null -> empty string on key 1 must register as a replacement
     v_pre = SN.latest_manifest(t)["version"]
     v2 = spark.createDataFrame([(1, "", "x"), (2, "x", None)], schema)
-    assert SN.upsert_replacing(v2, 1, t) == "published"
+    assert SN.merge_into(v2, 1, t)["updated"] == 1
     feed = SN.change_feed(spark, t, v_pre, key="trip_key",
                           content_col="_chash")
     got = {(r.trip_key, r.a, r._change_type) for r in feed.collect()}
@@ -1463,20 +1453,20 @@ def test_upsert_replacing_hash_is_total_over_nulls(spark, tmp_path):
 
 
 def test_content_hash_is_injective_across_columns(spark, tmp_path):
-    """Round-6 ADVICE: the v1 '<flag>:<value>' \\x1f-joined encoding was
-    not injective — (a='x\\x1f1:y', b='z') and (a='x', b='y\\x1fz')
-    encoded identically, so that real content change hashed equal and
-    upsert_replacing dropped it as a no-op. The v2 length-prefixed
-    encoding must register it as a replacement."""
+    """A '<flag>:<value>' \\x1f-joined encoding is not injective —
+    (a='x\\x1f1:y', b='z') and (a='x', b='y\\x1fz') encode identically,
+    so that real content change would hash equal and merge_into would
+    drop it as a no-op. The length-prefixed encoding must register it
+    as a replacement."""
     from jobsity_data_pipeline_spark.sources import snapshot as SN
 
     t = str(tmp_path / "tinj")
     schema = "trip_key long, a string, b string"
     v1 = spark.createDataFrame([(1, "x\x1f1:y", "z")], schema)
-    assert SN.upsert_replacing(v1, 0, t) == "published"
+    assert SN.merge_into(v1, 0, t)["status"] == "published"
     v_pre = SN.latest_manifest(t)["version"]
     v2 = spark.createDataFrame([(1, "x", "y\x1fz")], schema)
-    assert SN.upsert_replacing(v2, 1, t) == "published"
+    assert SN.merge_into(v2, 1, t)["updated"] == 1
     feed = SN.change_feed(spark, t, v_pre, key="trip_key",
                           content_col="_chash")
     assert feed is not None
@@ -1485,112 +1475,25 @@ def test_content_hash_is_injective_across_columns(spark, tmp_path):
                    (1, "x", "y\x1fz", "insert")}
 
 
-def _old_v1_hash(data_cols):
-    """The retired pre-round-7 formula, reconstructed for migration
-    tests: '<flag>:<value>' per column joined with \\x1f."""
-    return F.md5(F.concat_ws(
-        "\x1f",
-        *[
-            F.concat(
-                F.when(F.col(c).isNull(), F.lit("0:"))
-                .otherwise(F.lit("1:")),
-                F.coalesce(F.col(c).cast("string"), F.lit("")),
-            )
-            for c in data_cols
-        ],
-    ))
-
-
-def test_hash_formula_migration_is_waveless(spark, tmp_path):
-    """A table whose stored hashes were produced by the OLD formula
-    (manifest carries no hash_version marker) must never register a
-    spurious replacement: merge_into recomputes history hashes on the
-    fly, rehash_table stamps the marker in one idempotent rewrite, and
-    a content-aware change_feed crossing the rehash boundary emits
-    nothing for untouched keys."""
-    from jobsity_data_pipeline_spark.sources import snapshot as SN
-
-    t = str(tmp_path / "tmig")
-    schema = "trip_key long, a string, b string"
-    rows = [(1, "alpha", "x"), (2, "bravo", "y")]
-    pre = spark.createDataFrame(rows, schema).withColumn(
-        "_chash", _old_v1_hash(["a", "b"])
-    )
-    # plain upsert_batch: stores the old hashes, sets NO marker
-    assert SN.upsert_batch(pre, 0, t) == "published"
-    man0 = SN.latest_manifest(t)
-    assert "hash_version" not in man0
-    v0 = man0["version"]
-
-    # identical re-emit under the new formula: MUST be a no-op, not a
-    # replacement wave (the old behavior re-hashed src with the new
-    # formula and compared it against stored old-formula hashes)
-    same = spark.createDataFrame(rows, schema)
-    assert SN.merge_into(same, 1, t, key="trip_key")["status"] == "noop"
-    assert SN.upsert_replacing(same, 2, t, key="trip_key") == "published"
-    # upsert_replacing publishes (its dedup path appends nothing new),
-    # but no key may have been rewritten
-    feed = SN.change_feed(spark, t, v0, key="trip_key",
-                          content_col="_chash")
-    assert feed is None or feed.count() == 0
-
-    # one-shot migration: rewrite + marker; replay is a no-op
-    res = SN.rehash_table(spark, t, key="trip_key")
-    assert res["status"] == "published"
-    man1 = SN.latest_manifest(t)
-    assert man1["hash_version"] == SN._HASH_VERSION
-    v1 = man1["version"]
-    assert SN.rehash_table(spark, t, key="trip_key")["status"] in (
-        "noop", "skipped_duplicate"
-    )
-    # crossing the rehash boundary shows NO phantom delete+insert even
-    # though every stored hash changed
-    feed = SN.change_feed(spark, t, v0, key="trip_key",
-                          content_col="_chash")
-    assert feed is None or feed.count() == 0
-
-    # post-migration: identical re-emit still a no-op (stored hashes
-    # now trusted), and a REAL change is still detected
-    assert SN.merge_into(same, 3, t, key="trip_key")["status"] == "noop"
-    upd = spark.createDataFrame(
-        [(1, "ALPHA2", "x"), (2, "bravo", "y")], schema
-    )
-    res = SN.merge_into(upd, 4, t, key="trip_key")
-    assert (res["deleted"], res["updated"], res["inserted"]) == (0, 1, 0)
-    feed = SN.change_feed(spark, t, v1, key="trip_key",
-                          content_col="_chash")
-    got = {(r.trip_key, r.a, r._change_type) for r in feed.collect()}
-    assert got == {(1, "alpha", "delete"), (1, "ALPHA2", "insert")}
-
-
 def test_change_feed_no_phantom_cdc_across_unmarked_merge(spark, tmp_path):
-    """Round-8 ADVICE (medium): merge_into on an UNMARKED (old-formula)
-    table rewrites untouched kept rows in hit files with
-    current-formula hashes while the published manifest stays unmarked
-    (keep_files survive, so the every-stored-hash-is-current invariant
-    doesn't hold and the marker is correctly withheld). A feed spanning
-    that merge sees both endpoint markers as None — EQUAL — so a
-    markers-differ recompute trigger raw-compares mixed v1/v2 stored
-    hashes and emits phantom delete+insert for untouched keys
-    co-located with a changed key. The feed must recompute whenever
-    EITHER endpoint lacks the current marker."""
+    """A merge over history that stores no content hash (plain
+    upsert_batch files) rewrites the untouched rows of a hit file WITH
+    computed hashes, while an un-hit file keeps none. A content-aware
+    feed spanning that merge must compare stored-or-computed hashes on
+    both sides, so untouched keys — co-located with the changed key
+    or not — emit nothing."""
     from jobsity_data_pipeline_spark.sources import snapshot as SN
 
     t = str(tmp_path / "tmix")
     schema = "trip_key long, a string, b string"
-    # file A: keys 1+2 co-located; file B: key 3 (stays un-hit so
-    # keep_files is non-empty and the merge cannot stamp the marker)
+    # file A: keys 1+2 co-located; file B: key 3 (stays un-hit)
     fa = spark.createDataFrame(
         [(1, "alpha", "x"), (2, "bravo", "y")], schema
-    ).coalesce(1).withColumn("_chash", _old_v1_hash(["a", "b"]))
+    ).coalesce(1)
     assert SN.upsert_batch(fa, 0, t) == "published"
-    fb = spark.createDataFrame([(3, "charlie", "z")], schema).coalesce(
-        1
-    ).withColumn("_chash", _old_v1_hash(["a", "b"]))
+    fb = spark.createDataFrame([(3, "charlie", "z")], schema).coalesce(1)
     assert SN.upsert_batch(fb, 1, t) == "published"
-    man0 = SN.latest_manifest(t)
-    assert "hash_version" not in man0
-    v0 = man0["version"]
+    v0 = SN.latest_manifest(t)["version"]
 
     upd = spark.createDataFrame(
         [(1, "ALPHA2", "x"), (2, "bravo", "y"), (3, "charlie", "z")],
@@ -1598,16 +1501,12 @@ def test_change_feed_no_phantom_cdc_across_unmarked_merge(spark, tmp_path):
     )
     res = SN.merge_into(upd, 2, t, key="trip_key")
     assert (res["deleted"], res["updated"], res["inserted"]) == (0, 1, 0)
-    man1 = SN.latest_manifest(t)
-    # the scenario's precondition: marker still absent after the merge
-    assert "hash_version" not in man1
 
     feed = SN.change_feed(spark, t, v0, key="trip_key",
                           content_col="_chash")
     got = {(r.trip_key, r.a, r._change_type) for r in feed.collect()}
     assert got == {(1, "alpha", "delete"), (1, "ALPHA2", "insert")}, (
-        "phantom delete+insert for an untouched key across an "
-        "unmarked merge boundary"
+        "phantom delete+insert for an untouched key across a merge"
     )
 
 
@@ -1634,11 +1533,10 @@ def test_merge_into_bootstrap_insert_predicate_noop(spark, tmp_path):
     res = SN.merge_into(src2, 0, t, key="trip_key",
                         when_not_matched_insert="op <> 'd'")
     assert res["status"] == "published" and res["inserted"] == 1
-    assert SN.latest_manifest(t)["hash_version"] == SN._HASH_VERSION
 
 
-def test_upsert_replacing_and_merge_survive_add_column(spark, tmp_path):
-    """Add-column evolution against the content-hash writers: history
+def test_merge_into_survives_add_column(spark, tmp_path):
+    """Add-column evolution against the content-hash writer: history
     files that predate the column must be null-backfilled for the
     recomputed-hash comparison (round-7 review finding: the recompute
     expression referenced the batch's column list and crashed on an
@@ -1651,7 +1549,7 @@ def test_upsert_replacing_and_merge_survive_add_column(spark, tmp_path):
     t = str(tmp_path / "tevo")
     v1 = spark.createDataFrame([(1, "alpha"), (2, "bravo")],
                                "trip_key long, a string")
-    assert SN.upsert_replacing(v1, 0, t) == "published"
+    assert SN.merge_into(v1, 0, t)["status"] == "published"
 
     # evolved batch: adds column b (old keys re-emit as one documented
     # replacement wave), key 3 is new
@@ -1660,7 +1558,8 @@ def test_upsert_replacing_and_merge_survive_add_column(spark, tmp_path):
         "trip_key long, a string, b string",
     )
     v_pre = SN.latest_manifest(t)["version"]
-    assert SN.upsert_replacing(v2, 1, t) == "published"
+    res = SN.merge_into(v2, 1, t)
+    assert (res["updated"], res["inserted"]) == (2, 1)
     got = {r.trip_key: (r.a, r.b)
            for r in SN.read_latest(spark, t).collect()}
     assert got == {1: ("alpha", None), 2: ("bravo", "x"),
@@ -1673,7 +1572,7 @@ def test_upsert_replacing_and_merge_survive_add_column(spark, tmp_path):
     # the wave happens ONCE: an identical re-emit under the evolved
     # schema is a pure no-op
     v_now = SN.latest_manifest(t)["version"]
-    assert SN.upsert_replacing(v2, 2, t) == "published"
+    assert SN.merge_into(v2, 2, t)["status"] == "noop"
     feed2 = SN.change_feed(spark, t, v_now, key="trip_key",
                            content_col="_chash")
     assert feed2 is None or feed2.count() == 0
@@ -1692,47 +1591,6 @@ def test_upsert_replacing_and_merge_survive_add_column(spark, tmp_path):
     assert got == {1: ("alpha", None), 2: ("bravo", "x"),
                    3: ("charlie", "y")}
     assert SN.merge_into(v2, 2, t2, key="trip_key")["status"] == "noop"
-
-
-def test_rehash_preserves_multikey_stats_and_reruns_after_marker_loss(
-    spark, tmp_path
-):
-    """Round-7 review findings: (1) rehash_table rewrites every file,
-    so it must refresh the skipping stats for EVERY tracked key, not
-    wipe all but the passed one; (2) its idempotence token is scoped
-    to the source version, so a marker lost to a non-extras-carrying
-    writer can be re-stamped by a second migration."""
-    from jobsity_data_pipeline_spark.sources import snapshot as SN
-
-    t = str(tmp_path / "trh")
-    rows = spark.createDataFrame(
-        [(1, 10, "a"), (2, 20, "b")], "trip_key long, k2 long, v string"
-    )
-    # seed a table whose stats map tracks a second key
-    assert SN.upsert_batch(rows, 0, t, key="trip_key") == "published"
-    man = SN.latest_manifest(t)
-    files = man["files"]
-    stats = dict(man.get("stats", {}))
-    stats["k2"] = SN._file_stats(files, "k2") or {}
-    SN._publish(t, files, "seed-k2", extra={"stats": stats},
-                expected_version=man["version"])
-
-    res = SN.rehash_table(spark, t, key="trip_key")
-    assert res["status"] == "published"
-    man = SN.latest_manifest(t)
-    assert man["hash_version"] == SN._HASH_VERSION
-    assert set(man["stats"]) >= {"trip_key", "k2"}
-    assert man["stats"]["k2"], "k2 skipping stats wiped by rehash"
-    # replay of the same migration: no-op (marker)
-    assert SN.rehash_table(spark, t, key="trip_key")["status"] == "noop"
-
-    # marker loss: a full-replace publish that carries no extras
-    SN.publish_snapshot(SN.read_latest(spark, t), t, "plain-republish")
-    assert "hash_version" not in SN.latest_manifest(t)
-    # the migration can run AGAIN (version-scoped token)
-    assert SN.rehash_table(spark, t, key="trip_key")["status"] \
-        == "published"
-    assert SN.latest_manifest(t)["hash_version"] == SN._HASH_VERSION
 
 
 def test_compact_cluster_by_restores_data_skipping(spark, tmp_path,
@@ -2302,44 +2160,6 @@ def test_constraint_added_mid_upsert_gates_the_retry(
     man = SN.latest_manifest(table)
     assert man["constraints"] == {"price_nonneg": "price >= 0"}
     assert SN.read_latest(spark, table).where("price < 0").count() == 0
-
-
-def test_upsert_replacing_constraint_violation_leaves_table_intact(
-        spark, tmp_path):
-    """Round-11 (ADVICE medium): upsert_replacing must validate CHECK
-    constraints BEFORE its delete leg — a violating replace batch
-    raises with the table untouched (old rows still readable, version
-    unchanged), not with the changed keys already deleted."""
-    import pytest as _pt
-
-    from jobsity_data_pipeline_spark.sources import snapshot as SN
-
-    schema = "trip_key long, v string, price double"
-    t = str(tmp_path / "trepc")
-    assert SN.upsert_replacing(
-        spark.createDataFrame([(1, "a", 5.0), (2, "b", 1.0)], schema),
-        0, t,
-    ) == "published"
-    SN.set_constraint(spark, t, "price_nonneg", "price >= 0")
-    v_before = SN.latest_manifest(t)["version"]
-
-    # key 1 re-emits with CHANGED content that violates the constraint
-    with _pt.raises(ValueError, match="price_nonneg"):
-        SN.upsert_replacing(
-            spark.createDataFrame([(1, "a2", -5.0)], schema), 1, t,
-        )
-    # no version published (the delete leg must not have run) and the
-    # old row is still present with its original content
-    assert SN.latest_manifest(t)["version"] == v_before
-    now = {r.trip_key: (r.v, r.price)
-           for r in SN.read_latest(spark, t).collect()}
-    assert now == {1: ("a", 5.0), 2: ("b", 1.0)}
-    # the batch id is not burned: a corrected retry replaces the row
-    assert SN.upsert_replacing(
-        spark.createDataFrame([(1, "a2", 6.0)], schema), 1, t,
-    ) == "published"
-    assert {r.trip_key: (r.v, r.price)
-            for r in SN.read_latest(spark, t).collect()}[1] == ("a2", 6.0)
 
 
 def test_maintain_tolerates_files_missing_on_disk(spark, tmp_path):
