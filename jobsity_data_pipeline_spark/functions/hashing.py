@@ -1,15 +1,9 @@
-"""Deterministic hashing primitives for dedup: MinHash, SimHash, keys.
+"""Deterministic hashing primitives for dedup: record keys and SimHash.
 
 Everything is built on ``md5`` of UTF-8 strings because its hex output
 is byte-identical across Spark, DuckDB, and Python — which lets the
-DuckDB oracle replicate signatures exactly. A seeded "permutation" is
-``md5(seed || '|' || value)``; the MinHash element is the lexicographic
-MIN of those hex strings (a min over a uniform hash is a valid min-hash
-regardless of whether you compare as int or hex).
-
-Scale: each doc's signature is computed with array expressions only
-(no explode, no UDF); the LSH band join shuffles once on the band
-bucket key — never an all-pairs comparison.
+DuckDB oracle replicate keys and signatures exactly. (MinHash/LSH
+banding lives in operators/dedup.py.)
 """
 
 from __future__ import annotations
@@ -27,43 +21,6 @@ def record_key(*cols: Column | str) -> Column:
     """
     cs = [F.col(c) if isinstance(c, str) else c for c in cols]
     return F.md5(F.concat_ws("|", *cs))
-
-
-def minhash_signature(shingles_col: Column, num_hashes: int = 16) -> Column:
-    """Array of ``num_hashes`` min-hash elements over a shingle array.
-
-    Element i = min over shingles of md5(i || '|' || shingle). Null-safe:
-    empty shingle arrays produce an array of nulls (callers filter).
-    """
-    def seeded(i: int):
-        # closure factory: a plain 1-arg lambda (a 2-arg lambda would be
-        # interpreted by Spark as the (element, index) form)
-        return lambda s: F.md5(F.concat_ws("|", F.lit(str(i)), s))
-
-    return F.array(
-        *[F.array_min(F.transform(shingles_col, seeded(i))) for i in range(num_hashes)]
-    )
-
-
-def lsh_bands(sig_col: Column, num_bands: int = 4, rows_per_band: int = 4) -> Column:
-    """Array of (band_id, band_hash) structs for LSH bucketing.
-
-    Docs sharing ANY band hash become candidate pairs via an equi-join
-    on (band_id, band_hash) — a single hash shuffle, never O(n^2).
-    """
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.md5(
-                    F.concat_ws(
-                        "|", *[sig_col[b * rows_per_band + r] for r in range(rows_per_band)]
-                    )
-                ).alias("band_hash"),
-            )
-            for b in range(num_bands)
-        ]
-    )
 
 
 def token_hashes32(tokens_col: Column) -> Column:

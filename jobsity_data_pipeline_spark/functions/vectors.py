@@ -33,25 +33,3 @@ def cosine(a: Column, b: Column) -> Column:
     nn = norm(a) * norm(b)
     return F.when(nn > 0, d / nn).otherwise(F.lit(0.0))
 
-
-def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """Dot product unrolled to a fixed-width sum of products.
-
-    Higher-order functions (zip_with/aggregate) are CodegenFallback —
-    interpreted per pair, which dominates all-pairs similarity. A
-    left-associated chain of GetArrayItem products stays inside
-    whole-stage codegen and adds terms in the same sequential order, so
-    results are bit-identical to the fold (and to DuckDB's loop).
-    """
-    expr = a.getItem(0) * b.getItem(0)
-    for i in range(1, dim):
-        expr = expr + a.getItem(i) * b.getItem(i)
-    return expr
-
-
-def norm_unrolled(a: Column, dim: int) -> Column:
-    """L2 norm via the same unrolled codegen-friendly sum."""
-    expr = a.getItem(0) * a.getItem(0)
-    for i in range(1, dim):
-        expr = expr + a.getItem(i) * a.getItem(i)
-    return F.sqrt(expr)

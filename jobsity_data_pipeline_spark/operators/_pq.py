@@ -39,18 +39,6 @@ from pyspark.sql import functions as F
 _LABELCENT_RAW_CACHE: dict[tuple, tuple] = {}
 
 
-def lit_longs(values) -> Column:
-    """A large array<bigint> literal built through ONE parsed SQL
-    expression. PySpark's F.lit(list) creates a py4j Column per
-    element (~0.5 ms each — measured 4.6 s for 8192 longs, pure
-    DRIVER time inside the timed query construction); the SQL string
-    parses JVM-side in milliseconds. Integer text round-trips
-    exactly."""
-    return F.expr(
-        "array(" + ",".join(f"{int(v)}L" for v in values) + ")"
-    ) if len(values) else F.expr("array()").cast("array<bigint>")
-
-
 def lit_doubles(values) -> Column:
     """array<double> literal via one parsed SQL expression. repr() of
     a Python float is the shortest exact-round-trip decimal and
@@ -122,27 +110,6 @@ def label_cent_raw(
     out = (codes, [cent[c] for c in codes])
     _LABELCENT_RAW_CACHE[ck] = out
     return out
-
-
-def pq_dist_structs_raw(
-    vslice, codes: list[int], cb_block: list[list[float]]
-) -> Column:
-    """array<struct<d2 double, code int>> — the raw-double twin of
-    kmeans.pq_dist_structs (no micro-unit rounding), for the
-    label-centroid ops whose pinned comparison quantity is the
-    unrounded squared distance."""
-    cb_lit = lit_matrix(cb_block)
-    codes_lit = lit_ints(codes)
-    return F.zip_with(
-        cb_lit, codes_lit,
-        lambda carr, c: F.struct(
-            F.aggregate(
-                F.zip_with(vslice, carr, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0), lambda acc, x: acc + x,
-            ).alias("d2"),
-            c.alias("code"),
-        ),
-    )
 
 
 def query_rows(spark: SparkSession, sf_dir: str,

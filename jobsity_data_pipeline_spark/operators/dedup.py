@@ -38,25 +38,6 @@ ROWS_PER_BAND = 4
 _PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
-def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sh: array<string>) with sh the DISTINCT k-shingle set.
-
-    Tokens are materialized in their own projection before the shingle
-    transform iterates (no CSE inside HOF lambdas — see functions/text).
-
-    Deliberately NO ``size(sh) > 0`` filter here: predicate pushdown
-    would substitute the whole shingle expression into a Filter below
-    the repartition (single partition, quadratic retokenization).
-    Downstream explodes/inner-joins drop empty-shingle docs anyway.
-    """
-    d = ensure_parallelism(spark, read_table(spark, sf_dir, "documents"))
-    toks = d.select("doc_id", TX.tokens("text").alias("tk"))
-    return toks.select(
-        "doc_id",
-        F.array_distinct(TX.shingles_from_tokens(F.col("tk"), SHINGLE_K)).alias("sh"),
-    )
-
-
 def shingles_exploded_frame(docs: DataFrame,
                             k: int = SHINGLE_K) -> DataFrame:
     """(doc_id, shingle) rows — DISTINCT k-shingles, one per row, from
@@ -228,11 +209,6 @@ def minhash_sig_frame(docs: DataFrame) -> DataFrame:
     return hashed.groupBy("doc_id").agg(
         *[F.min(f"h{i}").alias(f"m{i}") for i in range(NUM_HASHES)]
     )
-
-
-def _minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = ensure_parallelism(spark, read_table(spark, sf_dir, "documents"))
-    return minhash_sig_frame(d)
 
 
 def minhash_bands_frame(docs: DataFrame) -> DataFrame:

@@ -290,18 +290,6 @@ def _bucketed(spark: SparkSession, sf_dir: str,
     return out
 
 
-def emb_lsh_buckets(spark: SparkSession, sf_dir: str,
-                    n_planes: int = N_PLANES) -> DataFrame:
-    """Random-hyperplane LSH signature per vector: n_planes sign bits
-    packed into one long bucket id (sign of dot(v, ±1-plane)).
-
-    Computed in the same Arrow batch pass (signs = V @ P.T >= 0) — one
-    scan, no shuffle; the bucket id is the partition key for the
-    scale-path ANN.
-    """
-    return _bucketed(spark, sf_dir, n_planes).select("vec_id", "bucket", "label")
-
-
 def emb_lsh_ann(spark: SparkSession, sf_dir: str, n_queries: int = 8,
                 k: int = 5, n_planes: int = N_PLANES,
                 n_flip: int = 2) -> DataFrame:

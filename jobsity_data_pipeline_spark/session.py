@@ -55,19 +55,6 @@ def get_spark(
     return builder.getOrCreate()
 
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 # Timestamp columns in the driver parquet. Depending on the generator
 # run they arrive as TIMESTAMP(NANOS) (read as nano-longs via
 # legacy.parquet.nanosAsLong) or as micros TIMESTAMP_NTZ; both are
@@ -107,11 +94,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
             # naive-timestamp semantics.
             df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES):
-    """Read the driver-generated parquet tables as a dict of DataFrames."""
-    return {name: read_table(spark, sf_dir, name) for name in names}
 
 
 def corpus_fingerprint(sf_dir: str, name: str) -> tuple:

@@ -30,39 +30,10 @@ def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame
     return spark.read.schema(schema).json(path)
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
     """ORC scan (columnar like parquet: predicate pushdown + column
     pruning both apply; the reader is built into Spark)."""
     return spark.read.orc(path)
-
-
-def read_jdbc(spark: SparkSession, url: str, table: str,
-              properties: dict[str, str] | None = None,
-              partition_column: str | None = None,
-              lower_bound: int | None = None, upper_bound: int | None = None,
-              num_partitions: int | None = None) -> DataFrame:
-    """JDBC source (the reference's Postgres tables, insert_postgres.py).
-
-    For any real volume pass partition_column/bounds so the read is
-    split across executors instead of a single connection. Requires a
-    JDBC driver jar on the classpath — not bundled in this environment,
-    so tests only assert plan construction.
-    """
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    for k, v in (properties or {}).items():
-        reader = reader.option(k, v)
-    if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-            .option("numPartitions", str(num_partitions or 8))
-        )
-    return reader.load()
 
 
 def read_csv_with_quarantine(spark: SparkSession, path: str,

@@ -376,6 +376,30 @@ def upsert_batch(batch: DataFrame, batch_id: int, table_dir: str,
                    skipped="skipped_duplicate")
 
 
+def append_batch(batch: DataFrame, batch_id: int, table_dir: str) -> str:
+    """Blind append: publish the current version's files plus ``batch``
+    as the next version, reading no prior data. For additive state
+    (per-batch counter deltas) the batch token is the whole dedup —
+    upsert_batch's anti-join could never find a match — so the append
+    costs one write whatever the table's history (the Delta blind
+    append, which needs no read-conflict check).
+
+    The data is written once, after the token check; a lost publish
+    race re-lists the kept files without rewriting it. Returns
+    "published" | "skipped_duplicate"."""
+    written: list[str] = []
+
+    def plan(man):
+        _enforce_constraints(batch, man, "append_batch")
+        if not written:
+            written.extend(_write_data(batch, table_dir))
+        return _Commit(new=written, keep=man["files"] if man else [],
+                       result=lambda v: "published")
+
+    return _commit(table_dir, "append_batch", f"batch{batch_id}", plan,
+                   skipped="skipped_duplicate")
+
+
 def _backfill_missing(df, data_cols: list, ref_schema) -> "DataFrame":
     """Add-column schema evolution: null-backfill any of ``data_cols``
     the frame lacks, typed from ``ref_schema`` (the batch/source side).

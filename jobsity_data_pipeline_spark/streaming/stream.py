@@ -19,7 +19,7 @@ from ..functions import money as M
 from ..functions.hashing import record_key
 from ..pipeline.trips import TRIPS_SCHEMA
 from ..sources.snapshot import (
-    fold_batch, read_latest, start_batch_stream, upsert_batch,
+    append_batch, fold_batch, read_latest, start_batch_stream, upsert_batch,
 )
 
 
@@ -357,13 +357,39 @@ def stream_hll_upsert(events: DataFrame, state_path: str, checkpoint: str):
 
 
 def sketch_state(spark: SparkSession, state_path: str) -> DataFrame:
-    """The latest published state of a manifest-protocol sketch
-    maintainer (stream_hll_upsert / stream_decayed_upsert /
-    stream_m4_upsert); raises if nothing has ever been written."""
+    """The latest published state of a manifest-protocol maintainer
+    (a sketch fold or an append-only delta table); raises if nothing
+    has ever been written."""
     st = read_latest(spark, state_path)
     if st is None:
         raise ValueError(f"no published sketch state at {state_path}")
     return st
+
+
+def sum_state(spark: SparkSession, table_dir: str, keys: list[str],
+              sums: list[str]) -> DataFrame:
+    """Additive state read back: the per-batch deltas of a counter
+    maintainer sum-merged per ``keys``, recovering the exact corpus
+    counters. Groups on data columns only, so extra columns of older
+    delta files never split a group."""
+    return sketch_state(spark, table_dir).groupBy(*keys).agg(
+        *[F.sum(c).alias(c) for c in sums]
+    )
+
+
+def _append_stream(stream: DataFrame, table_dir: str, checkpoint: str,
+                   delta):
+    """The counter-maintainer sink: append ``delta(batch)`` for every
+    non-empty micro-batch under its batch token (snapshot.append_batch),
+    so a replayed batch is never counted twice and no prior delta is
+    read."""
+
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        append_batch(delta(batch_df), batch_id, table_dir)
+
+    return start_batch_stream(stream, checkpoint, _apply)
 
 
 def stream_decayed_upsert(events: DataFrame, state_path: str,
@@ -570,9 +596,7 @@ def lsh_index_candidates(spark: SparkSession, table_dir: str,
     drop; (doc_a < doc_b) normalizes pair order like the batch path."""
     from ..operators.dedup import minhash_bands_frame
 
-    idx = read_latest(spark, table_dir)
-    if idx is None:
-        raise ValueError(f"no published index at {table_dir}")
+    idx = sketch_state(spark, table_dir)
     probes = minhash_bands_frame(probe_docs)
     p = probes.alias("p")
     i = idx.alias("i")
@@ -692,10 +716,10 @@ def stream_m4_upsert(events: DataFrame, state_path: str, checkpoint: str,
     skipped.
 
     The row COUNT is the one aggregate M4 does not keep: pass
-    ``count_path`` and each batch ALSO writes its per-(type, bucket)
-    counts as token-idempotent DELTAS to a second snapshot table (the
-    stream_hdr_deltas pattern). Each write commits under the batch
-    token, so a crash between them replays into exactly-once for both.
+    ``count_path`` and each batch ALSO appends its per-(type, bucket)
+    counts as DELTAS to a second snapshot table (snapshot.append_batch).
+    Each write commits under the batch token, so a crash between them
+    replays into exactly-once for both.
     m4_from_state sums the deltas back in and serves the batch
     operator's FULL shape including n.
 
@@ -716,25 +740,12 @@ def stream_m4_upsert(events: DataFrame, state_path: str, checkpoint: str,
             return
         if count_path is not None:
             us_per_bucket = M4_BUCKET_HOURS * 3_600_000_000
-            cnt = (
-                batch_df.select(
-                    "event_type",
-                    F.expr(f"unix_micros(ts) div {us_per_bucket}")
-                    .alias("bucket"),
-                )
-                .groupBy("event_type", "bucket")
-                .agg(F.count("*").alias("n"))
-                # integer fields FIRST so the key stays unambiguous
-                # even if event_type contains '|' (the HDR convention)
-                .withColumn(
-                    "delta_key",
-                    F.concat_ws(
-                        "|", F.col("bucket"), F.lit(str(batch_id)),
-                        F.col("event_type"),
-                    ),
-                )
-            )
-            upsert_batch(cnt, batch_id, count_path, key="delta_key")
+            cnt = batch_df.select(
+                "event_type",
+                F.expr(f"unix_micros(ts) div {us_per_bucket}")
+                .alias("bucket"),
+            ).groupBy("event_type", "bucket").agg(F.count("*").alias("n"))
+            append_batch(cnt, batch_id, count_path)
         delta = m4_state_frame(batch_df)
         fold_batch(
             batch_df.sparkSession, state_path, f"m4batch{batch_id}",
@@ -756,11 +767,9 @@ def m4_from_state(spark: SparkSession, state_path: str,
     """The maintained M4 archetypes in the batch operator's column
     shape: (event_type, bucket[, n], min/max/first/last cents). ``n``
     rides along when the maintainer was given a ``count_path`` —
-    sum-merged from the token-idempotent per-batch deltas, identical
-    to the batch count by construction."""
-    st = read_latest(spark, state_path)
-    if st is None:
-        raise ValueError(f"no published M4 state at {state_path}")
+    sum-merged from the per-batch deltas, identical to the batch
+    count by construction."""
+    st = sketch_state(spark, state_path)
     cols = [
         "event_type", "bucket", "min_cents", "max_cents",
         F.col("first_k").getField("c").alias("first_cents"),
@@ -769,12 +778,7 @@ def m4_from_state(spark: SparkSession, state_path: str,
     if count_path is None:
         return st.select(*cols)
 
-    deltas = read_latest(spark, count_path)
-    if deltas is None:
-        raise ValueError(f"no published M4 count deltas at {count_path}")
-    n = deltas.groupBy("event_type", "bucket").agg(
-        F.sum("n").alias("n")
-    )
+    n = sum_state(spark, count_path, ["event_type", "bucket"], ["n"])
     # LEFT join: archetypes accumulated before count maintenance was
     # enabled have no deltas — they surface with n null rather than
     # silently vanishing from the served output
@@ -786,34 +790,19 @@ def m4_from_state(spark: SparkSession, state_path: str,
 def stream_hdr_deltas(events: DataFrame, table_dir: str,
                       checkpoint: str):
     """Maintain the HDR value-quantile sketch over a stream as
-    APPEND-ONLY DELTAS in a snapshot table: each micro-batch writes
-    its own (event_type, bucket_id, cnt) rows keyed by batch id.
-    Counts are NOT an absorbing merge like stream_hll_upsert's
-    register maxima — a replayed count-merge would double-count — so
-    idempotence comes from the manifest protocol instead: the batch
-    token makes replay a no-op, and the read side sums the deltas
-    (hdr_from_index). State grows O(batches x buckets x types), a
-    few hundred rows per batch regardless of stream volume;
-    snapshot.compact reclaims file count when wanted.
+    APPEND-ONLY DELTAS in a snapshot table: each micro-batch appends
+    its own (event_type, bucket_id, cnt) rows. Counts are NOT an
+    absorbing merge like stream_hll_upsert's register maxima — a
+    replayed count-merge would double-count — so the stream appends
+    under its batch token (snapshot.append_batch) and the read side
+    sums the deltas (hdr_from_index). State grows
+    O(batches x buckets x types), a few hundred rows per batch
+    regardless of stream volume; snapshot.compact reclaims file count
+    when wanted.
     """
     from ..operators.relational11 import hdr_bucket_counts
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # integer fields FIRST: bucket_id and batch_id cannot contain
-        # the separator, so the key stays unambiguous even if an
-        # event_type value itself contains '|'
-        delta = hdr_bucket_counts(batch_df).withColumn(
-            "delta_key",
-            F.concat_ws(
-                "|", F.col("bucket_id"), F.lit(str(batch_id)),
-                F.col("event_type"),
-            ),
-        )
-        upsert_batch(delta, batch_id, table_dir, key="delta_key")
-
-    return start_batch_stream(events, checkpoint, _merge)
+    return _append_stream(events, table_dir, checkpoint, hdr_bucket_counts)
 
 
 def hdr_from_index(spark: SparkSession, table_dir: str) -> DataFrame:
@@ -822,25 +811,20 @@ def hdr_from_index(spark: SparkSession, table_dir: str) -> DataFrame:
     arithmetic to the batch events_hdr_quantiles by construction."""
     from ..operators.relational11 import hdr_quantiles_from_counts
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(f"no published HDR sketch at {table_dir}")
-    merged = deltas.groupBy("event_type", "bucket_id").agg(
-        F.sum("cnt").alias("cnt")
+    return hdr_quantiles_from_counts(
+        sum_state(spark, table_dir, ["event_type", "bucket_id"], ["cnt"])
     )
-    return hdr_quantiles_from_counts(merged)
 
 
 def stream_cms_upsert(events: DataFrame, table_dir: str,
                       checkpoint: str, key_col: str = "user_id",
                       depth: int = 4, width: int = 256):
     """Maintain the count-min-sketch counter matrix over a stream as
-    APPEND-ONLY DELTAS in a snapshot table: each micro-batch writes
-    its own (r, bucket, cnt) rows keyed by batch id. CMS counters are
-    SUMS — non-absorbing, a replayed count-merge would double-count —
-    so idempotence comes from the manifest protocol exactly as in
-    stream_hdr_deltas: the batch token makes replay a no-op, and the
-    read side sums the deltas (cms_from_state). State grows
+    APPEND-ONLY DELTAS in a snapshot table: each micro-batch appends
+    its own (r, bucket, cnt) rows. CMS counters are SUMS —
+    non-absorbing, a replayed count-merge would double-count — so, as
+    in stream_hdr_deltas, the stream appends under its batch token and
+    the read side sums the deltas (cms_from_state). State grows
     O(batches x depth x width) — a few hundred rows per batch
     regardless of stream volume; snapshot.compact reclaims file count
     when wanted. The matrix expression is textops.cms_counts, shared
@@ -848,20 +832,10 @@ def stream_cms_upsert(events: DataFrame, table_dir: str,
     match the batch operator value-for-value."""
     from ..operators.textops import cms_counts
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # integer fields first: r/bucket cannot contain the separator,
-        # so the key stays unambiguous
-        delta = cms_counts(batch_df, key_col, depth, width).withColumn(
-            "delta_key",
-            F.concat_ws(
-                "|", F.col("r"), F.col("bucket"), F.lit(str(batch_id))
-            ),
-        )
-        upsert_batch(delta, batch_id, table_dir, key="delta_key")
-
-    return start_batch_stream(events, checkpoint, _merge)
+    return _append_stream(
+        events, table_dir, checkpoint,
+        lambda b: cms_counts(b, key_col, depth, width),
+    )
 
 
 def cms_from_state(spark: SparkSession, table_dir: str,
@@ -873,12 +847,7 @@ def cms_from_state(spark: SparkSession, table_dir: str,
     events_count_min_sketch by construction."""
     from ..operators.textops import cms_point_estimates
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(f"no published CMS sketch at {table_dir}")
-    merged = deltas.groupBy("r", "bucket").agg(
-        F.sum("cnt").alias("cnt")
-    )
+    merged = sum_state(spark, table_dir, ["r", "bucket"], ["cnt"])
     return cms_point_estimates(merged, keys, key_col, depth, width)
 
 
@@ -887,9 +856,8 @@ def stream_moments_upsert(events: DataFrame, table_dir: str,
     """Maintain the Welch sufficient statistic (per-type n, Σv, Σv²
     over exact integer cents) over a stream as APPEND-ONLY DELTAS in
     a snapshot table. Moment sums are SUMS — non-absorbing, a
-    replayed merge would double-count — so idempotence comes from the
-    manifest batch token exactly as in stream_hdr_deltas /
-    stream_cms_upsert; the read side sums the deltas. The per-batch
+    replayed merge would double-count — so the stream appends under
+    its batch token; the read side sums the deltas. The per-batch
     reduction is the SAME welch_moments kernel the batch
     events_welch_ttest uses, and summed integer deltas reproduce the
     batch operator's exact longs — so welch_from_state serves
@@ -897,34 +865,13 @@ def stream_moments_upsert(events: DataFrame, table_dir: str,
     avg/var_samp moment form could never promise (engine-internal
     Welford merge order). State grows O(batches x types); compaction
     via snapshot.compact when wanted."""
-    from ..functions import money as M
     from ..operators.relational12 import welch_moments
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        delta = welch_moments(
-            batch_df.select(
-                "event_type", M.cents(value_col).alias("vc"))
-        ).withColumn(
-            # batch token FIRST: the token is a digit-only string, so
-            # the key parses unambiguously no matter what characters
-            # event_type contains (the integer-fields-first rule from
-            # stream_cms_upsert; event_type|token would silently merge
-            # distinct deltas if a type ever ended in '|<digits>').
-            # The 'm2' namespace prefix migrates LIVE pre-change state
-            # tables: a legacy '<type>|<batch>' key can only start
-            # with 'm2|' when type == 'm2', and its second segment is
-            # then a digit-only batch token — never equal to a new
-            # key's '<digits>|<type>' tail — so upsert_batch's key
-            # anti-join can never collide old rows with new deltas.
-            "delta_key",
-            F.concat_ws("|", F.lit("m2"), F.lit(str(batch_id)),
-                        F.col("event_type")),
-        )
-        upsert_batch(delta, batch_id, table_dir, key="delta_key")
-
-    return start_batch_stream(events, checkpoint, _merge)
+    return _append_stream(
+        events, table_dir, checkpoint,
+        lambda b: welch_moments(
+            b.select("event_type", M.cents(value_col).alias("vc"))),
+    )
 
 
 def welch_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
@@ -935,15 +882,9 @@ def welch_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     construction."""
     from ..operators.relational12 import welch_stats
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(f"no published moment state at {table_dir}")
-    st = deltas.groupBy("event_type").agg(
-        F.sum("n").alias("n"),
-        F.sum("sv").alias("sv"),
-        F.sum("svv").alias("svv"),
+    return welch_stats(
+        sum_state(spark, table_dir, ["event_type"], ["n", "sv", "svv"])
     )
-    return welch_stats(st)
 
 
 def stream_classifier_counts(docs: DataFrame, table_dir: str,
@@ -958,36 +899,23 @@ def stream_classifier_counts(docs: DataFrame, table_dir: str,
     numbers live without ever rescanning the corpus.
 
     Counters are SUMS — non-absorbing, a replayed count-merge would
-    double-count — so idempotence comes from the manifest batch token
-    exactly as in stream_cms_upsert / stream_moments_upsert; the read
-    side sums the deltas (classifier_yield_from_state). The per-batch
+    double-count — so the stream appends under its batch token; the
+    read side sums the deltas (classifier_yield_from_state). The per-batch
     scoring is the SAME classifier_scored / classifier_source_counts
     kernels the batch docs_classifier_yield uses (per-doc features
     are batch-local by construction — a document's score depends only
     on its own text), so summed integer deltas reproduce the batch
-    counters exactly. Delta key is namespaced token-first
-    ('qc|<batch>|<source>') per the stream_moments_upsert key rule.
-    State grows O(batches x sources); snapshot.compact reclaims file
-    count when wanted."""
+    counters exactly. State grows O(batches x sources);
+    snapshot.compact reclaims file count when wanted."""
     from ..operators.relational14 import (
         classifier_scored, classifier_source_counts,
     )
 
     w = list(weights)
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        delta = classifier_source_counts(
-            classifier_scored(batch_df, w)
-        ).withColumn(
-            "delta_key",
-            F.concat_ws("|", F.lit("qc"), F.lit(str(batch_id)),
-                        F.col("source")),
-        )
-        upsert_batch(delta, batch_id, table_dir, key="delta_key")
-
-    return start_batch_stream(docs, checkpoint, _merge)
+    return _append_stream(
+        docs, table_dir, checkpoint,
+        lambda b: classifier_source_counts(classifier_scored(b, w)),
+    )
 
 
 def classifier_yield_from_state(spark: SparkSession,
@@ -999,15 +927,9 @@ def classifier_yield_from_state(spark: SparkSession,
     at the same weights, without touching a single document."""
     from ..operators.relational14 import classifier_yield_from_counts
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(f"no published classifier state at {table_dir}")
-    counts = deltas.groupBy("source").agg(
-        F.sum("n_docs").alias("n_docs"),
-        F.sum("n_keep").alias("n_keep"),
-        F.sum("n_agree").alias("n_agree"),
-    )
-    return classifier_yield_from_counts(counts)
+    return classifier_yield_from_counts(sum_state(
+        spark, table_dir, ["source"], ["n_docs", "n_keep", "n_agree"]
+    ))
 
 
 def stream_monthly_rev_upsert(orders: DataFrame, table_dir: str,
@@ -1016,36 +938,22 @@ def stream_monthly_rev_upsert(orders: DataFrame, table_dir: str,
                               amount_col: str = "o_totalprice"):
     """Maintain the forecaster family's monthly revenue frame over an
     ORDER STREAM as APPEND-ONLY DELTAS in a snapshot table: each
-    micro-batch writes its own (o_year, o_month, rev_c) partial sums
-    keyed by batch token. Revenue sums are SUMS — non-absorbing, a
-    replayed merge would double-count — so idempotence comes from the
-    manifest batch token exactly as in stream_cms_upsert /
-    stream_moments_upsert; the read side sum-merges
-    (monthly_rev_from_state) and recovers the batch _monthly_rev
-    aggregate's exact integer cents, so every forecaster served from
-    state (forecast_from_state) is bit-identical to its batch twin.
-    State grows O(batches × months) — a few rows per batch regardless
-    of stream volume; snapshot.compact reclaims file count."""
-    from ..functions import money as M
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        delta = (
-            batch_df.groupBy(
-                F.year(date_col).cast("long").alias("o_year"),
-                F.month(date_col).cast("long").alias("o_month"),
-            )
-            .agg(F.sum(M.cents(amount_col)).alias("rev_c"))
-            .withColumn(
-                "delta_key",
-                F.concat_ws("|", F.lit("rev"), F.lit(str(batch_id)),
-                            F.col("o_year"), F.col("o_month")),
-            )
-        )
-        upsert_batch(delta, batch_id, table_dir, key="delta_key")
-
-    return start_batch_stream(orders, checkpoint, _merge)
+    micro-batch appends its own (o_year, o_month, rev_c) partial sums.
+    Revenue sums are SUMS — non-absorbing, a replayed merge would
+    double-count — so the stream appends under its batch token; the
+    read side sum-merges (monthly_rev_from_state) and recovers the
+    batch _monthly_rev aggregate's exact integer cents, so every
+    forecaster served from state (forecast_from_state) is
+    bit-identical to its batch twin. State grows O(batches × months)
+    — a few rows per batch regardless of stream volume;
+    snapshot.compact reclaims file count."""
+    return _append_stream(
+        orders, table_dir, checkpoint,
+        lambda b: b.groupBy(
+            F.year(date_col).cast("long").alias("o_year"),
+            F.month(date_col).cast("long").alias("o_month"),
+        ).agg(F.sum(M.cents(amount_col)).alias("rev_c")),
+    )
 
 
 def monthly_rev_from_state(spark: SparkSession,
@@ -1053,13 +961,7 @@ def monthly_rev_from_state(spark: SparkSession,
     """The calendar-bounded monthly revenue frame recovered from the
     maintained deltas — exact integer cents, identical to the batch
     _monthly_rev aggregate over the same orders."""
-
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(f"no published monthly state at {table_dir}")
-    return deltas.groupBy("o_year", "o_month").agg(
-        F.sum("rev_c").alias("rev_c")
-    )
+    return sum_state(spark, table_dir, ["o_year", "o_month"], ["rev_c"])
 
 
 def forecast_from_state(spark: SparkSession, table_dir: str,
@@ -1158,9 +1060,7 @@ def kmv_from_state(spark: SparkSession, state_path: str,
     """Distinct-count estimates served from the maintained KMV state:
     (k-1)/h_k, or the exact member count while the sketch still holds
     every distinct hash (m < k) — the batch twin's estimator."""
-    st = read_latest(spark, state_path)
-    if st is None:
-        raise ValueError(f"no published KMV state at {state_path}")
+    st = sketch_state(spark, state_path)
     est = F.when(
         F.size("mins") < k, F.size("mins").cast("double")
     ).otherwise(
@@ -1209,10 +1109,7 @@ def bloom_filter_from_state(spark: SparkSession, state_path: str,
     STREAM-MAINTAINED filter without touching the build corpus."""
     from ..operators.skew import bloom_bits_dense
 
-    st = read_latest(spark, state_path)
-    if st is None:
-        raise ValueError(f"no published Bloom state at {state_path}")
-    return bloom_bits_dense(st, m_bits)
+    return bloom_bits_dense(sketch_state(spark, state_path), m_bits)
 
 
 def stream_cbloom_upsert(keys: DataFrame, table_dir: str,
@@ -1225,29 +1122,20 @@ def stream_cbloom_upsert(keys: DataFrame, table_dir: str,
     an insert, −1 for a delete via the ±1 ``sign_col``; feed it from
     a CDC/change feed — deleting a never-inserted key corrupts any
     counting filter, the standard caveat). Counters are SUMS —
-    non-absorbing, a replayed merge would double-count — so
-    idempotence comes from the manifest batch token exactly as in
-    stream_cms_upsert; the read side sum-merges and keeps positions
-    with cnt > 0, which are BIT-FOR-BIT the plain bloom positions
-    over the SURVIVING key multiset — so the served filter never
-    degrades as deletes accumulate and needs no rebuild. State grows
-    O(batches × touched positions), bounded by m_bits per batch;
-    snapshot.compact reclaims file count."""
+    non-absorbing, a replayed merge would double-count — so the
+    stream appends under its batch token; the read side sum-merges
+    and keeps positions with cnt > 0, which are BIT-FOR-BIT the plain
+    bloom positions over the SURVIVING key multiset — so the served
+    filter never degrades as deletes accumulate and needs no rebuild.
+    State grows O(batches × touched positions), bounded by m_bits per
+    batch; snapshot.compact reclaims file count."""
     from ..operators.skew import bloom_pos_counts
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        delta = bloom_pos_counts(
-            batch_df, key_col, m_bits, k_hashes, sign_col=sign_col
-        ).withColumn(
-            "delta_key",
-            F.concat_ws("|", F.lit("cb"), F.lit(str(batch_id)),
-                        F.col("pos")),
-        )
-        upsert_batch(delta, batch_id, table_dir, key="delta_key")
-
-    return start_batch_stream(keys, checkpoint, _merge)
+    return _append_stream(
+        keys, table_dir, checkpoint,
+        lambda b: bloom_pos_counts(
+            b, key_col, m_bits, k_hashes, sign_col=sign_col),
+    )
 
 
 def cbloom_filter_from_state(spark: SparkSession, table_dir: str,
@@ -1262,11 +1150,7 @@ def cbloom_filter_from_state(spark: SparkSession, table_dir: str,
         bloom_bits_dense, bloom_words_from_counts,
     )
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(
-            f"no published counting-Bloom state at {table_dir}")
-    counts = deltas.groupBy("pos").agg(F.sum("cnt").alias("cnt"))
+    counts = sum_state(spark, table_dir, ["pos"], ["cnt"])
     return bloom_bits_dense(bloom_words_from_counts(counts), m_bits)
 
 
@@ -1329,9 +1213,7 @@ def topk_from_state(spark: SparkSession, state_path: str,
     the grouped_topk output shape (group cols + payload cols +
     1-based rank), bit-identical to the batch kernel over the same
     rows by the bottom-k merge argument on stream_topk_upsert."""
-    st = read_latest(spark, state_path)
-    if st is None:
-        raise ValueError(f"no published top-k state at {state_path}")
+    st = sketch_state(spark, state_path)
     group_cols = [c for c in st.columns if c != "_tk"]
     return st.select(
         *group_cols, F.posexplode("_tk").alias("_pos", "_it")
@@ -1356,10 +1238,7 @@ def kmv_overlap_from_state(spark: SparkSession, state_path: str,
     BEFORE truncation)."""
     from ..operators.relational14 import kmv_pair_overlap
 
-    st = read_latest(spark, state_path)
-    if st is None:
-        raise ValueError(f"no published KMV state at {state_path}")
-    return kmv_pair_overlap(st, k=k)
+    return kmv_pair_overlap(sketch_state(spark, state_path), k=k)
 
 
 def bm25_from_index(spark: SparkSession, table_dir: str,
@@ -1415,31 +1294,18 @@ def stream_kanon_counts(docs: DataFrame, table_dir: str,
     deltas on the snapshot protocol.
 
     Counters are SUMS — non-absorbing, a replayed count-merge would
-    double-count — so idempotence comes from the manifest batch token
-    exactly as in stream_cms_upsert / stream_classifier_counts; the
+    double-count — so the stream appends under its batch token; the
     read side (kanon_from_state) sum-merges per class, recovering the
     exact corpus class sizes, then runs the shared kanon_dist kernel
     — output bit-identical to batch docs_k_anonymity over the same
-    documents. Delta key is namespaced token-first
-    ('ka|<batch>|<lang>|<source>|<bucket>') per the
-    stream_moments_upsert key rule. State grows O(batches x classes);
-    snapshot.compact reclaims file count when wanted."""
+    documents. State grows O(batches x classes); snapshot.compact
+    reclaims file count when wanted."""
     from ..operators.relational15 import KANON_BUCKET_CHARS, kanon_classes
 
     bc = KANON_BUCKET_CHARS if bucket_chars is None else int(bucket_chars)
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        delta = kanon_classes(batch_df, bc).withColumn(
-            "delta_key",
-            F.concat_ws("|", F.lit("ka"), F.lit(str(batch_id)),
-                        F.col("lang"), F.col("source"),
-                        F.col("len_bucket")),
-        )
-        upsert_batch(delta, batch_id, table_dir, key="delta_key")
-
-    return start_batch_stream(docs, checkpoint, _merge)
+    return _append_stream(docs, table_dir, checkpoint,
+                          lambda b: kanon_classes(b, bc))
 
 
 def kanon_from_state(spark: SparkSession, table_dir: str,
@@ -1451,14 +1317,8 @@ def kanon_from_state(spark: SparkSession, table_dir: str,
     without touching a single document."""
     from ..operators.relational15 import KANON_RISK_K, kanon_dist
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(
-            f"no published k-anonymity state at {table_dir}")
-    classes = (
-        deltas.groupBy("lang", "source", "len_bucket")
-        .agg(F.sum("k").alias("k"))
-    )
+    classes = sum_state(
+        spark, table_dir, ["lang", "source", "len_bucket"], ["k"])
     return kanon_dist(
         classes, KANON_RISK_K if risk_k is None else int(risk_k)
     )
@@ -1471,25 +1331,13 @@ def stream_sourcelen_counts(docs: DataFrame, table_dir: str,
     (relational15.ks_counts), so the drift monitor runs daily from
     O(sources x distinct-lengths) state instead of a corpus scan.
 
-    Counters are SUMS (non-absorbing): idempotence comes from the
-    manifest batch token, the stream_classifier_counts pattern; the
-    read side (ks_from_state) sum-merges and runs the shared
-    ks_from_counts kernel — output bit-identical to batch
-    docs_ks_source_drift over the same documents. Delta key is
-    namespaced token-first ('kl|<batch>|<source>|<x>')."""
+    Counters are SUMS (non-absorbing): the stream appends under its
+    batch token; the read side (ks_from_state) sum-merges and runs
+    the shared ks_from_counts kernel — output bit-identical to batch
+    docs_ks_source_drift over the same documents."""
     from ..operators.relational15 import ks_counts
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        delta = ks_counts(batch_df).withColumn(
-            "delta_key",
-            F.concat_ws("|", F.lit("kl"), F.lit(str(batch_id)),
-                        F.col("source"), F.col("x")),
-        )
-        upsert_batch(delta, batch_id, table_dir, key="delta_key")
-
-    return start_batch_stream(docs, checkpoint, _merge)
+    return _append_stream(docs, table_dir, checkpoint, ks_counts)
 
 
 def ks_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
@@ -1500,12 +1348,8 @@ def ks_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     docs_ks_source_drift over the same corpus, corpus-free."""
     from ..operators.relational15 import ks_from_counts
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(
-            f"no published source-length state at {table_dir}")
     return ks_from_counts(
-        deltas.groupBy("source", "x").agg(F.sum("c").alias("c"))
+        sum_state(spark, table_dir, ["source", "x"], ["c"])
     )
 
 
@@ -1518,12 +1362,8 @@ def ad_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     docs_ad_source_drift over the same corpus, corpus-free."""
     from ..operators.relational15 import ad_from_counts
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(
-            f"no published source-length state at {table_dir}")
     return ad_from_counts(
-        deltas.groupBy("source", "x").agg(F.sum("c").alias("c"))
+        sum_state(spark, table_dir, ["source", "x"], ["c"])
     )
 
 
@@ -1534,25 +1374,13 @@ def stream_daily_counts(events: DataFrame, table_dir: str,
     (relational15.daily_counts), so "is traffic weekly-periodic" is
     answered from O(span-days) state instead of a corpus scan.
 
-    Counters are SUMS (non-absorbing): idempotence comes from the
-    manifest batch token, the stream_classifier_counts pattern; the
-    read side (acf_from_state) sum-merges per day and runs the shared
-    acf_from_daily kernel — output bit-identical to batch events_acf
-    over the same events. Delta key is namespaced token-first
-    ('dc|<batch>|<day>')."""
+    Counters are SUMS (non-absorbing): the stream appends under its
+    batch token; the read side (acf_from_state) sum-merges per day
+    and runs the shared acf_from_daily kernel — output bit-identical
+    to batch events_acf over the same events."""
     from ..operators.relational15 import daily_counts
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        delta = daily_counts(batch_df).withColumn(
-            "delta_key",
-            F.concat_ws("|", F.lit("dc"), F.lit(str(batch_id)),
-                        F.col("d")),
-        )
-        upsert_batch(delta, batch_id, table_dir, key="delta_key")
-
-    return start_batch_stream(events, checkpoint, _merge)
+    return _append_stream(events, table_dir, checkpoint, daily_counts)
 
 
 def ldiv_from_state(spark: SparkSession, table_dir: str,
@@ -1565,14 +1393,8 @@ def ldiv_from_state(spark: SparkSession, table_dir: str,
     docs_l_diversity over the same corpus, corpus-free."""
     from ..operators.relational15 import LDIV_RISK_L, ldiv_dist
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(
-            f"no published k-anonymity state at {table_dir}")
-    classes = (
-        deltas.groupBy("lang", "source", "len_bucket")
-        .agg(F.sum("k").alias("k"))
-    )
+    classes = sum_state(
+        spark, table_dir, ["lang", "source", "len_bucket"], ["k"])
     return ldiv_dist(
         classes, LDIV_RISK_L if risk_l is None else int(risk_l)
     )
@@ -1587,11 +1409,8 @@ def mk_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     the same events, corpus-free."""
     from ..operators.relational16 import mannkendall_from_daily
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(f"no published daily-count state at {table_dir}")
     return mannkendall_from_daily(
-        spark, deltas.groupBy("d").agg(F.sum("c").alias("c"))
+        spark, sum_state(spark, table_dir, ["d"], ["c"])
     )
 
 
@@ -1604,12 +1423,8 @@ def kw_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     corpus-free."""
     from ..operators.relational16 import kw_from_counts
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(
-            f"no published value-count state at {table_dir}")
     return kw_from_counts(
-        deltas.groupBy("event_type", "vc").agg(F.sum("c").alias("c"))
+        sum_state(spark, table_dir, ["event_type", "vc"], ["c"])
     )
 
 
@@ -1623,13 +1438,8 @@ def cramersv_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     corpus-free."""
     from ..operators.relational16 import cramers_from_classes
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(
-            f"no published k-anonymity state at {table_dir}")
     return cramers_from_classes(
-        deltas.groupBy("lang", "source", "len_bucket")
-        .agg(F.sum("k").alias("k"))
+        sum_state(spark, table_dir, ["lang", "source", "len_bucket"], ["k"])
     )
 
 
@@ -1643,13 +1453,9 @@ def benford_mad_from_state(spark: SparkSession,
     corpus, corpus-free."""
     from ..operators.relational17 import benford_mad_from_counts
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(
-            f"no published digit-count state at {table_dir}")
     return benford_mad_from_counts(
         spark,
-        deltas.groupBy("digit").agg(F.sum("observed").alias("observed")),
+        sum_state(spark, table_dir, ["digit"], ["observed"]),
     )
 
 
@@ -1662,12 +1468,8 @@ def js_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     docs_js_divergence over the same corpus, corpus-free."""
     from ..operators.relational17 import js_from_counts
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(
-            f"no published source-length state at {table_dir}")
     return js_from_counts(
-        deltas.groupBy("source", "x").agg(F.sum("c").alias("c"))
+        sum_state(spark, table_dir, ["source", "x"], ["c"])
     )
 
 
@@ -1681,13 +1483,8 @@ def theilsu_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     corpus-free."""
     from ..operators.relational17 import theilsu_from_classes
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(
-            f"no published k-anonymity state at {table_dir}")
     return theilsu_from_classes(
-        deltas.groupBy("lang", "source", "len_bucket")
-        .agg(F.sum("k").alias("k"))
+        sum_state(spark, table_dir, ["lang", "source", "len_bucket"], ["k"])
     )
 
 
@@ -1700,11 +1497,8 @@ def spearman_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     events_spearman_acf over the same events, corpus-free."""
     from ..operators.relational17 import spearman_acf_from_daily
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(f"no published daily-count state at {table_dir}")
     return spearman_acf_from_daily(
-        spark, deltas.groupBy("d").agg(F.sum("c").alias("c"))
+        spark, sum_state(spark, table_dir, ["d"], ["c"])
     )
 
 
@@ -1718,11 +1512,8 @@ def theilsen_from_state(spark: SparkSession,
     events, corpus-free."""
     from ..operators.relational15 import theilsen_from_daily
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(f"no published daily-count state at {table_dir}")
     return theilsen_from_daily(
-        spark, deltas.groupBy("d").agg(F.sum("c").alias("c"))
+        spark, sum_state(spark, table_dir, ["d"], ["c"])
     )
 
 
@@ -1735,12 +1526,8 @@ def acf_from_state(spark: SparkSession, table_dir: str,
     corpus-free."""
     from ..operators.relational15 import ACF_MAX_LAG, acf_from_daily
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(
-            f"no published daily-count state at {table_dir}")
     return acf_from_daily(
-        spark, deltas.groupBy("d").agg(F.sum("c").alias("c")),
+        spark, sum_state(spark, table_dir, ["d"], ["c"]),
         ACF_MAX_LAG if max_lag is None else int(max_lag),
     )
 
@@ -1750,22 +1537,13 @@ def stream_digit_counts(events: DataFrame, table_dir: str,
     """Maintain the Benford first-digit counters over an EVENT STREAM
     (relational15.benford_digit_counts) — the fabricated-data screen
     kept current from at most 9 counter rows per batch. Counters are
-    SUMS (non-absorbing): manifest batch-token idempotence; serve
-    with benford_from_state, bit-identical to batch events_benford.
-    Delta key is namespaced token-first ('bf|<batch>|<digit>')."""
+    SUMS (non-absorbing): the stream appends under its batch token;
+    serve with benford_from_state, bit-identical to batch
+    events_benford."""
     from ..operators.relational15 import benford_digit_counts
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        delta = benford_digit_counts(batch_df).withColumn(
-            "delta_key",
-            F.concat_ws("|", F.lit("bf"), F.lit(str(batch_id)),
-                        F.col("digit")),
-        )
-        upsert_batch(delta, batch_id, table_dir, key="delta_key")
-
-    return start_batch_stream(events, checkpoint, _merge)
+    return _append_stream(events, table_dir, checkpoint,
+                          benford_digit_counts)
 
 
 def benford_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
@@ -1775,13 +1553,9 @@ def benford_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     events_benford over the same corpus, corpus-free."""
     from ..operators.relational15 import benford_from_counts
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(
-            f"no published digit-count state at {table_dir}")
     return benford_from_counts(
         spark,
-        deltas.groupBy("digit").agg(F.sum("observed").alias("observed")),
+        sum_state(spark, table_dir, ["digit"], ["observed"]),
     )
 
 
@@ -1824,10 +1598,7 @@ def km_from_state(spark: SparkSession, state_path: str,
     (shared km_table kernel), without touching a single line item."""
     from ..operators.relational15 import km_table
 
-    st = read_latest(spark, state_path)
-    if st is None:
-        raise ValueError(f"no published last-ship state at {state_path}")
-    return km_table(spark, orders, st)
+    return km_table(spark, orders, sketch_state(spark, state_path))
 
 
 def logrank_from_state(spark: SparkSession, state_path: str,
@@ -1842,10 +1613,8 @@ def logrank_from_state(spark: SparkSession, state_path: str,
     single line item."""
     from ..operators.relational16 import logrank_pairs, surv_removals
 
-    st = read_latest(spark, state_path)
-    if st is None:
-        raise ValueError(f"no published last-ship state at {state_path}")
-    return logrank_pairs(surv_removals(orders, st, "o_orderpriority"))
+    return logrank_pairs(surv_removals(
+        orders, sketch_state(spark, state_path), "o_orderpriority"))
 
 
 def na_from_state(spark: SparkSession, state_path: str,
@@ -1860,9 +1629,7 @@ def na_from_state(spark: SparkSession, state_path: str,
     from ..operators.relational16 import surv_removals
     from ..operators.relational17 import na_table
 
-    st = read_latest(spark, state_path)
-    if st is None:
-        raise ValueError(f"no published last-ship state at {state_path}")
+    st = sketch_state(spark, state_path)
     per = (
         surv_removals(orders, st, "o_orderpriority")
         .groupBy("t")
@@ -1879,24 +1646,13 @@ def stream_mw_counts(events: DataFrame, table_dir: str,
     the nonparametric test family is served from state exactly like
     the parametric one (stream_moments_upsert).
 
-    Counters are SUMS (non-absorbing): manifest batch-token
-    idempotence; serve with mw_from_state, bit-identical to batch
-    events_mannwhitney. Delta key is namespaced token-first
-    ('mw|<batch>|<type>|<vc>'). State grows O(batches x types x
-    distinct cents values); snapshot.compact reclaims file count."""
+    Counters are SUMS (non-absorbing): the stream appends under its
+    batch token; serve with mw_from_state, bit-identical to batch
+    events_mannwhitney. State grows O(batches x types x distinct
+    cents values); snapshot.compact reclaims file count."""
     from ..operators.relational15 import mw_counts
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        delta = mw_counts(batch_df).withColumn(
-            "delta_key",
-            F.concat_ws("|", F.lit("mw"), F.lit(str(batch_id)),
-                        F.col("event_type"), F.col("vc")),
-        )
-        upsert_batch(delta, batch_id, table_dir, key="delta_key")
-
-    return start_batch_stream(events, checkpoint, _merge)
+    return _append_stream(events, table_dir, checkpoint, mw_counts)
 
 
 def mw_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
@@ -1906,12 +1662,8 @@ def mw_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     events_mannwhitney over the same corpus, corpus-free."""
     from ..operators.relational15 import mw_from_counts
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(
-            f"no published value-count state at {table_dir}")
     return mw_from_counts(
-        deltas.groupBy("event_type", "vc").agg(F.sum("c").alias("c"))
+        sum_state(spark, table_dir, ["event_type", "vc"], ["c"])
     )
 
 
@@ -1924,12 +1676,8 @@ def cliffs_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     events_cliffs_delta over the same corpus, corpus-free."""
     from ..operators.relational18 import cliffs_from_counts
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(
-            f"no published value-count state at {table_dir}")
     return cliffs_from_counts(
-        deltas.groupBy("event_type", "vc").agg(F.sum("c").alias("c"))
+        sum_state(spark, table_dir, ["event_type", "vc"], ["c"])
     )
 
 
@@ -1943,13 +1691,8 @@ def gk_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     docs_gk_lambda over the same corpus, corpus-free."""
     from ..operators.relational18 import gk_lambda_from_classes
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(
-            f"no published k-anonymity state at {table_dir}")
     return gk_lambda_from_classes(
-        deltas.groupBy("lang", "source", "len_bucket")
-        .agg(F.sum("k").alias("k"))
+        sum_state(spark, table_dir, ["lang", "source", "len_bucket"], ["k"])
     )
 
 
@@ -1963,11 +1706,8 @@ def runs_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     corpus-free."""
     from ..operators.relational18 import runs_from_daily
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(f"no published daily-count state at {table_dir}")
     return runs_from_daily(
-        spark, deltas.groupBy("d").agg(F.sum("c").alias("c"))
+        spark, sum_state(spark, table_dir, ["d"], ["c"])
     )
 
 
@@ -1981,12 +1721,8 @@ def cvm_from_state(spark: SparkSession, table_dir: str) -> DataFrame:
     corpus, corpus-free."""
     from ..operators.relational18 import cvm_from_counts
 
-    deltas = read_latest(spark, table_dir)
-    if deltas is None:
-        raise ValueError(
-            f"no published source-length state at {table_dir}")
     return cvm_from_counts(
-        deltas.groupBy("source", "x").agg(F.sum("c").alias("c"))
+        sum_state(spark, table_dir, ["source", "x"], ["c"])
     )
 
 
@@ -2003,7 +1739,5 @@ def rmst_from_state(spark: SparkSession, state_path: str,
     from ..operators.relational15 import km_table
     from ..operators.relational18 import rmst_from_curve
 
-    st = read_latest(spark, state_path)
-    if st is None:
-        raise ValueError(f"no published last-ship state at {state_path}")
-    return rmst_from_curve(km_table(spark, orders, st))
+    return rmst_from_curve(
+        km_table(spark, orders, sketch_state(spark, state_path)))

@@ -2017,8 +2017,8 @@ def test_check_constraints_enforced_on_ingest(spark, tmp_path):
     import pytest as _pt
 
     from jobsity_data_pipeline_spark.sources.snapshot import (
-        drop_constraint, latest_manifest, merge_into, read_latest,
-        set_constraint, upsert_batch,
+        append_batch, drop_constraint, latest_manifest, merge_into,
+        read_latest, set_constraint, upsert_batch,
     )
 
     schema = "id long, v string, price double"
@@ -2065,6 +2065,17 @@ def test_check_constraints_enforced_on_ingest(spark, tmp_path):
     # adding a constraint the EXISTING data violates fails loudly
     with _pt.raises(ValueError, match="v_short"):
         set_constraint(spark, table, "v_short", "length(v) > 5")
+    v_ins = latest_manifest(table)["version"]
+
+    # append_batch enforces them too: no publish, batch id not burned
+    with _pt.raises(ValueError, match="price_nonneg"):
+        append_batch(
+            spark.createDataFrame([(6, "f", -4.0)], schema), 5, table)
+    assert latest_manifest(table)["version"] == v_ins
+    assert append_batch(
+        spark.createDataFrame([(6, "f", 4.0)], schema), 5, table,
+    ) == "published"
+    assert read_latest(spark, table).count() == 5
 
     # dropped -> the same violating batch now lands
     drop_constraint(table, "price_nonneg")

@@ -2234,7 +2234,8 @@ def test_stream_mw_counts_serves_batch_ranksum_bitexact(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "maintainer", ["stream_decayed_upsert", "stream_hll_upsert"]
+    "maintainer", ["stream_decayed_upsert", "stream_hll_upsert",
+                   "stream_hdr_deltas", "stream_daily_counts"]
 )
 def test_fold_replay_after_crash_is_exactly_once(spark, tmp_path,
                                                  maintainer):
@@ -2289,3 +2290,84 @@ def test_fold_replay_after_crash_is_exactly_once(spark, tmp_path,
     assert rows() == first
     tokens = [h["batch"] for h in history(state)]
     assert len(tokens) == len(set(tokens)) == 2
+
+
+def test_counter_sink_reads_no_prior_state(spark, tmp_path, monkeypatch):
+    """A counter micro-batch is a blind append under its batch token:
+    four micro-batches publish four versions without reading any
+    prior data file, so a batch's cost does not grow with the number
+    of batches before it (a keyed upsert anti-joins the whole delta
+    history on every batch after the first)."""
+    import datetime as dt
+
+    from jobsity_data_pipeline_spark.operators.relational15 import (
+        daily_counts,
+    )
+    from jobsity_data_pipeline_spark.sources import snapshot
+
+    schema = (
+        "event_id long, ts timestamp, user_id long, event_type string,"
+        " value double, props string"
+    )
+    base = dt.datetime(2024, 1, 1)
+    src = str(tmp_path / "events")
+    for f in range(4):  # four files read one per trigger: batches 0-3
+        spark.createDataFrame(
+            [(f * 100 + i, base + dt.timedelta(days=f, minutes=i),
+              i % 23, "ab"[i % 2], float(i % 11), "{}")
+             for i in range(50)],
+            schema,
+        ).coalesce(1).write.mode("append").parquet(src)
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    calls = []
+    real = snapshot._read_files
+
+    def spy(spark_, files):
+        calls.append(list(files))
+        return real(spark_, files)
+
+    monkeypatch.setattr(snapshot, "_read_files", spy)
+    table = str(tmp_path / "daily")
+    ST.stream_daily_counts(
+        stream, table, str(tmp_path / "ckpt")).awaitTermination(120)
+
+    assert len(snapshot.history(table)) == 4
+    assert calls == []
+    want = sorted(tuple(r) for r in
+                  daily_counts(spark.read.parquet(src)).collect())
+    got = sorted(tuple(r) for r in
+                 ST.sum_state(spark, table, ["d"], ["c"]).collect())
+    assert got == want
+
+
+@pytest.mark.parametrize("reader", [
+    "hdr_from_index", "acf_from_state", "welch_from_state",
+    "kmv_from_state", "m4_from_state",
+])
+def test_state_reader_on_missing_table_names_the_path(spark, tmp_path,
+                                                      reader):
+    """A reader pointed at a table nothing has published raises a
+    ValueError naming that path, before Spark is asked to read it.
+    For m4_from_state the archetype state exists and the count table
+    is the missing one."""
+    from jobsity_data_pipeline_spark.sources.snapshot import (
+        publish_snapshot,
+    )
+
+    missing = str(tmp_path / "never_written")
+    args = (spark, missing)
+    if reader == "m4_from_state":
+        state = str(tmp_path / "m4")
+        publish_snapshot(spark.createDataFrame(
+            [("a", 0, 1, 2, (0, 0, 1), (1, 1, 2))],
+            "event_type string, bucket long, min_cents long,"
+            " max_cents long, first_k struct<us:long,id:long,c:long>,"
+            " last_k struct<us:long,id:long,c:long>",
+        ), state)
+        args = (spark, state, missing)
+    with pytest.raises(ValueError, match="never_written"):
+        getattr(ST, reader)(*args)
