@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions import money as M
 from ..functions.hashing import record_key
-from ..pipeline.trips import week_of_month
+from ..pipeline import trips as TP
 from ..session import read_table
 
 
@@ -60,44 +60,21 @@ def trip_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def weekly_avg_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     """summarized_trip_data materialized view (create_objects.sql:24-38)."""
-    trips = _events_as_trips(spark, sf_dir)
-    counted = trips.groupBy(
-        "region", week_of_month(F.col("date_time")).alias("week_of_month")
-    ).agg(F.count("*").alias("cnt"))
-    return counted.groupBy("region", "week_of_month").agg(
-        F.ceil(F.avg("cnt")).cast("long").alias("weekly_avg")
-    )
+    return TP.weekly_avg_by_region(_events_as_trips(spark, sf_dir),
+                                   ts_col="date_time")
 
 
 def regions_for_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """cheap_mobile_datasource_regions.sql with datasource := 'purchase'."""
-    trips = _events_as_trips(spark, sf_dir)
-    return (
-        trips.where(F.col("datasource") == "purchase")
-        .groupBy("region")
-        .count()
-        .select("region")
-    )
+    return TP.regions_for_datasource(_events_as_trips(spark, sf_dir),
+                                     "purchase")
 
 
 def latest_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """latest_datasource.sql: datasource of the most recent trip within
-    the two most recurring regions. Top-2 set and the scalar max-ts are
-    broadcast — the fact table is scanned, never repartitioned."""
-    trips = _events_as_trips(spark, sf_dir)
-    top2 = (
-        trips.groupBy(F.col("region").alias("_r"))
-        .agg(F.count("*").alias("appearance"))
-        .orderBy(F.col("appearance").desc(), F.col("_r"))
-        .limit(2)
-        .select("_r")
-    )
-    in_top = trips.join(F.broadcast(top2), trips["region"] == top2["_r"], "inner")
-    last = in_top.agg(F.max("date_time").alias("_last"))
-    return (
-        trips.join(F.broadcast(last), trips["date_time"] == F.col("_last"), "inner")
-        .select("datasource")
-    )
+    the two most recurring regions."""
+    return TP.latest_datasource(_events_as_trips(spark, sf_dir),
+                                ts_col="date_time")
 
 
 def trip_grouping_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -121,7 +98,7 @@ def bbox_weekly_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     trips = _events_as_trips(spark, sf_dir)
     counted = (
         trips.where((F.col("value") >= 10.0) & (F.col("value") <= 100.0))
-        .groupBy(week_of_month(F.col("date_time")).alias("week_of_month"))
+        .groupBy(TP.week_of_month(F.col("date_time")).alias("week_of_month"))
         .agg(F.count("*").alias("cnt"))
     )
     return counted.agg(F.round(F.avg("cnt"), 4).alias("weekly_avg_trips"))

@@ -4,11 +4,11 @@ Reference flow (populate_postgres.sql / create_objects.sql):
   CSV -> staging table -> trip_key = concat(all cols) -> upsert into
   hist with ON CONFLICT (trip_key) DO NOTHING -> SQL analytics.
 
-Spark-first translation: the "staging table" is just the source scan,
-the unique-index upsert is a left-anti join on the hashed key (one
-shuffle on trip_key; sources/snapshot.upsert_batch is the committed
-form), and the "materialized view" is a plan the caller
-can write out or register — Catalyst handles the rest.
+Spark-first translation: the "staging table" is just the source scan
+keyed by ``with_trip_key``, the unique-index upsert is
+sources/snapshot.upsert_batch (a left-anti join on the hashed key
+against the committed table), and the "materialized view" is a plan
+the caller can write out or register — Catalyst handles the rest.
 """
 
 from __future__ import annotations
@@ -45,21 +45,6 @@ def with_trip_key(trips: DataFrame) -> DataFrame:
         "trip_key",
         record_key("region", "origin_coord", "destination_coord", "datetime", "datasource"),
     )
-
-
-def dedup_staging(staging: DataFrame) -> DataFrame:
-    """Exact in-batch dedup on trip_key (keep one row per key)."""
-    return staging.dropDuplicates(["trip_key"])
-
-
-def upsert(hist: DataFrame, staging: DataFrame) -> DataFrame:
-    """ON CONFLICT (trip_key) DO NOTHING (populate_postgres.sql:16-31).
-
-    Existing hist rows win; only unseen keys are appended. Left-anti
-    join shuffles both sides on trip_key once.
-    """
-    new_rows = dedup_staging(staging).join(hist.select("trip_key"), "trip_key", "left_anti")
-    return hist.unionByName(new_rows)
 
 
 def week_of_month(ts: Column) -> Column:

@@ -29,6 +29,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
 import uuid
 from typing import Any, Callable, NamedTuple
@@ -326,7 +327,8 @@ def upsert_batch(batch: DataFrame, batch_id: int, table_dir: str,
                  extra: dict | None = None) -> str:
     """Idempotent keyed append: anti-join the batch against the current
     version's keys, write ONLY the new rows as one data file set, and
-    publish prior-files + new-files as the next version.
+    publish prior-files + new-files as the next version (just the prior
+    files, under this batch's token, when no row is new).
 
     Exactly-once under retry: if any manifest already carries this
     ``batch_id``, the whole call is a no-op — a batch replayed after a
@@ -368,8 +370,15 @@ def upsert_batch(batch: DataFrame, batch_id: int, table_dir: str,
         # min/max paid once per file at write time, carried forward by
         # reference with the prior files; deletes and point reads then
         # prune without any footer IO
-        return _Commit(new=files, keep=prior,
-                       stats={key: _file_stats(files, key) or {}},
+        stats = _file_stats(files, key) or {}
+        if prior and stats and all(s == _EMPTY_STATS
+                                   for s in stats.values()):
+            # the anti-join left nothing: publish the token over the
+            # kept files and drop the 0-row file set (a first version
+            # keeps its typed empty file, so empty reads stay typed)
+            shutil.rmtree(os.path.dirname(files[0]))
+            files, stats = [], {}
+        return _Commit(new=files, keep=prior, stats={key: stats},
                        extra=extra or {}, result=lambda v: "published")
 
     return _commit(table_dir, "upsert_batch", f"batch{batch_id}", plan,

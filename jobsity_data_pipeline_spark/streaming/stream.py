@@ -2,11 +2,12 @@
 
 The reference's ingest is a batch cron job (Makefile `all`), with the
 README noting Spark UI as the non-polling status channel. Re-expressed
-for streams: a file-source readStream feeds the same trip_key dedup and
-weekly aggregation as declarative streaming plans —
-``dropDuplicatesWithinWatermark`` gives the staging->hist ON CONFLICT
-DO NOTHING semantics with bounded state, and foreachBatch applies the
-idempotent upsert to the hist store. Progress (StreamingQuery.status /
+for streams: a file-source readStream is keyed with the batch
+pipeline's trip_key and feeds foreachBatch -> snapshot.upsert_batch,
+whose anti-join against the whole table is the one dedup — the
+staging->hist ON CONFLICT DO NOTHING semantics, late arrivals
+included, with no stream state. Windowed aggregations run as
+declarative streaming plans. Progress (StreamingQuery.status /
 lastProgress) replaces UI polling.
 """
 
@@ -16,8 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import money as M
-from ..functions.hashing import record_key
-from ..pipeline.trips import TRIPS_SCHEMA
+from ..pipeline.trips import TRIPS_SCHEMA, with_trip_key
 from ..sources.snapshot import (
     append_batch, fold_batch, read_latest, start_batch_stream, upsert_batch,
 )
@@ -37,19 +37,13 @@ def with_event_time(trips: DataFrame) -> DataFrame:
     return trips.withColumn("event_time", F.col("datetime").cast("timestamp"))
 
 
-def dedup_stream(trips: DataFrame, watermark: str = "1 day") -> DataFrame:
-    """Streaming trip_key dedup with bounded state: duplicates arriving
-    within the watermark horizon are dropped exactly like the unique
-    index in populate_postgres.sql:16-31; state older than the
-    watermark is evicted (unbounded-state dedup cannot run forever)."""
-    keyed = with_event_time(trips).withColumn(
-        "trip_key",
-        record_key("region", "origin_coord", "destination_coord", "datetime",
-                   "datasource"),
-    )
-    return keyed.withWatermark("event_time", watermark).dropDuplicatesWithinWatermark(
-        ["trip_key"]
-    )
+def dedup_stream(trips: DataFrame) -> DataFrame:
+    """Key the trips stream with trip_key (populate_postgres.sql:10-13).
+    This keys rows and holds no state; the table dedups them —
+    upsert_batch drops in-batch duplicates and anti-joins the rest
+    against the full history (ON CONFLICT DO NOTHING, however late a
+    duplicate arrives)."""
+    return with_trip_key(trips)
 
 
 def windowed_trip_counts(trips: DataFrame, window: str = "1 hour",
@@ -202,11 +196,7 @@ def stream_trip_chains(trips: DataFrame, horizon: str = "1 hour",
     if how not in ("inner", "left_outer"):
         raise ValueError(f"stream_trip_chains supports inner|left_outer, got {how!r}")
     horizon_s = parse_duration_seconds(horizon)
-    base = with_event_time(trips).withColumn(
-        "trip_key",
-        record_key("region", "origin_coord", "destination_coord", "datetime",
-                   "datasource"),
-    )
+    base = with_trip_key(with_event_time(trips))
     a = base.withWatermark("event_time", watermark).select(
         "region",
         F.col("event_time").alias("first_time"),

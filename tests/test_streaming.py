@@ -1,6 +1,6 @@
-"""Structured Streaming tests: file-source ingest, watermark dedup,
-windowed aggregation, foreachBatch upsert — all with availableNow
-triggers so they run to completion on the test fixtures.
+"""Structured Streaming tests: file-source ingest keyed into the
+table's dedup, windowed aggregation, foreachBatch upsert — all with
+availableNow triggers so they run to completion on the test fixtures.
 """
 
 from __future__ import annotations
@@ -36,18 +36,24 @@ def src_dir(tmp_path):
     return d
 
 
-def _run_upsert(spark, src_dir, tmp_path):
+def _stream_trips(spark, src_dir, tmp_path):
+    """One availableNow run of the trips stream into ``tmp_path/hist``
+    (checkpoint ``tmp_path/ckpt``); returns the finished query."""
     from jobsity_data_pipeline_spark.sources.snapshot import (
         start_snapshot_upsert,
     )
 
-    hist = str(tmp_path / "hist")
-    ckpt = str(tmp_path / "ckpt")
     trips = ST.read_trips_stream(spark, str(src_dir))
-    deduped = ST.dedup_stream(trips)
-    q = start_snapshot_upsert(deduped, hist, ckpt)
+    q = start_snapshot_upsert(ST.dedup_stream(trips), str(tmp_path / "hist"),
+                              str(tmp_path / "ckpt"))
     q.awaitTermination(120)
-    return hist
+    assert q.exception() is None
+    return q
+
+
+def _run_upsert(spark, src_dir, tmp_path):
+    _stream_trips(spark, src_dir, tmp_path)
+    return str(tmp_path / "hist")
 
 
 def test_stream_dedup_and_upsert(spark, src_dir, tmp_path):
@@ -65,6 +71,106 @@ def test_stream_dedup_and_upsert(spark, src_dir, tmp_path):
     got = read_latest(spark, hist)
     assert got.count() == 3
     assert got.select("trip_key").distinct().count() == 3
+
+
+def _trip(region, ts):
+    return f'{region},"POINT (14.49 50.00)","POINT (14.43 50.04)",{ts},funny_car'
+
+
+EARLY_DROP = [_trip("Prague", "2018-05-28 09:03:40"),
+              _trip("Turin", "2018-05-10 10:54:04")]
+
+
+def test_stream_late_new_trip_lands(spark, src_dir, tmp_path):
+    """A new trip weeks older than every landed one is inserted, as the
+    batch path and ON CONFLICT DO NOTHING would."""
+    from jobsity_data_pipeline_spark.sources.snapshot import read_latest
+
+    _write_csv(src_dir, "b1.csv", EARLY_DROP)
+    hist = _run_upsert(spark, src_dir, tmp_path)
+    _write_csv(src_dir, "b2.csv", [_trip("Milan", "2018-05-01 08:00:00")])
+    hist = _run_upsert(spark, src_dir, tmp_path)
+    assert read_latest(spark, hist).count() == 3
+
+
+def test_stream_late_resend_not_duplicated(spark, src_dir, tmp_path):
+    """A late re-send of a landed trip is dropped by the table's
+    anti-join, however far behind the stream it arrives."""
+    from jobsity_data_pipeline_spark.sources.snapshot import read_latest
+
+    _write_csv(src_dir, "b1.csv", EARLY_DROP)
+    hist = _run_upsert(spark, src_dir, tmp_path)
+    _write_csv(src_dir, "b2.csv", [EARLY_DROP[1]])
+    hist = _run_upsert(spark, src_dir, tmp_path)
+    got = read_latest(spark, hist)
+    assert got.count() == 2
+    assert got.select("trip_key").distinct().count() == 2
+
+
+def test_stream_crash_replay_is_exactly_once(spark, src_dir, tmp_path):
+    """A crash after the table commit but before the checkpoint commit
+    (simulated by deleting the last commit log entry) replays that
+    micro-batch on restart: its token is published, so the replay
+    skips and the restart succeeds with the rows unchanged."""
+    import os
+
+    from jobsity_data_pipeline_spark.sources.snapshot import read_latest
+
+    _write_csv(src_dir, "b1.csv", BATCH1)
+    hist = _run_upsert(spark, src_dir, tmp_path)
+    _write_csv(src_dir, "b2.csv", BATCH2)
+    hist = _run_upsert(spark, src_dir, tmp_path)
+    before = sorted(r.trip_key for r in read_latest(spark, hist).collect())
+    commits = tmp_path / "ckpt" / "commits"
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    os.remove(commits / str(last))
+    # the checksum sidecar too, or the restart trips over the stale
+    # entry instead of replaying the batch
+    os.remove(commits / f".{last}.crc")
+    hist = _run_upsert(spark, src_dir, tmp_path)
+    after = sorted(r.trip_key for r in read_latest(spark, hist).collect())
+    assert after == before and len(after) == 3
+
+
+def test_trips_stream_is_stateless_one_version_per_drop(spark, src_dir,
+                                                        tmp_path):
+    """The trips stream keeps no state store and publishes exactly one
+    table version per drop (no watermark-advancing no-data batch)."""
+    from jobsity_data_pipeline_spark.sources.snapshot import history
+
+    drops = [BATCH1, BATCH2, EARLY_DROP]
+    for i, rows in enumerate(drops):
+        _write_csv(src_dir, f"b{i}.csv", rows)
+        q = _stream_trips(spark, src_dir, tmp_path)
+        assert ST.ingest_status(q)["n_state_operators"] == 0
+    assert len(history(str(tmp_path / "hist"))) == len(drops)
+
+
+def test_duplicate_only_drop_lists_no_empty_file(spark, src_dir, tmp_path):
+    """A drop whose rows are all duplicates publishes its token as one
+    version over the unchanged file list; no version lists a 0-row
+    file. A table's first version still gets a typed file when empty."""
+    import pyarrow.parquet as pq
+
+    from jobsity_data_pipeline_spark.pipeline import trips as TP
+    from jobsity_data_pipeline_spark.sources.snapshot import (
+        history, latest_manifest, read_latest, upsert_batch,
+    )
+
+    _write_csv(src_dir, "b1.csv", BATCH1)
+    hist = _run_upsert(spark, src_dir, tmp_path)
+    files = latest_manifest(hist)["files"]
+    _write_csv(src_dir, "b2.csv", BATCH1[:2])
+    hist = _run_upsert(spark, src_dir, tmp_path)
+    assert len(history(hist)) == 2
+    assert latest_manifest(hist)["files"] == files
+    assert all(pq.ParquetFile(f).metadata.num_rows > 0 for f in files)
+
+    empty = str(tmp_path / "empty")
+    trips = TP.with_trip_key(ST.read_trips_stream(spark, str(src_dir)))
+    assert upsert_batch(spark.createDataFrame([], trips.schema), 0,
+                        empty) == "published"
+    assert read_latest(spark, empty).dtypes == trips.dtypes
 
 
 def test_windowed_counts(spark, src_dir, tmp_path):

@@ -16,6 +16,7 @@ from jobsity_data_pipeline_spark.functions.geo import (
     wkt_point_lon,
 )
 from jobsity_data_pipeline_spark.pipeline import trips as TP
+from jobsity_data_pipeline_spark.sources import snapshot as S
 
 ROWS = [
     # region, origin, destination, datetime, datasource
@@ -60,21 +61,25 @@ def test_wkt_parsing(spark):
     assert got[2].lon is None and got[2].lat is None
 
 
-def test_trip_key_deterministic_and_dedup(trips_df):
+def test_trip_key_deterministic_and_dedup(spark, trips_df, tmp_path):
     # duplicate rows share a key; distinct rows do not
     keys = [r.trip_key for r in trips_df.collect()]
     assert keys[0] == keys[4]
     assert len(set(keys)) == 5
-    assert TP.dedup_staging(trips_df).count() == 5
+    hist = str(tmp_path / "hist")
+    S.upsert_batch(trips_df, 0, hist)
+    assert S.read_latest(spark, hist).count() == 5
 
 
-def test_upsert_on_conflict_do_nothing(spark, trips_df):
-    hist = TP.dedup_staging(trips_df).limit(0)
-    first = TP.upsert(hist, trips_df)
-    assert first.count() == 5
-    # re-ingesting the same staging batch adds nothing (idempotent)
-    again = TP.upsert(first, trips_df)
-    assert again.count() == 5
+def test_upsert_on_conflict_do_nothing(spark, trips_df, tmp_path):
+    hist = str(tmp_path / "hist")
+    assert S.upsert_batch(trips_df, 0, hist) == "published"
+    assert S.read_latest(spark, hist).count() == 5
+    # re-ingesting the same staging rows as a new batch adds nothing
+    S.upsert_batch(trips_df, 1, hist)
+    assert S.read_latest(spark, hist).count() == 5
+    # a replayed batch id is a no-op (exactly-once)
+    assert S.upsert_batch(trips_df, 0, hist) == "skipped_duplicate"
 
 
 def test_weekly_avg_matches_reference_view(trips_df):
@@ -143,7 +148,7 @@ def test_read_trips_csv_roundtrip(spark, tmp_path):
     ]
 
 
-def test_reference_trips_csv_end_to_end(spark):
+def test_reference_trips_csv_end_to_end(spark, tmp_path):
     """The genuine challenge dataset (/root/reference/trips.csv, the
     file insert_postgres.py:21-23 loads) through the full pipeline:
     read -> trip_key -> idempotent upsert -> the three reference
@@ -169,10 +174,13 @@ def test_reference_trips_csv_end_to_end(spark):
     dedup = list(keyed.values())
 
     df = TP.with_trip_key(TP.read_trips_csv(spark, path))
-    hist = TP.upsert(TP.dedup_staging(df).limit(0), df)
-    assert hist.count() == len(dedup)
+    table = str(tmp_path / "hist")
+    S.upsert_batch(df, 0, table)
+    assert S.read_latest(spark, table).count() == len(dedup)
     # re-ingesting the same file adds nothing (unique-index semantics)
-    assert TP.upsert(hist, df).count() == len(dedup)
+    S.upsert_batch(df, 1, table)
+    hist = S.read_latest(spark, table)
+    assert hist.count() == len(dedup)
 
     # summarized_trip_data: inner and outer group keys coincide, so
     # ceil(avg(count)) == the per-(region, week) count
