@@ -455,156 +455,6 @@ def stream_decayed_upsert(events: DataFrame, state_path: str,
     return start_batch_stream(events, checkpoint, _merge)
 
 
-def _band_key():
-    """Content-dependent idempotence key for index band rows:
-    (doc_id, band_id, band_hash). Putting the content in the key is
-    the alternative to merge_into's content hash that change_feed's
-    key-immutability premise allows: on the MUTABLE path a re-emitted
-    doc's replacement bands carry NEW keys, so its delete_keys +
-    upsert_batch surface as delete + insert rows downstream instead of
-    an invisible in-place value change, with no content column. On the immutable
-    path, identical-text replays still dedup (same text ⇒ same hash ⇒
-    same key); a changed re-emission — outside that path's documented
-    precondition — appends fresh bands beside the stale ones rather
-    than being silently dropped."""
-    return F.concat_ws(
-        ":", F.col("doc_id"), F.col("band_id"), F.col("band_hash")
-    )
-
-
-def stream_lsh_index(docs: DataFrame, table_dir: str, checkpoint: str):
-    """Incremental MinHash-LSH index maintenance on a document stream.
-
-    Each micro-batch computes its docs' band hashes
-    (operators/dedup.minhash_bands_frame — the same rows the batch
-    index docs_minhash_bands produces) and appends ONLY new
-    (doc_id, band_id) rows to a snapshot table
-    (sources/snapshot.upsert_batch keyed on band_key), so:
-
-    - per-batch cost is O(batch), never O(index): the prior version's
-      data files are reused by reference in the new manifest;
-    - replay after a crash is exactly-once (batch-id idempotence of the
-      manifest protocol) — proven in tests by re-running the merge;
-    - the index is queryable at any time via read_latest / time travel,
-      and candidates for a probe set come from the same
-      (band_id, band_hash) equi-join the batch path uses
-      (lsh_index_candidates below).
-
-    This is the streaming rung of the dedup family: the batch index is
-    rebuilt per corpus snapshot; the stream keeps it current between
-    snapshots at delta cost. At 100 TB the band rows are ~4 per doc —
-    index growth is linear in NEW docs only.
-
-    PRECONDITION: the stream is append-only with immutable doc bodies
-    (a doc_id's text never changes once emitted). The idempotence key
-    is (doc_id, band_id, band_hash) — content-dependent, so an
-    identical-text replay dedups, but a re-emitted doc with DIFFERENT
-    text would APPEND its fresh band rows BESIDE the stale ones (both
-    generations stay probe-able and the index grows per re-emission).
-    For mutable docs use stream_lsh_index_mutable below, which
-    delete-then-appends per batch at rewrite cost on the files holding
-    those keys, so a replacement removes the stale bands.
-    """
-    from ..operators.dedup import minhash_bands_frame
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        bands = minhash_bands_frame(batch_df).withColumn(
-            "band_key", _band_key(),
-        )
-        upsert_batch(bands, batch_id, table_dir, key="band_key")
-
-    return start_batch_stream(docs, checkpoint, _merge)
-
-
-def stream_lsh_index_mutable(docs: DataFrame, table_dir: str,
-                             checkpoint: str):
-    """Mutable-document variant of stream_lsh_index: a re-emitted
-    doc_id REPLACES its band rows instead of keeping the stale ones —
-    the path a re-crawled corpus needs.
-
-    Per batch: (1) if this batch_id's token is already published, the
-    whole batch is a no-op (replay of a fully-committed batch);
-    (2) otherwise delete every index row whose doc_id is in the batch
-    (sources/snapshot.delete_keys — parquet-footer-pruned, rewriting
-    only the files that can hold those keys), then (3) append the
-    batch's fresh band rows under the batch token.
-
-    Exactly-once under replay at every crash point: a crash before the
-    append's manifest publish replays into step (2), where re-deleting
-    the same doc_ids is idempotent (the first attempt's appended rows
-    were never published), and step (3) commits once; a crash AFTER
-    the publish replays into step (1) and skips before touching
-    anything. Deletes publish their own `delete-*` manifests, so time
-    travel still shows the pre-replacement index.
-
-    Cost note: delete rewrites O(files-holding-batch-keys), not
-    O(index) — with doc_id-clustered data files (write_range_clustered)
-    a re-crawl batch touches only its own key range. The batch's doc
-    ids stay a DataFrame end to end (delete_keys' join path), so no
-    data-dependent key set ever materializes on the driver.
-    """
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        lsh_index_merge_mutable(batch_df, batch_id, table_dir)
-
-    return start_batch_stream(docs, checkpoint, _merge)
-
-
-def lsh_index_merge_mutable(batch_df: DataFrame, batch_id: int,
-                            table_dir: str) -> str:
-    """One delete-then-append merge of a mutable-doc batch (the
-    foreachBatch body of stream_lsh_index_mutable, module-level so the
-    replay path is directly testable). Returns the outcome:
-    'skipped_duplicate' | 'published' | 'empty'."""
-    from ..operators.dedup import minhash_bands_frame
-    from ..sources.snapshot import _has_token, delete_keys
-
-    if batch_df.isEmpty():
-        return "empty"
-    if _has_token(table_dir, f"batch{batch_id}"):
-        return "skipped_duplicate"  # fully committed on a prior attempt
-    spark = batch_df.sparkSession
-    # DataFrame-native delete: the batch's key set never materializes
-    # on the driver (delete_keys prunes files via a broadcast
-    # range-join and deletes via left-anti join)
-    delete_keys(
-        spark, table_dir, batch_df.select("doc_id").distinct(),
-        key="doc_id", footer_confirm=True,
-    )
-    bands = minhash_bands_frame(batch_df).withColumn(
-        "band_key", _band_key(),
-    )
-    return upsert_batch(bands, batch_id, table_dir, key="band_key")
-
-
-def lsh_index_candidates(spark: SparkSession, table_dir: str,
-                         probe_docs: DataFrame) -> DataFrame:
-    """Near-dup candidates for ``probe_docs`` against the maintained
-    index: band the probes, equi-join the bucket index on
-    (band_id, band_hash) — one shuffle, never all-pairs. Self-matches
-    drop; (doc_a < doc_b) normalizes pair order like the batch path."""
-    from ..operators.dedup import minhash_bands_frame
-
-    idx = sketch_state(spark, table_dir)
-    probes = minhash_bands_frame(probe_docs)
-    p = probes.alias("p")
-    i = idx.alias("i")
-    return (
-        p.join(
-            i,
-            (F.col("p.band_id") == F.col("i.band_id"))
-            & (F.col("p.band_hash") == F.col("i.band_hash"))
-            & (F.col("p.doc_id") != F.col("i.doc_id")),
-        )
-        .select(
-            F.least(F.col("p.doc_id"), F.col("i.doc_id")).alias("doc_a"),
-            F.greatest(F.col("p.doc_id"), F.col("i.doc_id")).alias("doc_b"),
-        )
-        .distinct()
-    )
-
-
 def ingest_status(query) -> dict:
     """Push-style ingest status for a streaming query — the engine's
     answer to the reference README's "watch the Spark UI on :8100"
@@ -660,14 +510,13 @@ def stream_bm25_postings(docs: DataFrame, table_dir: str, checkpoint: str,
     the inverted index is persisted once and kept current at delta
     cost, never re-derived per query.
 
-    Same contract as stream_lsh_index: per-batch cost is O(batch)
-    (prior data files re-used by reference in the new manifest),
-    crash replay is exactly-once via the manifest protocol's batch-id
-    idempotence, and the index is queryable at any time / any version
-    (bm25_from_index below). PRECONDITION: append-only stream with
-    immutable doc bodies — the idempotence key is doc_id, so a
-    re-emitted doc_id keeps its FIRST postings row (use the
-    delete-then-append mutable pattern if bodies can change).
+    Per-batch cost is O(batch) (prior data files re-used by reference
+    in the new manifest), crash replay is exactly-once via the
+    manifest protocol's batch-id idempotence, and the index is
+    queryable at any time (bm25_from_index below). PRECONDITION:
+    append-only stream with immutable doc bodies — the idempotence
+    key is doc_id, so a re-emitted doc_id keeps its FIRST postings
+    row.
 
     Corpus stats (n_docs, total_dl, df) are NOT maintained as state:
     they are one broadcast-size aggregate over the postings table at

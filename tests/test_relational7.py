@@ -214,50 +214,6 @@ def test_triangle_stats_exact_on_known_graph(spark):
     assert triangle_stats(star).collect()[0].triangles == 0
 
 
-def test_incremental_merge_equals_batch_recompute(spark, tmp_path):
-    from jobsity_data_pipeline_spark.operators import incremental as INC
-    from jobsity_data_pipeline_spark.session import read_table
-
-    ev = read_table(spark, SF_SMOKE, "events")
-    half1 = ev.where(F.col("event_id") % 2 == 0)
-    half2 = ev.where(F.col("event_id") % 2 == 1)
-    # maintain: state from batch 1, then merge batch 2's partials
-    state = INC.hourly_partials(half1)
-    merged = INC.merge_partials(state, INC.hourly_partials(half2))
-    # must equal the full recompute exactly
-    full = INC.hourly_partials(ev)
-    got = {
-        (r.event_type, r.h): (r.cnt, round(r.sum_value, 6))
-        for r in merged.collect()
-    }
-    want = {
-        (r.event_type, r.h): (r.cnt, round(r.sum_value, 6))
-        for r in full.collect()
-    }
-    assert got == want
-    # derived view exposes avg without storing it
-    view = INC.read_view(merged)
-    assert set(view.columns) == {"event_type", "h", "cnt", "avg_value"}
-
-
-def test_partitioned_write_prunes_partitions(spark, tmp_path):
-    from jobsity_data_pipeline_spark.session import read_table
-    from jobsity_data_pipeline_spark.sources.writers import write_partitioned
-
-    ev = read_table(spark, SF_SMOKE, "events").withColumn(
-        "d", F.to_date("ts")
-    )
-    path = str(tmp_path / "events_by_day")
-    write_partitioned(ev, path, ["d"])
-    back = spark.read.parquet(path)
-    one_day = ev.select(F.to_date(F.min("ts")).alias("d")).collect()[0].d
-    q = back.where(F.col("d") == F.lit(one_day))
-    plan = _plan(q)
-    # the day filter resolves at the partition listing, not in data scan
-    assert "PartitionFilters" in plan and str(one_day) in plan
-    assert q.count() == ev.where(F.to_date("ts") == F.lit(one_day)).count()
-
-
 def test_ann_recall_report_bounds(spark):
     from jobsity_data_pipeline_spark.operators.similarity import (
         emb_ann_recall,

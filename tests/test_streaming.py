@@ -377,210 +377,6 @@ def test_stream_stream_left_outer_emits_dead_ends(spark, src_dir, tmp_path):
     assert "Turin" in unmatched
 
 
-def test_stream_lsh_index_equals_batch_and_replays_idempotent(spark, tmp_path):
-    from jobsity_data_pipeline_spark.operators.dedup import (
-        minhash_bands_frame,
-    )
-    from jobsity_data_pipeline_spark.sources.snapshot import (
-        latest_manifest, upsert_batch,
-    )
-    from jobsity_data_pipeline_spark.streaming.stream import (
-        lsh_index_candidates, stream_lsh_index,
-    )
-
-    schema = (
-        "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    texts = [
-        "alpha beta gamma delta epsilon zeta eta theta",
-        "alpha beta gamma delta epsilon zeta eta theta",  # exact dup of 0
-        "one two three four five six seven eight nine ten",
-        "completely different tokens here with no overlap at all now",
-        "one two three four five six seven eight nine eleven",  # near-dup of 2
-        "yet another unrelated document body of words goes here",
-    ]
-    src = tmp_path / "docs"
-    src.mkdir()
-    # two files -> two micro-batches
-    for half in (0, 1):
-        rows = [
-            (i, t, "en", "test", len(t))
-            for i, t in enumerate(texts)
-            if i % 2 == half
-        ]
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-
-    table = str(tmp_path / "lsh_index")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = stream_lsh_index(stream, table, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-
-    # 1) maintained index == batch-built band table over the full corpus
-    all_docs = spark.createDataFrame(
-        [(i, t, "en", "test", len(t)) for i, t in enumerate(texts)], schema
-    )
-    want = {
-        (r.doc_id, r.band_id, r.band_hash)
-        for r in minhash_bands_frame(all_docs).collect()
-    }
-    from jobsity_data_pipeline_spark.sources.snapshot import read_latest
-
-    got_df = read_latest(spark, table)
-    got = {
-        (r.doc_id, r.band_id, r.band_hash) for r in got_df.collect()
-    }
-    assert got == want
-
-    # 2) replaying an already-applied batch is a published no-op
-    v_before = latest_manifest(table)["version"]
-    bands0 = minhash_bands_frame(all_docs.where("doc_id % 2 = 0"))
-    import pyspark.sql.functions as F
-
-    bands0 = bands0.withColumn(
-        "band_key", F.concat_ws(":", F.col("doc_id"), F.col("band_id"))
-    )
-    assert upsert_batch(bands0, 0, table, key="band_key") == "skipped_duplicate"
-    assert latest_manifest(table)["version"] == v_before
-
-    # 3) candidates from the index match the batch band self-join
-    probe = all_docs.where("doc_id IN (1, 4)")
-    cand = {
-        (r.doc_a, r.doc_b)
-        for r in lsh_index_candidates(spark, table, probe).collect()
-    }
-    assert (0, 1) in cand and (2, 4) in cand
-    # unrelated docs never become candidates
-    assert all(3 not in pair and 5 not in pair for pair in cand)
-
-
-def test_stream_lsh_index_mutable_replaces_reemitted_doc(spark, tmp_path):
-    """A re-emitted doc with CHANGED text must REPLACE its band rows
-    (the stale-band caveat of the immutable path), the maintained
-    index must equal a batch rebuild over the CURRENT corpus, replay
-    of a committed batch must be a no-op, and the mid-crash replay
-    (delete published, append not) must converge to the same state."""
-    from jobsity_data_pipeline_spark.operators.dedup import (
-        minhash_bands_frame,
-    )
-    from jobsity_data_pipeline_spark.sources.snapshot import (
-        latest_manifest, read_latest,
-    )
-    from jobsity_data_pipeline_spark.streaming.stream import (
-        lsh_index_candidates, lsh_index_merge_mutable,
-        stream_lsh_index_mutable,
-    )
-
-    schema = (
-        "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    v1 = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    v2 = "totally rewritten body with absolutely fresh words only here"
-    near_v2 = "totally rewritten body with absolutely fresh words only now"
-    texts_b1 = {0: v1, 1: "one two three four five six seven eight nine"}
-    texts_b2 = {0: v2, 2: near_v2}  # doc 0 re-emitted with NEW text
-
-    src = tmp_path / "docs"
-    src.mkdir()
-    for batch in (texts_b1, texts_b2):
-        rows = [(i, t, "en", "test", len(t)) for i, t in batch.items()]
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-
-    table = str(tmp_path / "lsh_index")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = stream_lsh_index_mutable(stream, table, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-
-    # index == batch rebuild over the CURRENT corpus (doc 0 = v2)
-    current = spark.createDataFrame(
-        [(0, v2, "en", "test", len(v2)),
-         (1, texts_b1[1], "en", "test", len(texts_b1[1])),
-         (2, near_v2, "en", "test", len(near_v2))],
-        schema,
-    )
-    want = {
-        (r.doc_id, r.band_id, r.band_hash)
-        for r in minhash_bands_frame(current).collect()
-    }
-    got = {
-        (r.doc_id, r.band_id, r.band_hash)
-        for r in read_latest(spark, table).collect()
-    }
-    assert got == want  # no stale v1 bands survive
-
-    # candidate parity with the batch path on the current corpus:
-    # doc 0 (v2) is now a near-dup of doc 2, not of anything from v1
-    probe = current.where("doc_id = 2")
-    cand = {
-        (r.doc_a, r.doc_b)
-        for r in lsh_index_candidates(spark, table, probe).collect()
-    }
-    assert (0, 2) in cand and all(1 not in p for p in cand)
-
-    # replay of a fully-committed batch: no-op before any delete
-    v_before = latest_manifest(table)["version"]
-    b2 = spark.createDataFrame(
-        [(i, t, "en", "test", len(t)) for i, t in texts_b2.items()], schema
-    )
-    assert lsh_index_merge_mutable(b2, 1, table) == "skipped_duplicate"
-    assert latest_manifest(table)["version"] == v_before
-
-    # mid-crash replay: delete committed, append not (simulated by
-    # re-merging under a FRESH batch id = token not yet published) —
-    # deleting already-deleted keys is idempotent and the state
-    # converges to the same band set
-    assert lsh_index_merge_mutable(b2, 99, table) == "published"
-    got2 = {
-        (r.doc_id, r.band_id, r.band_hash)
-        for r in read_latest(spark, table).collect()
-    }
-    assert got2 == want
-
-
-def test_mutable_index_replacement_visible_in_change_feed(spark, tmp_path):
-    """The content-dependent band_key keeps change_feed's
-    key-immutability premise: a re-crawled doc's delete-then-append
-    surfaces as delete + insert rows downstream, never an invisible
-    in-place change."""
-    from jobsity_data_pipeline_spark.sources.snapshot import (
-        change_feed, latest_manifest,
-    )
-    from jobsity_data_pipeline_spark.streaming.stream import (
-        lsh_index_merge_mutable,
-    )
-
-    schema = (
-        "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    v1 = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    v2 = "totally rewritten body with absolutely fresh words only here"
-    t = str(tmp_path / "idx")
-    b1 = spark.createDataFrame([(0, v1, "en", "t", len(v1))], schema)
-    assert lsh_index_merge_mutable(b1, 0, t) == "published"
-    v_before = latest_manifest(t)["version"]
-    b2 = spark.createDataFrame([(0, v2, "en", "t", len(v2))], schema)
-    assert lsh_index_merge_mutable(b2, 1, t) == "published"
-
-    feed = change_feed(spark, t, v_before, key="band_key")
-    by_type = {}
-    for r in feed.collect():
-        by_type.setdefault(r._change_type, set()).add(r.band_hash)
-    # old bands leave, new bands arrive — both visible
-    assert by_type.get("delete") and by_type.get("insert")
-    assert by_type["delete"].isdisjoint(by_type["insert"])
-
-
 def test_ingest_status_reports_progress(spark, tmp_path):
     """The push-style status surface (the reference's Spark-UI
     polling, programmatic): after an availableNow run it reports the
@@ -2460,20 +2256,18 @@ def test_state_reader_on_missing_table_names_the_path(spark, tmp_path,
     ValueError naming that path, before Spark is asked to read it.
     For m4_from_state the archetype state exists and the count table
     is the missing one."""
-    from jobsity_data_pipeline_spark.sources.snapshot import (
-        publish_snapshot,
-    )
+    from jobsity_data_pipeline_spark.sources.snapshot import append_batch
 
     missing = str(tmp_path / "never_written")
     args = (spark, missing)
     if reader == "m4_from_state":
         state = str(tmp_path / "m4")
-        publish_snapshot(spark.createDataFrame(
+        append_batch(spark.createDataFrame(
             [("a", 0, 1, 2, (0, 0, 1), (1, 1, 2))],
             "event_type string, bucket long, min_cents long,"
             " max_cents long, first_k struct<us:long,id:long,c:long>,"
             " last_k struct<us:long,id:long,c:long>",
-        ), state)
+        ), 0, state)
         args = (spark, state, missing)
     with pytest.raises(ValueError, match="never_written"):
         getattr(ST, reader)(*args)
