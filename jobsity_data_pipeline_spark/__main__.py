@@ -8,19 +8,23 @@ surface is a small CLI over the driver contract:
     python -m jobsity_data_pipeline_spark run <query> [--sf-dir DIR]
         [--limit N] [--explain]
     python -m jobsity_data_pipeline_spark oracle <query>
-
-``run`` and ``oracle`` also reach STAGED queries (built +
-oracle-parity-green but not yet registered in the driver's
-correctness rotation) with a loud stderr banner, so the operational
-surface always matches the built surface.
     python -m jobsity_data_pipeline_spark ingest <trips.csv> <table_dir>
+        [--batch-id N]
+    python -m jobsity_data_pipeline_spark history <table_dir>
+    python -m jobsity_data_pipeline_spark maintain <table_dir>
+        [--analyze-keys K1,K2] [--vacuum]
 
 ``run`` executes any of the ~200 registered queries on the parquet
 tables under ``--sf-dir`` with the tuned session (AQE, Arrow, UTC);
 ``oracle`` prints the query's DuckDB SQL twin (the correctness
-contract, and handy documentation of the exact semantics); ``ingest``
-replays the reference pipeline end-to-end — CSV with explicit schema,
-trip-key dedup, idempotent snapshot upsert.
+contract, and handy documentation of the exact semantics). ``run``
+and ``oracle`` also reach STAGED queries (built +
+oracle-parity-green but not yet registered in the driver's
+correctness rotation) with a loud stderr banner, so the operational
+surface always matches the built surface. ``ingest`` replays the
+reference pipeline end-to-end — CSV with explicit schema, trip-key
+dedup, idempotent snapshot upsert; ``history`` prints one line per
+table version; ``maintain`` runs the compact/analyze/vacuum chain.
 """
 
 from __future__ import annotations

@@ -366,8 +366,8 @@ def events_watermark_lateness(spark: SparkSession,
     running max event-time seen so far (per event_type) minus its own
     event time. The report counts, per type, how many events a
     watermark of 0 / 1 min / 5 min / 15 min would have dropped — the
-    empirical basis for every ``withWatermark`` threshold in
-    streaming/stream.py instead of a guessed delay.
+    empirical basis for a streaming ``withWatermark`` threshold
+    instead of a guessed delay.
 
     Lateness is computed in integer microseconds (unix_micros both
     engines) and bucketed with integer comparisons — engine-exact.

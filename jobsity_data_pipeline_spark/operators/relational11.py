@@ -39,10 +39,8 @@ training-data surface, each with an exact DuckDB oracle twin:
 - emb_kcenter_sample: Gonzalez farthest-point diverse subset
   selection with the covering-radius certificate (incremental
   one-new-centroid rounds, engine-exact kmeans distance kernel).
-- hdr_bucket_counts / hdr_quantiles_from_counts and m4_state_frame
-  split the two sketches into mergeable-build and read halves so the
-  streaming maintainers (stream_hdr_deltas, stream_m4_upsert) share
-  one arithmetic definition with the batch operators.
+- hdr_bucket_counts / hdr_quantiles_from_counts split the HDR
+  sketch into a mergeable-build half and a read half.
 
 Scale notes (100 TB):
 - orders_scd2 windows partition on o_custkey — billions of small
@@ -221,36 +219,6 @@ def events_m4_downsample(spark: SparkSession, sf_dir: str,
     )
 
 
-def m4_state_frame(events: DataFrame,
-                   bucket_hours: int = M4_BUCKET_HOURS) -> DataFrame:
-    """The MERGEABLE M4 state over an events frame: per (type,
-    bucket) the four archetypes with the first/last selection structs
-    kept whole, so two state frames merge by min/min/max/max — every
-    component is an absorbing merge (streaming/stream.stream_m4_upsert
-    relies on exactly that for replay safety)."""
-    tkey = F.struct(
-        F.unix_micros("ts").alias("us"),
-        F.col("event_id").alias("id"),
-        M.cents("value").alias("c"),
-    )
-    us_per_bucket = bucket_hours * 3_600_000_000
-    return (
-        events.select(
-            "event_type",
-            F.expr(f"unix_micros(ts) div {us_per_bucket}").alias("bucket"),
-            M.cents("value").alias("c"),
-            tkey.alias("tk"),
-        )
-        .groupBy("event_type", "bucket")
-        .agg(
-            F.min("c").alias("min_cents"),
-            F.max("c").alias("max_cents"),
-            F.min("tk").alias("first_k"),
-            F.max("tk").alias("last_k"),
-        )
-    )
-
-
 HOP_SIZE_HOURS = 6
 HOP_SLIDE_HOURS = 3
 
@@ -312,8 +280,7 @@ def events_hdr_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def hdr_bucket_counts(events: DataFrame) -> DataFrame:
     """The mergeable half of the HDR sketch: (event_type, bucket_id,
     cnt) from an events frame — counts sum-merge across any split of
-    the data (streaming/stream.stream_hdr_deltas maintains them as
-    append-only snapshot-table deltas)."""
+    the data."""
     c = M.cents("value")
     # all-integer bucket math (shared verbatim with the oracle):
     #   c      = round(value*100)            -- exact cents

@@ -45,8 +45,8 @@ def welch_moments(typed_vc: DataFrame) -> DataFrame:
     """(event_type, vc) rows -> the MERGEABLE sufficient statistic
     per type: n, Σvc, Σvc² as exact integer sums. Order-independent
     longs, so partial aggregation, cross-run merges, and per-batch
-    streaming deltas (stream.stream_moments_upsert) all compose —
-    summing two moment frames IS the moment frame of the union.
+    deltas all compose — summing two moment frames IS the moment
+    frame of the union.
 
     Exactness bound: the long sums stay exact while
     n · max(vc)² < 2^63 per type — at |vc| ≤ 6e4 cents that is
@@ -65,14 +65,14 @@ def welch_moments(typed_vc: DataFrame) -> DataFrame:
 
 def welch_stats(st: DataFrame) -> DataFrame:
     """Pairwise Welch statistics from a (event_type, n, sv, svv)
-    moment frame — the kernel shared by the batch operator and
-    stream.welch_from_state, so index-served statistics match the
-    batch operator value-for-value. Mean and sample variance come
-    from the integer sums via identical IEEE double expressions in
-    both engines (var = (n·Σv² − (Σv)²)/(n·(n−1)), computed in
-    doubles since (Σv)² overflows BIGINT at corpus scale); outputs
-    are rounded (4 dp t, 2 dp df, 6 dp mean gap) so last-ulp noise
-    sits below the reported precision.
+    moment frame — the kernel of the batch operator, so statistics
+    served from summed moment frames match it value-for-value. Mean
+    and sample variance come from the integer sums via identical
+    IEEE double expressions in both engines
+    (var = (n·Σv² − (Σv)²)/(n·(n−1)), computed in doubles since
+    (Σv)² overflows BIGINT at corpus scale); outputs are rounded
+    (4 dp t, 2 dp df, 6 dp mean gap) so last-ulp noise sits below
+    the reported precision.
 
     Degenerate pairs are FILTERED, not emitted as silent NULL rows
     (round-7 ADVICE): n = 1 gives an undefined sample variance, and
@@ -142,9 +142,9 @@ def events_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame (welch_stats) — at 100 TB the corpus is read once and
     everything pairwise happens on |types|^2 rows. The integer-sum
     moment form (round 8, was avg/var_samp) is what makes the
-    statistic SERVABLE from maintained streaming state: summed
-    per-batch deltas reproduce the exact same longs, so
-    stream.welch_from_state matches this operator bit-for-bit."""
+    statistic SERVABLE from summed partial state: per-batch deltas
+    reproduce the exact same longs, so welch_stats over their sum
+    matches this operator bit-for-bit."""
     from ..functions import money as M
 
     e = _t(spark, sf_dir, "events")

@@ -269,10 +269,9 @@ def _qc_trained_weights(spark: SparkSession, sf_dir: str,
 
 def classifier_scored(d: DataFrame, w: list) -> DataFrame:
     """Stateless scoring kernel: (source, y_e6, p_e6) per document at
-    a FIXED weight vector — the trained classifier's serve-time form,
-    shared by the batch yield (docs_classifier_yield) and the
-    streaming maintainer (stream_classifier_counts), so both paths
-    run ONE definition of the engine-exact arithmetic (algebraic
+    a FIXED weight vector — the trained classifier's serve-time form
+    that the batch yield (docs_classifier_yield) runs: ONE definition
+    of the engine-exact arithmetic (algebraic
     sigmoid over the shared gopher_word_stats features, integer
     micro-unit p). Pure per-row codegen after the per-doc feature
     aggregation — batch-local, no cross-batch state."""
@@ -310,8 +309,7 @@ def classifier_scored(d: DataFrame, w: list) -> DataFrame:
 def classifier_source_counts(scored: DataFrame) -> DataFrame:
     """Per-source curation counters (source, n_docs, n_keep, n_agree)
     over a scoring frame — exact integer SUMS, so counters from
-    disjoint shards / micro-batches add up to the corpus counters
-    (the streaming maintainer's merge is plain addition)."""
+    disjoint shards / micro-batches add up to the corpus counters."""
     pred = F.col("p_e6") >= 500_000
     lbl = F.col("y_e6") == 1_000_000
     return scored.groupBy("source").agg(
@@ -323,9 +321,8 @@ def classifier_source_counts(scored: DataFrame) -> DataFrame:
 
 def classifier_yield_from_counts(counts: DataFrame) -> DataFrame:
     """The reported yield shape from the counter frame: integer
-    half-up permilles, ordered by source — shared by the batch
-    operator and the state-served classifier_yield_from_state so
-    their outputs are bit-identical over the same counters."""
+    half-up permilles, ordered by source — the batch operator's
+    output, bit-identical for any frame of the same counters."""
     return counts.select(
         "source", "n_docs", "n_keep",
         F.expr(
@@ -351,9 +348,7 @@ def docs_classifier_yield(spark: SparkSession, sf_dir: str,
     memoized per (app, corpus, rounds) so the trajectory query and
     this one share a single training run. Scale: training's rounds+1
     passes (amortized via the memo), plus ONE scoring scan and a
-    |sources|-row aggregate. The streaming serve path over the same
-    kernels is stream_classifier_counts / classifier_yield_from_state
-    (streaming/stream.py)."""
+    |sources|-row aggregate."""
     w = _qc_trained_weights(spark, sf_dir, rounds)
     d = _t(spark, sf_dir, "documents")
     return classifier_yield_from_counts(
@@ -372,9 +367,9 @@ def kmv_sketches(du: DataFrame, key: str = "user_id",
     """Per-group KMV bottom-k sketch frame (group, mins: array<double>)
     over a DISTINCT (group, key) input — events_kmv_distinct's exact
     two-stage salted merge (relational5.py), factored so the
-    set-algebra layer and the streaming maintainer serve the same
-    deterministic md5 sketch. |groups| output rows; the only
-    corpus-sized shuffle is the caller's distinct."""
+    set-algebra layer serves the same deterministic md5 sketch.
+    |groups| output rows; the only corpus-sized shuffle is the
+    caller's distinct."""
     hv = (
         F.conv(
             F.substring(F.md5(F.col(key).cast("string")), 1, 8), 16, 10
@@ -524,8 +519,8 @@ def events_type_overlap_kmv(spark: SparkSession, sf_dir: str,
     sketch-served union / intersection / Jaccard estimates with a
     signed permille error column — the daily-run form at 100 TB,
     where the exact user-key self-join is the weekly audit and the
-    sketch algebra (|types|·k doubles of state, mergeable, also
-    maintainable by stream_kmv_upsert) answers every ad-hoc pair
+    sketch algebra (|types|·k doubles of state, mergeable) answers
+    every ad-hoc pair
     query without touching the corpus.
 
     Plan: the same (user, type) distinct pipeline feeds four
@@ -537,9 +532,9 @@ def events_type_overlap_kmv(spark: SparkSession, sf_dir: str,
     distinct instead of up to four; swap for persist(MEMORY_AND_DISK)
     on a real cluster run, the emb_top_pcs pin posture — the pinned
     frame is the |types|·|users|-bounded distinct, far smaller than
-    the corpus). The daily 100 TB path that touches no corpus at all
-    is kmv_overlap_from_state over the streamed sketches; this
-    operator exists to certify it against the exact numbers.
+    the corpus). A daily 100 TB path would run the sketch algebra
+    over kept sketches and touch no corpus; this operator certifies
+    the sketch numbers against the exact ones.
     Everything after the distinct is |types|²-row arithmetic with
     broadcast joins."""
     ev = _t(spark, sf_dir, "events")
@@ -584,9 +579,7 @@ def events_type_containment_kmv(spark: SparkSession, sf_dir: str,
     Plan: identical to events_type_overlap_kmv — ONE pinned
     (type, user) distinct feeds the sketch build, the exact
     co-occurrence self-join, and the per-type sizes; everything
-    downstream is |types|²-row arithmetic with broadcast joins. The
-    daily no-corpus path is the same kmv_overlap_from_state (the
-    kernel's containment columns flow through it)."""
+    downstream is |types|²-row arithmetic with broadcast joins."""
     ev = _t(spark, sf_dir, "events")
     du = ev.select("event_type", "user_id").distinct().localCheckpoint()
     sk = kmv_sketches(du, k=k, n_salts=n_salts).localCheckpoint()
@@ -631,8 +624,8 @@ def events_type_overlap_hll(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
     """Audience overlap between event types served from the HLL
     register sketches — the inclusion–exclusion sibling of
-    events_type_overlap_kmv, for shops whose maintained state is the
-    HLL family (stream_hll_upsert) rather than KMV: union = estimate
+    events_type_overlap_kmv, for shops whose kept state is the HLL
+    family rather than KMV: union = estimate
     over the register-MAX merge of the pair (the sketch's native
     union), intersection = est(A) + est(B) − est(A∪B) clamped at 0
     (I-E inherits both sketches' error, the standard caveat), plus
@@ -744,9 +737,7 @@ def collect_months(m: DataFrame, op_name: str) -> list:
     """Collect a (o_year, o_month, rev_c) monthly aggregate to the
     driver under the loud calendar-bound cap (ONE job via
     limit(cap+1)), sorted — the bounded-model staging every
-    forecaster recurrence shares, also fed by the streaming state
-    (monthly_rev_from_state) so served forecasts are bit-identical
-    to batch."""
+    forecaster recurrence shares."""
     rows = m.limit(_SES_MAX_MONTHS + 1).collect()
     if len(rows) > _SES_MAX_MONTHS:
         raise ValueError(
@@ -763,8 +754,7 @@ def collect_months(m: DataFrame, op_name: str) -> list:
 def ses_backtest(months: list, alpha_num: int = SES_ALPHA_NUM,
                  alpha_den: int = SES_ALPHA_DEN) -> list:
     """The SES one-step-ahead recurrence as a pure function of the
-    sorted month list — exact integer cents, halfup per step; shared
-    by the batch operator and forecast_from_state."""
+    sorted month list — exact integer cents, halfup per step."""
     out = []
     level = None
     for y, mo, rev in months:
@@ -995,8 +985,7 @@ def hw_backtest(months: list, alpha_num: int = 1, alpha_den: int = 4,
 def _monthly_rev(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The forecaster family's shared corpus stage: exact integer-cent
     monthly order revenue (one scan + one partial-agg shuffle to the
-    calendar-bounded frame). The streamed twin is
-    stream_monthly_rev_upsert / monthly_rev_from_state."""
+    calendar-bounded frame)."""
     from ..functions import money as M
 
     o = _t(spark, sf_dir, "orders")
@@ -1034,9 +1023,7 @@ def orders_forecast_ses(spark: SparkSession, sf_dir: str,
     Scale shape: the corpus-sized work is exactly one scan + one
     partial-agg shuffle to |months| rows; the iteration is O(months)
     integer ops on the driver — identical at 100 TB. The recurrence
-    is the shared pure-Python ses_backtest kernel, also served
-    corpus-free from streamed state by forecast_from_state
-    (streaming/stream.py).
+    is the shared pure-Python ses_backtest kernel.
     """
     months = collect_months(
         _monthly_rev(spark, sf_dir), "orders_forecast_ses")
@@ -1065,8 +1052,7 @@ def orders_forecast_holt(spark: SparkSession, sf_dir: str,
     monthly frame; the sequential recurrence runs driver-side under
     the shared month cap (the orders_forecast_ses convention). The
     oracle is a recursive CTE (the SES precedent). The recurrence is
-    the shared pure-Python holt_backtest kernel, also served
-    corpus-free from streamed state by forecast_from_state."""
+    the shared pure-Python holt_backtest kernel."""
     months = collect_months(
         _monthly_rev(spark, sf_dir), "orders_forecast_holt")
     return spark.createDataFrame(
@@ -1096,8 +1082,7 @@ def orders_forecast_hw(spark: SparkSession, sf_dir: str,
     oracle as a recursive CTE carrying the 12 seasonal columns and
     rotating exactly one per step (__spark_entry__._hw_sql). Corpus
     work: the shared _monthly_rev scan; the recurrence is the pure
-    hw_backtest kernel under the shared month cap, also served
-    corpus-free from streamed state by forecast_from_state.
+    hw_backtest kernel under the shared month cap.
 
     Registered in round 11 (staged in r9): first driver row this
     round, leading the rotation with the rest of the staged backlog."""
@@ -1149,7 +1134,7 @@ def snaive_backtest(months: list) -> list:
     month partition ordered by year — a gap year falls back to the
     latest year that has the month, exactly like lag()), APE dividing
     by rev_c directly (the snaive operator's guard-free formula,
-    relational11.py). Feeds the tournament and forecast_from_state."""
+    relational11.py). Feeds the tournament."""
     by_month: dict = {}
     out = []
     for y, mo, rev in months:

@@ -36,10 +36,9 @@ documents / events tables, each with an exact DuckDB oracle twin
 
 Every operator here splits into a SUFFICIENT-STATISTIC kernel
 (kanon_classes / ks_counts / daily_counts / benford_digit_counts /
-lastship_counts) and a SERVING kernel over that statistic — the
-streaming maintainers in streaming/stream.py feed the same serving
-kernels from counter-delta or absorbing-merge state, so every audit
-has a corpus-free stream-served twin proven bit-identical in tests.
+lastship_counts) and a SERVING kernel over that statistic. Each
+statistic merges by plain sums or an absorbing max, so a serving
+kernel over merged partial state gives the corpus answer.
 
 Reference parity note: the reference pipeline (119 lines of Postgres
 SQL/loader, src/sqls/create_objects.sql) has no statistics surface;
@@ -74,9 +73,8 @@ def kanon_classes(d: DataFrame,
                   bucket_chars: int = KANON_BUCKET_CHARS) -> DataFrame:
     """Quasi-identifier equivalence classes of a documents frame:
     (lang, source, n_chars div ``bucket_chars``) with the class size
-    ``k``. Shared by the batch audit and the streaming maintainer —
-    per-batch class counts are plain integer sums, so summed deltas
-    reproduce the corpus classes exactly."""
+    ``k``. Per-batch class counts are plain integer sums, so summed
+    deltas reproduce the corpus classes exactly."""
     return (
         d.select(
             "lang", "source",
@@ -90,9 +88,8 @@ def kanon_classes(d: DataFrame,
 def kanon_dist(classes: DataFrame,
                risk_k: int = KANON_RISK_K) -> DataFrame:
     """The k-size distribution over a (lang, source, len_bucket, k)
-    classes frame — the shape both docs_k_anonymity and the
-    state-served kanon_from_state return, so stream == batch is an
-    identity of this one kernel."""
+    classes frame — the shape docs_k_anonymity returns, computed by
+    this one kernel."""
     # r13 perf: dist feeds the 1-row total AND the broadcast-back —
     # pin it so the corpus reduction behind it runs once (session.pin)
     dist = pin(
@@ -149,9 +146,8 @@ def ldiv_dist(classes: DataFrame, risk_l: int = LDIV_RISK_L) -> DataFrame:
     permille, and an at_risk flag for l < ``risk_l`` (every document
     in such a class shares its sensitive value with at most l-1
     alternatives — the attribute-disclosure failure k-anonymity alone
-    cannot see: a class can be large AND uniform). Shared by the
-    batch audit and ldiv_from_state — the kanon stream maintainer
-    serves both audits."""
+    cannot see: a class can be large AND uniform). The kernel of the
+    batch audit."""
     per_class = (
         classes.groupBy("source", "len_bucket")
         .agg(F.count("*").alias("l"), F.sum("k").alias("docs"))
@@ -191,9 +187,8 @@ def docs_l_diversity(spark: SparkSession, sf_dir: str,
 
     Plan and exactness: the docs_k_anonymity shape exactly — ONE
     corpus scan to the (lang, source, len_bucket, k) classes
-    (kanon_classes, the SHARED sufficient statistic, so the kanon
-    stream maintainer serves this audit too via ldiv_from_state),
-    then two re-aggregations of that metadata-sized frame and a
+    (kanon_classes, the sufficient statistic docs_k_anonymity also
+    uses), then two re-aggregations of that metadata-sized frame and a
     broadcast 1-row total; every column exact integer math.
 
     Registered in round 12 (all eight staged operators at once,
@@ -211,8 +206,7 @@ ACF_MAX_LAG = 7
 
 def daily_counts(ev: DataFrame) -> DataFrame:
     """(day, count) reduction of an events frame — the sufficient
-    statistic for the ACF audit. Shared by the batch operator and the
-    streaming maintainer: counts are plain integer sums, so summed
+    statistic for the ACF audit. Counts are plain integer sums, so summed
     per-batch deltas reproduce the corpus series exactly and
     acf_from_daily serves identical numbers."""
     return ev.groupBy(F.to_date("ts").alias("d")).agg(
@@ -223,8 +217,7 @@ def daily_counts(ev: DataFrame) -> DataFrame:
 def acf_from_daily(spark: SparkSession, daily: DataFrame,
                    max_lag: int = ACF_MAX_LAG) -> DataFrame:
     """The lag-correlation table from a (d, c) daily-count frame — the
-    shape both events_acf and the state-served acf_from_state return,
-    so stream == batch is an identity of this one kernel. The calendar
+    shape events_acf returns, computed by this one kernel. The calendar
     span derives from the daily frame itself (min/max day == min/max
     event-ts date, so zero-count edge days cannot exist in either
     path), keeping the whole computation on the post-aggregation
@@ -317,9 +310,8 @@ def events_acf(spark: SparkSession, sf_dir: str,
 
 def ks_counts(d: DataFrame) -> DataFrame:
     """(source, n_chars, count) reduction of a documents frame — the
-    sufficient statistic for the KS drift audit. Shared by the batch
-    operator and the streaming maintainer: counts are plain integer
-    sums, so summed per-batch deltas reproduce the corpus counts
+    sufficient statistic for the KS drift audit. Counts are plain
+    integer sums, so summed per-batch deltas reproduce the corpus counts
     exactly and ks_from_counts serves identical numbers."""
     return (
         d.groupBy("source", F.col("n_chars").alias("x"))
@@ -329,8 +321,8 @@ def ks_counts(d: DataFrame) -> DataFrame:
 
 def ks_from_counts(cnt: DataFrame) -> DataFrame:
     """The pairwise KS table from a (source, x, c) counts frame — the
-    shape both docs_ks_source_drift and the state-served ks_from_state
-    return, so stream == batch is an identity of this one kernel."""
+    shape docs_ks_source_drift returns, computed by this one
+    kernel."""
     # r13 perf: cnt feeds the grid axes AND the ECDF join, srcs three
     # consumers, and the ECDF both self-join legs — pin them so the
     # corpus reduction and the grid window run once (session.pin; all
@@ -580,8 +572,7 @@ def events_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def benford_digit_counts(ev: DataFrame) -> DataFrame:
     """(digit, observed) reduction of an events frame — the sufficient
-    statistic for the Benford audit. Shared by the batch operator and
-    the streaming maintainer (summed per-batch deltas reproduce the
+    statistic for the Benford audit (summed per-batch deltas reproduce the
     corpus digit counts exactly, so benford_from_counts serves
     identical numbers)."""
     cents = F.round(F.col("value") * 100, 0).cast("long")
@@ -600,9 +591,7 @@ def benford_digit_counts(ev: DataFrame) -> DataFrame:
 def benford_from_counts(spark: SparkSession,
                         counts: DataFrame) -> DataFrame:
     """The Benford audit table from a (digit, observed) counts frame —
-    the shape both events_benford and the state-served
-    benford_from_state return, so stream == batch is an identity of
-    this one kernel."""
+    the shape events_benford returns, computed by this one kernel."""
     spine = spark.range(1, 10).select(F.col("id").cast("int").alias("digit"))
     p = F.element_at(
         F.array(*[F.lit(v) for v in BENFORD_P]), F.col("digit")
@@ -702,8 +691,7 @@ def orders_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def lastship_counts(li: DataFrame) -> DataFrame:
     """(l_orderkey, last_ship) reduction of a lineitem frame — the
-    sufficient statistic for the survival audit. Shared by the batch
-    operator and the streaming maintainer: per-order max ship date is
+    sufficient statistic for the survival audit. Per-order max ship date is
     an ABSORBING max-merge (max of per-batch maxes = corpus max, and
     re-merging a replayed batch is a no-op), so km_table over merged
     state serves identical numbers."""
@@ -715,9 +703,8 @@ def lastship_counts(li: DataFrame) -> DataFrame:
 def km_table(spark: SparkSession, o: DataFrame,
              done: DataFrame) -> DataFrame:
     """The survival table from an orders frame + a per-order
-    (l_orderkey, last_ship) frame — the shape both orders_survival_km
-    and the state-served km_from_state return, so stream == batch is
-    an identity of this one kernel. The observation horizon is
+    (l_orderkey, last_ship) frame — the shape orders_survival_km
+    returns, computed by this one kernel. The observation horizon is
     max(last_ship) over the per-order frame (equal to the global max
     ship date: the max of per-order maxes)."""
     # r13 perf: done feeds the horizon agg AND the subject join — pin
@@ -1018,9 +1005,8 @@ def events_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: ONE partial-aggregable scan reduces the corpus to
     (type, value-cents) counts (mw_counts); everything pairwise —
     rank window included — runs on that bounded frame
-    (mw_from_counts). The counts are sum-mergeable, so the statistic
-    is servable from maintained streaming state exactly like the
-    Welch moments."""
+    (mw_from_counts). The counts are sum-mergeable, like the Welch
+    moments."""
     return mw_from_counts(mw_counts(_t(spark, sf_dir, "events")))
 
 
@@ -1056,9 +1042,7 @@ def theilsen_from_daily(spark: SparkSession,
     zero-filled spine, the pair self-join (span² — loud TS_MAX_DAYS
     cap via an in-plan guard), the sort and the middle-row pick all
     run on post-aggregation frames. The daily counts are the SAME
-    sufficient statistic the ACF audit maintains from its stream
-    (stream_daily_counts), so this trend is state-servable
-    corpus-free (theilsen_from_state)."""
+    sufficient statistic the ACF audit computes (acf_from_daily)."""
     # r13 perf pins (session.pin): daily feeds span + fill, filled
     # feeds the cap count + the guard, the guarded series feeds both
     # pair legs, and the span^2/2 slope frame feeds the rank window

@@ -1,7 +1,7 @@
 """Round-11 late wave — four audit statistics that each ride an
-EXISTING streamed sufficient statistic (zero new stream maintainers,
-zero new corpus reductions; every kernel here is one more serving of
-state the engine already keeps current):
+EXISTING sufficient statistic (zero new corpus reductions; every
+kernel here is one more serving of a statistic another audit already
+computes):
 
 - events_trend_mannkendall: the Mann–Kendall trend TEST over the
   zero-filled daily event-count calendar — the significance twin of
@@ -28,11 +28,8 @@ state the engine already keeps current):
   different"), fully distributed (no driver recurrence, no cap).
 
 Every operator splits into the established SUFFICIENT-STATISTIC /
-SERVING-KERNEL form; the serving kernels are fed corpus-free by the
-round-10/11 stream maintainers (stream_daily_counts, stream_mw_counts,
-stream_kanon_counts, stream_lastship_upsert) via mk_from_state /
-kw_from_state / cramersv_from_state / logrank_from_state in
-streaming/stream.py, bit-identical to batch.
+SERVING-KERNEL form: one corpus reduction to a mergeable statistic,
+then a kernel that reads only that statistic.
 
 Reference parity note: the reference pipeline (119 lines of Postgres
 SQL/loader, src/sqls/create_objects.sql) has no statistics surface;
@@ -89,8 +86,7 @@ def mannkendall_from_daily(spark: SparkSession,
     tie-group reduction and the 1-row combine all run on
     post-aggregation frames over broadcast joins. The daily counts
     are the SAME sufficient statistic the ACF/Theil–Sen audits
-    maintain from their stream (stream_daily_counts), so this test
-    is state-servable corpus-free (mk_from_state)."""
+    compute."""
     # r13 perf pins (session.pin): daily feeds span + fill, filled
     # feeds the cap count + the guard, and the guarded series feeds
     # both sign-pair legs AND the tie reduction
@@ -317,8 +313,7 @@ def events_kruskalwallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributions — see kw_from_counts for semantics, exactness and
     plan shape. ONE partial-aggregable scan reduces the corpus to the
     (type, value-cents) counts (mw_counts — the SAME sufficient
-    statistic the Mann–Whitney audit maintains from its stream), so
-    the test is state-servable corpus-free (kw_from_state).
+    statistic the Mann–Whitney audit computes).
 
     Registered in round 12 (all eight staged operators at once,
     per the r11 verdict); oracle parity-validated while staged."""
@@ -366,8 +361,7 @@ def cramers_from_classes(classes: DataFrame) -> DataFrame:
     Plan: the classes frame is metadata-sized, so every step —
     marginals, the r×c grid, the 1-row totals — is a re-aggregation
     with broadcast joins; the corpus is touched only by the ONE scan
-    that built the classes (or by none, served from the kanon stream
-    state via cramersv_from_state)."""
+    that built the classes."""
     dec = "decimal(19,0)"
     classes = classes.where(
         F.col("lang").isNotNull() & F.col("source").isNotNull()
@@ -429,9 +423,7 @@ def docs_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     [0, 1] effect size; see cramers_from_classes for semantics,
     exactness and plan shape. ONE corpus scan reduces to the
     quasi-identifier classes (kanon_classes — the sufficient
-    statistic SHARED with docs_k_anonymity/docs_l_diversity and
-    their stream maintainer, so this audit is state-servable
-    corpus-free via cramersv_from_state).
+    statistic SHARED with docs_k_anonymity/docs_l_diversity).
 
     Registered in round 12 (all eight staged operators at once,
     per the r11 verdict); oracle parity-validated while staged."""
@@ -604,8 +596,7 @@ def orders_logrank_priority(spark: SparkSession,
 
     Plan: the SAME one-lineitem-reduction + one-orders-join corpus
     cost as the KM audits (shared lastship_counts sufficient
-    statistic — the streamed last-ship state serves this test too,
-    corpus-free, via logrank_from_state), then everything runs
+    statistic), then everything runs
     distributed on the |priorities| × calendar grid: no driver
     recurrence, no collect, no cap needed (see logrank_pairs).
 

@@ -1,6 +1,6 @@
 """Round-12 wave — three audit statistics, each the MISSING MEMBER of
-an existing family, each riding an EXISTING streamed sufficient
-statistic (zero new stream maintainers, zero new corpus reductions):
+an existing family, each riding an EXISTING sufficient statistic
+(zero new corpus reductions):
 
 - docs_theils_u: Theil's uncertainty coefficient — the ASYMMETRIC
   member of the lang/source association family (the chi-squared tests
@@ -25,11 +25,8 @@ statistic (zero new stream maintainers, zero new corpus reductions):
   round-12 Kruskal–Wallis upgrade rides.
 
 Every operator splits into the established SUFFICIENT-STATISTIC /
-SERVING-KERNEL form; the serving kernels are fed corpus-free by the
-round-10/11 stream maintainers (stream_kanon_counts,
-stream_lastship_upsert, stream_daily_counts) via theilsu_from_state /
-na_from_state / spearman_from_state in streaming/stream.py,
-bit-identical to batch.
+SERVING-KERNEL form: one corpus reduction to a mergeable statistic,
+then a kernel that reads only that statistic.
 
 Reference parity note: the reference pipeline (119 lines of Postgres
 SQL/loader, src/sqls/create_objects.sql) has no statistics surface;
@@ -89,8 +86,7 @@ def theilsu_from_classes(classes: DataFrame) -> DataFrame:
     Plan: the classes frame is metadata-sized, so every step —
     cells, marginals, the three 1-row entropy sums, the combine — is
     a re-aggregation with broadcast joins; the corpus is touched only
-    by the ONE scan that built the classes (or by none, served from
-    the kanon stream state via theilsu_from_state)."""
+    by the ONE scan that built the classes."""
     classes = classes.where(
         F.col("lang").isNotNull() & F.col("source").isNotNull()
     )
@@ -167,9 +163,7 @@ def docs_theils_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     theilsu_from_classes for semantics, exactness and plan shape. ONE
     corpus scan reduces to the quasi-identifier classes
     (kanon_classes — the sufficient statistic SHARED with
-    docs_k_anonymity/docs_l_diversity/docs_cramers_v and their stream
-    maintainer, so this audit is state-servable corpus-free via
-    theilsu_from_state).
+    docs_k_anonymity/docs_l_diversity/docs_cramers_v).
 
     Round-13 staging note: unit-tested + staged oracle
     (__spark_entry__._theilsu_sql) + CLI-visible via
@@ -268,8 +262,7 @@ def orders_hazard_na(spark: SparkSession, sf_dir: str) -> DataFrame:
     surv_removals reduction (the log-rank twin), re-aggregated over
     priorities to the global per-duration grid — the SAME
     one-lineitem-reduction + one-orders-join corpus cost as every
-    survival audit, served corpus-free from the last-ship stream
-    state via na_from_state.
+    survival audit.
 
     Round-13 staging note: unit-tested + staged oracle
     (__spark_entry__._na_sql) + CLI-visible via staged_queries();
@@ -325,8 +318,7 @@ def benford_mad_from_counts(spark: SparkSession,
 
     Plan: the counts frame is 9 rows — every step is a broadcast
     re-aggregation of a constant-size frame; the corpus is touched
-    only by the ONE scan that built the counts (or by none, served
-    from the digit-count stream state via benford_mad_from_state)."""
+    only by the ONE scan that built the counts."""
     from .relational15 import BENFORD_P
 
     spine = spark.range(1, 10).select(
@@ -386,9 +378,7 @@ def events_benford_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     significant at corpus scale); see benford_mad_from_counts for
     semantics, exactness and plan shape. ONE partial-aggregable scan
     reduces to the 9-row digit counts (benford_digit_counts — the
-    sufficient statistic SHARED with events_benford and its stream
-    maintainer, so this audit is state-servable corpus-free via
-    benford_mad_from_state).
+    sufficient statistic SHARED with events_benford).
 
     Round-13 staging note: unit-tested + staged oracle
     (__spark_entry__._benford_mad_sql) + CLI-visible via
@@ -438,8 +428,7 @@ def js_from_counts(cnt: DataFrame) -> DataFrame:
     is complete), per-source totals and entropies broadcast, and the
     per-pair reduction is a partial-aggregable groupBy. Everything
     runs on metadata-sized frames; the corpus is touched only by the
-    ONE scan that built the counts (or by none, served from the KS
-    stream state via js_from_state)."""
+    ONE scan that built the counts."""
     # r13 perf pins (session.pin): cnt feeds the totals, the
     # entropies and both fan-out legs; srcs four consumers; the
     # per-source entropies both pair sides
@@ -527,9 +516,7 @@ def docs_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     js_from_counts for semantics, exactness and plan shape. ONE
     partial-aggregable corpus scan reduces to the (source, n_chars)
     counts (ks_counts — the sufficient statistic SHARED with
-    docs_ks_source_drift/docs_ad_source_drift and their stream
-    maintainer, so this audit is state-servable corpus-free via
-    js_from_state).
+    docs_ks_source_drift/docs_ad_source_drift).
 
     Round-13 staging note: unit-tested + staged oracle
     (__spark_entry__._js_sql) + CLI-visible via staged_queries();
@@ -581,8 +568,7 @@ def spearman_acf_from_daily(spark: SparkSession, daily: DataFrame,
     per-lag reduction all run on post-aggregation calendar-bounded
     frames over broadcast joins. The daily counts are the SAME
     sufficient statistic the ACF/Theil–Sen/Mann–Kendall audits
-    maintain from their stream (stream_daily_counts), so this audit
-    is state-servable corpus-free (spearman_from_state)."""
+    compute."""
     from .ranking import distributed_cumsum
 
     # r13 perf pins (session.pin): daily feeds span + fill, the

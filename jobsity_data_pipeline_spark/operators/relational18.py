@@ -1,7 +1,6 @@
 """Round-13 wave — five audit statistics, each the MISSING MEMBER of
-an existing family, each riding an EXISTING streamed sufficient
-statistic (zero new stream maintainers, zero new corpus reductions —
-the round-11/12 discipline):
+an existing family, each riding an EXISTING sufficient statistic
+(zero new corpus reductions — the round-11/12 discipline):
 
 - events_cliffs_delta: Cliff's delta effect size between every event
   type pair's value distributions — the EFFECT-SIZE seat of the rank
@@ -42,12 +41,8 @@ the round-11/12 discipline):
   computes.
 
 Every operator splits into the established SUFFICIENT-STATISTIC /
-SERVING-KERNEL form; the serving kernels are fed corpus-free by the
-round-10/11 stream maintainers (stream_mw_counts, stream_kanon_counts,
-stream_daily_counts, stream_sourcelen_counts, stream_lastship_upsert)
-via cliffs_from_state / gk_from_state / runs_from_state /
-cvm_from_state / rmst_from_state in streaming/stream.py, bit-identical
-to batch.
+SERVING-KERNEL form: one corpus reduction to a mergeable statistic,
+then a kernel that reads only that statistic.
 
 Reference parity note: the reference pipeline (119 lines of Postgres
 SQL/loader, src/sqls/create_objects.sql) has no statistics surface;
@@ -216,9 +211,7 @@ def events_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: ONE partial-aggregable scan reduces the corpus to
     (type, value-cents) counts (the shared mw_counts kernel);
     everything pairwise runs on that bounded frame
-    (cliffs_from_counts). The counts are sum-mergeable, so the
-    statistic is servable from the maintained streaming state exactly
-    like MW/KW (cliffs_from_state)."""
+    (cliffs_from_counts). The counts are sum-mergeable, like MW/KW's."""
     from .relational15 import mw_counts
 
     return cliffs_from_counts(mw_counts(_t(spark, sf_dir, "events")))
@@ -261,8 +254,7 @@ def gk_lambda_from_classes(classes: DataFrame) -> DataFrame:
     Plan: the classes frame is metadata-sized; every step — cells,
     per-margin maxes, the four 1-row reductions, the combine — is a
     broadcast re-aggregation; the corpus is touched only by the ONE
-    scan that built the classes (or by none, served from the kanon
-    stream state via gk_from_state)."""
+    scan that built the classes."""
     classes = classes.where(
         F.col("lang").isNotNull() & F.col("source").isNotNull()
     )
@@ -334,9 +326,7 @@ def docs_gk_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
     gk_lambda_from_classes for semantics, exactness and plan shape.
     ONE corpus scan reduces to the quasi-identifier classes
     (kanon_classes — the sufficient statistic SHARED with
-    docs_k_anonymity/docs_l_diversity/docs_cramers_v/docs_theils_u
-    and their stream maintainer, so this audit is state-servable
-    corpus-free via gk_from_state)."""
+    docs_k_anonymity/docs_l_diversity/docs_cramers_v/docs_theils_u)."""
     from .relational15 import KANON_BUCKET_CHARS, kanon_classes
 
     return gk_lambda_from_classes(
@@ -380,8 +370,7 @@ def runs_from_daily(spark: SparkSession, daily: DataFrame) -> DataFrame:
     theilsen_from_daily row_number idiom, the run boundaries one lag
     window over the date-ordered frame, the reduction a single
     aggregate. The daily counts are the SAME sufficient statistic
-    the ACF family maintains from its stream (stream_daily_counts),
-    so the test is state-servable corpus-free (runs_from_state)."""
+    the ACF family computes."""
     # r13 perf pins (session.pin): daily feeds span + fill; the
     # zero-filled calendar feeds the rank, the 1-row count AND the
     # median-split keep
@@ -475,8 +464,7 @@ def events_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scan partial-aggregates to the daily series (daily_counts
     — the sufficient statistic SHARED with events_acf /
     events_trend_theilsen / events_trend_mannkendall /
-    events_spearman_acf and their stream maintainer, so this audit is
-    state-servable corpus-free via runs_from_state)."""
+    events_spearman_acf)."""
     from .relational15 import daily_counts
 
     return runs_from_daily(
@@ -514,8 +502,7 @@ def cvm_from_counts(cnt: DataFrame) -> DataFrame:
     cumulative window over the metadata-sized (source, x) grid, a
     self-join on the grid key, broadcast per-source totals,
     partial-aggregable final groupBy; the corpus is touched only by
-    the ONE scan that built the counts (or by none, served from the
-    sourcelen stream state via cvm_from_state)."""
+    the ONE scan that built the counts."""
     # r13 perf: the ks_from_counts pins, CvM edition (same shape)
     cnt = pin(cnt)
     xs = cnt.select("x").distinct()
@@ -589,9 +576,7 @@ def docs_cvm_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the drift family; see cvm_from_counts for semantics, exactness
     and plan shape. ONE corpus scan reduces to (source, n_chars)
     counts (ks_counts — the sufficient statistic SHARED with
-    docs_ks_source_drift/docs_ad_source_drift/docs_js_divergence and
-    their stream maintainer, so this audit is state-servable
-    corpus-free via cvm_from_state)."""
+    docs_ks_source_drift/docs_ad_source_drift/docs_js_divergence)."""
     from .relational15 import ks_counts
 
     return cvm_from_counts(ks_counts(_t(spark, sf_dir, "documents")))
@@ -625,8 +610,7 @@ def rmst_from_curve(curve: DataFrame) -> DataFrame:
     Plan: the curve frame is at most KM_MAX_TIMES rows (the KM
     family's calendar-bounded loud cap) — one lead window + one
     aggregate over a metadata-sized frame; the corpus is touched
-    only by what built the curve (or by nothing, served from the
-    lastship stream state via rmst_from_state)."""
+    only by what built the curve."""
     wlead = Window.orderBy("t_days")
     seg = curve.select(
         "t_days", "survival_ppm",
@@ -667,11 +651,9 @@ def orders_survival_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Restricted mean survival time of order fulfilment — the KM
     family's scalar summary; see rmst_from_curve for semantics,
     exactness and plan shape. Consumes the SAME km_table curve (and
-    thus the same lastship_counts sufficient statistic and stream
-    maintainer) as orders_survival_km, so this audit is
-    state-servable corpus-free via rmst_from_state — one absorbing
-    last-ship maintainer now serves FIVE survival audits (KM flat,
-    KM stratified, log-rank, Nelson–Aalen, RMST)."""
+    thus the same lastship_counts sufficient statistic) as
+    orders_survival_km — one statistic serves FIVE survival audits
+    (KM flat, KM stratified, log-rank, Nelson–Aalen, RMST)."""
     from .relational15 import km_table, lastship_counts
 
     return rmst_from_curve(

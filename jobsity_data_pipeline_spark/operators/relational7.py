@@ -156,8 +156,7 @@ def hll_registers(df: DataFrame, key_col: str, group_cols: list[str],
     """HyperLogLog register maxima per group: (group_cols..., reg, mx).
 
     The mergeable sketch state — registers from disjoint shards,
-    streams, or time windows union by max-per-register (see
-    streaming/stream.py:stream_hll_upsert and the merge test). Exact
+    streams, or time windows union by max-per-register. Exact
     integer rho via bin()-string length keeps the state engine-portable.
     """
     h = df.select(

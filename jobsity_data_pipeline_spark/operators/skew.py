@@ -137,8 +137,7 @@ def bloom_words(small: DataFrame, small_key: str,
     index, the OR of its set bits (<= m_bits/64 rows). This is the
     MERGEABLE form: bit_or across shards/batches is associative,
     commutative, and ABSORBING (re-OR-ing the same bits is a no-op),
-    which is what lets a streaming maintainer keep it as replay-safe
-    state (stream_bloom_upsert)."""
+    so a replayed batch cannot change the merged bitset."""
     pos = small.select(
         F.explode(
             F.array(
@@ -201,54 +200,10 @@ def bloom_bits_dense(words: DataFrame, m_bits: int) -> DataFrame:
     )
 
 
-def bloom_pos_counts(keys: DataFrame, key_col: str,
-                     m_bits: int = 1 << 16, k_hashes: int = 3,
-                     sign_col: str | None = None) -> DataFrame:
-    """COUNTING-Bloom position deltas: per bit position, the signed
-    number of set-operations landing on it — k positions per key,
-    +1 each for an insert and −1 each for a delete (``sign_col``: a
-    ±1 column; absent = all inserts). The counter form is what makes
-    a Bloom filter DELETABLE: summed counters track the build-side
-    multiset exactly, so positions with cnt > 0 are BIT-FOR-BIT the
-    plain bloom_words positions over the surviving keys — membership
-    never degrades as deletes accumulate (the standard caveat holds:
-    deleting a key that was never inserted corrupts the filter; feed
-    this from a CDC/change feed, not guesses). Hashes are the shared
-    _bloom_pos (xxhash64) so counting and plain filters interoperate."""
-    sign = (F.col(sign_col).cast("long") if sign_col is not None
-            else F.lit(1).cast("long"))
-    pos = keys.select(
-        sign.alias("_s"),
-        F.explode(
-            F.array(
-                *[_bloom_pos(key_col, i, m_bits)
-                  for i in range(k_hashes)]
-            )
-        ).alias("pos"),
-    )
-    return pos.groupBy("pos").agg(F.sum("_s").alias("cnt"))
-
-
-def bloom_words_from_counts(counts: DataFrame) -> DataFrame:
-    """Collapse summed counting-Bloom counters to the plain sparse
-    (w, b) word rows (positions with cnt > 0) — the adapter that lets
-    a maintained counting filter serve the existing dense/probe path
-    (bloom_bits_dense / bloom_probe) unchanged."""
-    return (
-        counts.where(F.col("cnt") > 0)
-        .select(
-            F.expr("CAST(pos div 64 AS INT)").alias("w"),
-            F.expr("shiftleft(1L, CAST(pos % 64 AS INT))").alias("b"),
-        )
-        .groupBy("w").agg(F.expr("bit_or(b)").alias("b"))
-    )
-
-
 def bloom_probe(fact: DataFrame, bits: DataFrame, fact_key: str,
                 m_bits: int = 1 << 16, k_hashes: int = 3) -> DataFrame:
     """Filter ``fact`` through a prebuilt dense bitset frame
-    (bloom_bits_dense output) — the probe half of bloom_prune, also
-    serving a STREAM-MAINTAINED bitset (bloom_filter_from_state)."""
+    (bloom_bits_dense output) — the probe half of bloom_prune."""
     clashing = [
         c for c in (BLOOM_COL,
                     *[f"__jdp_bp{i}" for i in range(k_hashes)])

@@ -400,7 +400,7 @@ def cms_counts(df: DataFrame, key_col: str = "user_id",
     """The CMS counter matrix (r, bucket, cnt) for ``df[key_col]``:
     ONE aggregate over the (row, bucket) fan-out. Counters SUM, so
     the matrix is mergeable (partial-agg at 100 TB, and per-batch
-    deltas sum in the streaming maintainer stream_cms_upsert)."""
+    deltas sum)."""
     spark = df.sparkSession
     rows = spark.range(depth).select(F.col("id").cast("int").alias("r"))
     keyed = df.select(key_col).crossJoin(F.broadcast(rows)).select(
@@ -444,10 +444,8 @@ def events_count_min_sketch(spark: SparkSession, sf_dir: str,
     exact count for the top heavy hitters. The sketch is mergeable
     (counters sum), so the same plan runs partial-agg at 100 TB; the
     report quantifies collision overestimate before anyone trusts the
-    sketch in a monitoring path. The matrix/probe kernels
-    (cms_counts / cms_point_estimates) are shared with the streaming
-    maintainer (streaming.stream.stream_cms_upsert), so index-served
-    estimates match this operator value-for-value.
+    sketch in a monitoring path. The matrix/probe kernels are
+    cms_counts / cms_point_estimates.
     """
     e = ensure_parallelism(spark, read_table(spark, sf_dir, "events"))
     cms = cms_counts(e, "user_id", depth, width)
@@ -516,8 +514,7 @@ def bm25_postings(d: DataFrame, terms: tuple[str, ...] = BM25_TERMS,
     column per query term) — one explode + one map-side-combined
     doc_id aggregate over a documents frame. This is the frame a
     serving deployment PERSISTS (docs_bm25_topk checkpoints it
-    in-session; streaming/stream.stream_bm25_postings maintains it as
-    a snapshot table at delta cost)."""
+    in-session)."""
     ex = d.select("doc_id", F.explode(TX.tokens("text")).alias("token"))
     return ex.groupBy("doc_id").agg(
         F.count("*").alias("dl"),

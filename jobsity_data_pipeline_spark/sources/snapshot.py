@@ -16,11 +16,11 @@ Exactly-once streaming upserts fall out of the manifest body carrying
 the micro-batch id: a retried batch finds its own id already published
 and skips. Every writer commits through one loop (_commit): token
 check, latest-manifest read, CAS-guarded publish, bounded retry, and
-the carry-forward of per-file stats and manifest extras.
+the carry-forward of per-file stats.
 
 The verbs are the ones the trips system calls: keyed ingest
-(upsert_batch, the ON CONFLICT DO NOTHING), blind append and state
-fold for stream state, latest and stats-pruned point reads, and the
+(upsert_batch, the ON CONFLICT DO NOTHING) and its streaming sink
+(start_snapshot_upsert), latest and stats-pruned point reads, and the
 maintenance chain (compact, analyze, vacuum, maintain) with history().
 
 At 100 TB the manifest lists file paths (KBs per thousand files), new
@@ -145,24 +145,12 @@ class _Commit(NamedTuple):
     """What a writer computed from the manifest it read: the next
     version lists ``keep`` (files of the read version, by reference)
     then ``new`` (files this writer wrote). ``stats`` holds fresh
-    {key: {path: [min, max]}} entries and ``extra`` the manifest keys
-    to set. ``result`` maps the published version to the writer's
-    return value."""
+    {key: {path: [min, max]}} entries. ``result`` maps the published
+    version to the writer's return value."""
     result: Callable[[int], Any]
     new: list = []
     keep: list = []
     stats: dict = {}
-    extra: dict = {}
-
-
-def _carry_extras(man: dict | None) -> dict:
-    """Caller-supplied manifest metadata (a BM25 index's
-    ``bm25_terms``, ...) carried forward verbatim into every new
-    version — without this, a compact or analyze would silently drop
-    the metadata and downstream readers would fall back to defaults."""
-    return {k: v for k, v in (man or {}).items()
-            if k not in ("version", "batch", "files", "stats",
-                         "committed_at")}
 
 
 def _carry_stats(man: dict | None, keep: list[str]) -> dict:
@@ -191,9 +179,8 @@ def _commit(table_dir: str, what: str, token: str,
     an anti-join; after _ATTEMPTS losses it raises.
 
     ``plan(man)`` returns a _Commit, or any other value meaning
-    "nothing to publish", which is returned as is. Stats and extras of
-    ``man`` carry forward under the commit's own (_carry_stats /
-    _carry_extras)."""
+    "nothing to publish", which is returned as is. Stats of ``man``
+    carry forward under the commit's own (_carry_stats)."""
     for _attempt in range(_ATTEMPTS):
         if skipped is not None and _has_token(table_dir, token):
             return skipped
@@ -204,9 +191,7 @@ def _commit(table_dir: str, what: str, token: str,
         stats = _carry_stats(man, step.keep)
         for k, fresh in step.stats.items():
             stats[k] = {**stats.get(k, {}), **fresh}
-        extra = {**_carry_extras(man), **step.extra}
-        if stats:
-            extra["stats"] = stats
+        extra = {"stats": stats} if stats else None
         v = _publish(table_dir, step.keep + step.new, token, extra=extra,
                      expected_version=(man or {}).get("version", 0))
         if v != -1:
@@ -298,8 +283,7 @@ def read_latest(spark: SparkSession, table_dir: str) -> DataFrame | None:
 
 
 def upsert_batch(batch: DataFrame, batch_id: int, table_dir: str,
-                 key: str = "trip_key",
-                 extra: dict | None = None) -> str:
+                 key: str = "trip_key") -> str:
     """Idempotent keyed append: anti-join the batch against the current
     version's keys, write ONLY the new rows as one data file set, and
     publish prior-files + new-files as the next version (just the prior
@@ -318,10 +302,6 @@ def upsert_batch(batch: DataFrame, batch_id: int, table_dir: str,
     against the new latest. Otherwise a racer appending the same key
     would slip a duplicate past the anti-join, and the stale prior
     list would drop the racer's files from the new version.
-
-    ``extra`` rides the published manifest verbatim (table-level
-    metadata such as an index's term list); reserved body keys
-    (version/batch/files/stats) must not be used.
     """
     spark = batch.sparkSession
     # like the reference's ON CONFLICT DO NOTHING, intra-batch key
@@ -349,80 +329,28 @@ def upsert_batch(batch: DataFrame, batch_id: int, table_dir: str,
             shutil.rmtree(os.path.dirname(files[0]))
             files, stats = [], {}
         return _Commit(new=files, keep=prior, stats={key: stats},
-                       extra=extra or {}, result=lambda v: "published")
+                       result=lambda v: "published")
 
     return _commit(table_dir, "upsert_batch", f"batch{batch_id}", plan,
                    skipped="skipped_duplicate")
 
 
-def append_batch(batch: DataFrame, batch_id: int, table_dir: str) -> str:
-    """Blind append: publish the current version's files plus ``batch``
-    as the next version, reading no prior data. For additive state
-    (per-batch counter deltas) the batch token is the whole dedup —
-    upsert_batch's anti-join could never find a match — so the append
-    costs one write whatever the table's history (the Delta blind
-    append, which needs no read-conflict check).
+def start_snapshot_upsert(dedup: DataFrame, table_dir: str,
+                          checkpoint: str):
+    """The streaming sink: upsert_batch every micro-batch of ``dedup``
+    until the data available at start is consumed. The engine's
+    batch_id is stable across a checkpoint restart, so committing
+    under it as the batch token makes the stream exactly-once."""
 
-    The data is written once, after the token check; a lost publish
-    race re-lists the kept files without rewriting it. Returns
-    "published" | "skipped_duplicate"."""
-    written: list[str] = []
+    def _merge(batch: DataFrame, batch_id: int) -> None:
+        upsert_batch(batch, batch_id, table_dir)
 
-    def plan(man):
-        if not written:
-            written.extend(_write_data(batch, table_dir))
-        return _Commit(new=written, keep=man["files"] if man else [],
-                       result=lambda v: "published")
-
-    return _commit(table_dir, "append_batch", f"batch{batch_id}", plan,
-                   skipped="skipped_duplicate")
-
-
-def start_batch_stream(stream: DataFrame, checkpoint: str,
-                       apply: Callable[[DataFrame, int], Any]):
-    """The one streaming sink: run ``apply(batch, batch_id)`` on every
-    micro-batch of ``stream`` until the data available at start is
-    consumed. The engine's batch_id is stable across a checkpoint
-    restart, so an ``apply`` that commits under a token derived from
-    it (upsert_batch, append_batch, fold_batch) makes the stream
-    exactly-once."""
     return (
-        stream.writeStream.foreachBatch(apply)
+        dedup.writeStream.foreachBatch(_merge)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
-
-
-def fold_batch(spark: SparkSession, table_dir: str, token: str,
-               fold: Callable[[DataFrame | None], DataFrame]) -> str:
-    """Exactly-once state fold: publish ``fold(state)`` as the full
-    next version of ``table_dir``, where ``state`` is the version the
-    commit read (None before the first). A token already published
-    makes the call a no-op, so a replayed micro-batch is never folded
-    in twice — the guard a non-absorbing fold (a sum) needs. The
-    publish is CAS-guarded on the version read; a lost race re-folds
-    against the new state. Returns "published" | "skipped_duplicate"."""
-
-    def plan(man):
-        state = (_read_files(spark, man["files"])
-                 if man and man["files"] else None)
-        files = _write_data(fold(state), table_dir)
-        return _Commit(new=files, result=lambda v: "published")
-
-    return _commit(table_dir, "fold_batch", token, plan,
-                   skipped="skipped_duplicate")
-
-
-def start_snapshot_upsert(dedup: DataFrame, table_dir: str,
-                          checkpoint: str, key: str = "trip_key"):
-    """Streaming twin: foreachBatch -> upsert_batch with the engine's
-    batch_id as the idempotence token."""
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        upsert_batch(batch, batch_id, table_dir, key)
-
-    return start_batch_stream(dedup, checkpoint, _merge)
 
 
 def history(table_dir: str) -> list[dict]:

@@ -226,55 +226,6 @@ class TestKmvOverlap:
             assert abs(r["cont_a_err_pm"]) <= 300
             assert abs(r["cont_b_err_pm"]) <= 300
 
-    def test_overlap_served_from_streamed_state(self, spark, tmp_path):
-        """kmv_overlap_from_state over stream_kmv_upsert's maintained
-        state serves the SAME pair numbers as the batch sketch algebra
-        over the unioned corpus."""
-        import datetime as dt
-
-        from jobsity_data_pipeline_spark.streaming.stream import (
-            kmv_overlap_from_state, stream_kmv_upsert,
-        )
-
-        schema = (
-            "event_id long, ts timestamp, user_id long,"
-            " event_type string, value double, props string"
-        )
-        base = dt.datetime(2024, 1, 1)
-        rows = [
-            (i, base + dt.timedelta(minutes=i), (i * 7) % 211,
-             "view" if i % 3 else "purchase", 1.0, "{}")
-            for i in range(600)
-        ]
-        src = tmp_path / "events"
-        for third in (0, 1, 2):
-            spark.createDataFrame(
-                [r for i, r in enumerate(rows) if i % 3 == third],
-                schema,
-            ).coalesce(1).write.mode("append").parquet(str(src))
-        state = str(tmp_path / "kmv_state")
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        q = stream_kmv_upsert(stream, state, str(tmp_path / "ckpt"))
-        q.awaitTermination(120)
-
-        batch_du = (
-            spark.createDataFrame(rows, schema)
-            .select("event_type", "user_id").distinct()
-        )
-        want = sorted(
-            tuple(r) for r in R14.kmv_pair_overlap(
-                R14.kmv_sketches(batch_du), k=64).collect()
-        )
-        got = sorted(
-            tuple(r)
-            for r in kmv_overlap_from_state(spark, state).collect()
-        )
-        assert got == want
-
 
 class TestForecastSes:
     def _monthly(self, sf_dir):

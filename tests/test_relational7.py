@@ -237,58 +237,6 @@ def test_ann_recall_report_bounds(spark):
     assert sum(by["pq_rerank"]) >= sum(by["pq"])
 
 
-def test_stream_hll_state_equals_batch(spark, tmp_path):
-    import datetime as dt2
-
-    from jobsity_data_pipeline_spark.operators.relational7 import (
-        hll_registers,
-    )
-    from jobsity_data_pipeline_spark.streaming.stream import stream_hll_upsert
-
-    src = tmp_path / "src"
-    src.mkdir()
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    base = dt2.datetime(2024, 1, 1)
-    all_rows = []
-    # three files -> three micro-batches with overlapping users
-    for f in range(3):
-        rows = [
-            (f * 100 + i, base + dt2.timedelta(minutes=i), (f * 37 + i) % 61,
-             "a" if i % 2 == 0 else "b", 1.0, "{}")
-            for i in range(100)
-        ]
-        all_rows += rows
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = stream_hll_upsert(
-        stream, str(tmp_path / "state"), str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-    from jobsity_data_pipeline_spark.streaming.stream import sketch_state
-
-    got = {
-        (r.event_type, r.reg): r.mx
-        for r in sketch_state(spark, str(tmp_path / "state")).collect()
-    }
-    want = {
-        (r.event_type, r.reg): r.mx
-        for r in hll_registers(
-            spark.createDataFrame(all_rows, schema), "user_id",
-            ["event_type"]
-        ).collect()
-    }
-    assert got == want
-
-
 def test_key_skew_flags_hot_key(spark, tmp_path):
     import datetime as dt3
 

@@ -131,71 +131,6 @@ def test_dup_ngram_fraction_detects_planted_duplicate(spark, tmp_path):
     assert rows[2].dup_frac == pytest.approx(0.0)
 
 
-def test_stream_decayed_state_equals_batch(spark, tmp_path):
-    import datetime as dt
-
-    from jobsity_data_pipeline_spark.streaming.stream import (
-        stream_decayed_upsert,
-    )
-
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    base = dt.datetime(2024, 1, 1)
-    src = tmp_path / "src"
-    src.mkdir()
-    all_rows = []
-    # three files -> three micro-batches, each spanning hours so the
-    # reference instant moves and the merge rescale path is exercised;
-    # the LAST batch carries no "c" events, so a type absent from the
-    # newest batch must still be rescaled to the global reference
-    for f in range(3):
-        types = ("a", "b", "c") if f < 2 else ("a", "b")
-        rows = [
-            (f * 1000 + i, base + dt.timedelta(hours=f * 8, minutes=7 * i),
-             i % 13, types[i % len(types)], float(i % 29) + 0.25, "{}")
-            for i in range(120)
-        ]
-        all_rows += rows
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = stream_decayed_upsert(
-        stream, str(tmp_path / "state"), str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-
-    batch_dir = tmp_path / "batch"
-    spark.createDataFrame(all_rows, schema).coalesce(1).write.parquet(
-        str(batch_dir / "events.parquet")
-    )
-    want = {
-        r.event_type: r
-        for r in R8.events_decayed_value(spark, str(batch_dir)).collect()
-    }
-    from jobsity_data_pipeline_spark.streaming.stream import sketch_state
-
-    got = {
-        r.event_type: r
-        for r in sketch_state(spark, str(tmp_path / "state")).collect()
-    }
-    assert set(got) == set(want)
-    for k, w in want.items():
-        g = got[k]
-        assert g.n == w.n
-        # batch values are rounded to 4 decimals; the stream state is
-        # unrounded -> bound = rounding half-step + merge fp noise
-        assert abs(g.dcount - w.decayed_count) < 1e-4
-        assert abs(g.dvalue - w.decayed_value) < 1e-4
-
-
 def test_preprocess_waterfall_accounting_conserves(spark):
     rows = {r.stage: r for r in
             R8.docs_preprocess_pipeline(spark, SF_SMOKE).collect()}

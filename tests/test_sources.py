@@ -574,29 +574,6 @@ def test_stats_survive_alternating_write_keys(spark, tmp_path):
                for k in ("ka", "kb"))
 
 
-def test_manifest_extras_survive_compact_and_merge(spark, tmp_path):
-    """Caller metadata published in a manifest (the BM25 term list
-    pattern) must ride through every republishing writer — compact,
-    a later upsert — or readers silently fall back to defaults."""
-    from jobsity_data_pipeline_spark.sources import snapshot as SN
-
-    t = str(tmp_path / "textras")
-    rows = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(20)], "trip_key long, v string"
-    )
-    assert SN.upsert_batch(rows, 0, t, extra={"bm25_terms": ["x", "y"]}) \
-        == "published"
-    assert SN.latest_manifest(t)["bm25_terms"] == ["x", "y"]
-
-    SN.compact(spark, t, target_files=1)
-    assert SN.latest_manifest(t)["bm25_terms"] == ["x", "y"]
-
-    # a later upsert keeps it too (carry-forward, not caller-supplied)
-    more = spark.createDataFrame([(99, "z")], "trip_key long, v string")
-    assert SN.upsert_batch(more, 8, t) == "published"
-    assert SN.latest_manifest(t)["bm25_terms"] == ["x", "y"]
-
-
 def test_compact_cluster_by_restores_data_skipping(spark, tmp_path,
                                                    monkeypatch):
     """Round-9: interleaved appends overlap every file's key range, so
@@ -896,10 +873,11 @@ def test_maintain_tolerates_files_missing_on_disk(spark, tmp_path):
 
 
 def test_snapshot_has_no_test_only_surface():
-    """Every top-level def of sources/snapshot.py is reached from code
-    outside the tests. The scan parses, with ast, the package's
-    modules plus __spark_entry__.py, bench.py and tripsbench/*.py; a
-    name is referenced where it appears as an ast.Name, an
+    """Every top-level def of sources/snapshot.py and
+    streaming/stream.py is reached from code outside the tests. The
+    scan parses, with ast, the package's modules plus
+    __spark_entry__.py, bench.py and tripsbench/*.py; a name is
+    referenced where it appears as an ast.Name, an
     ast.Attribute's attribute or an import alias (strings and
     docstrings do not count). Module-level code and the entry scripts
     are roots; a package def is live once a live context references
@@ -941,6 +919,8 @@ def test_snapshot_has_no_test_only_surface():
                 live.add(key)
                 live_names |= refs
                 grew = True
-    snap = pkg / "sources" / "snapshot.py"
-    dead = sorted(n for (p, n) in defs if p == snap and (p, n) not in live)
-    assert dead == [], f"snapshot.py defs only tests reach: {dead}"
+    for scanned in (pkg / "sources" / "snapshot.py",
+                    pkg / "streaming" / "stream.py"):
+        dead = sorted(n for (p, n) in defs
+                      if p == scanned and (p, n) not in live)
+        assert dead == [], f"{scanned.name} defs only tests reach: {dead}"
