@@ -48,7 +48,9 @@ def stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     completion over the events parquet via availableNow + memory sink —
     the streaming engine's answer hash-matches the batch SQL oracle.
     A run that does not finish within 300 s is stopped and raises
-    TimeoutError.
+    TimeoutError. The call sets the session time zone to UTC, as
+    session.get_spark and session.read_table do: the hour buckets
+    are UTC hours.
 
     Complete-mode + memory sink is the test harness; a deployment swaps
     in update mode + a real sink with a watermark. The aggregation
@@ -114,12 +116,17 @@ def stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        # a timed-out run holds a partial table: never return it as
-        # the answer, and do not leave the query running
-        q.stop()
-        raise TimeoutError(f"{name}: did not finish within 300 s")
-    return spark.table(name)
+    try:
+        if not q.awaitTermination(300):
+            # a timed-out run holds a partial table: never return it
+            # as the answer, and do not leave the query running
+            q.stop()
+            raise TimeoutError(f"{name}: did not finish within 300 s")
+        return spark.table(name)
+    finally:
+        # the returned frame keeps the sink's rows; dropping the view
+        # leaves no table behind in the caller's catalog
+        spark.catalog.dropTempView(name)
 
 
 def ingest_status(query) -> dict:

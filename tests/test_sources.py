@@ -215,6 +215,147 @@ def test_snapshot_schema_evolution_add_column(spark, tmp_path):
     assert set(latest.columns) == {"trip_key", "v", "score"}
     rows = {r.trip_key: r for r in latest.collect()}
     assert rows[1].score is None and rows[2].score == 9.5
+    # the manifest's schema widened in place: old columns first
+    assert _manifest_columns(SN.latest_manifest(t)) == [
+        "trip_key", "v", "score"]
+
+
+def _manifest_columns(man):
+    import json
+
+    return [f["name"] for f in json.loads(man["schema"])["fields"]]
+
+
+def _legacy_table(spark, t, rows):
+    """A table as written before manifests carried a schema: one
+    snappy data file set and a manifest without a ``schema`` field."""
+    import os
+
+    from jobsity_data_pipeline_spark.sources import snapshot as SN
+
+    d = os.path.join(t, "data-legacy")
+    spark.createDataFrame(rows, "trip_key long, v string").coalesce(1) \
+        .write.option("compression", "snappy").parquet(d)
+    files = [os.path.join(d, n) for n in sorted(os.listdir(d))
+             if n.endswith(".parquet")]
+    assert SN._publish(t, files, "legacy", None, 0) == 1
+    assert "schema" not in SN.latest_manifest(t)
+
+
+def test_upsert_rejects_conflicting_column_type(spark, tmp_path):
+    """A batch whose column type conflicts with the table's is refused
+    before anything is written: publishing it would leave a version
+    whose files no read can merge."""
+    import os
+
+    from jobsity_data_pipeline_spark.sources import snapshot as SN
+
+    t = str(tmp_path / "tbl")
+    ok = spark.createDataFrame([(1, "a")], "trip_key long, v string")
+    assert SN.upsert_batch(ok, 0, t) == "published"
+    before = (SN.history(t), sorted(os.listdir(t)))
+    bad = spark.createDataFrame([(2, 5)], "trip_key long, v long")
+    with pytest.raises(ValueError, match=r"'v' is string .* bigint"):
+        SN.upsert_batch(bad, 1, t)
+    assert (SN.history(t), sorted(os.listdir(t))) == before
+    assert [tuple(r) for r in SN.read_latest(spark, t).collect()] == [
+        (1, "a")]
+
+
+def test_reads_run_no_schema_job(spark, tmp_path, monkeypatch):
+    """Reads take the schema from the manifest: read_latest, read_point
+    and upsert_batch's read of the prior files launch no Spark job
+    before their action. A manifest without the field still reads
+    (inferred once), its next upsert publishes the field, and analyze
+    and compact carry it."""
+    from jobsity_data_pipeline_spark.sources import snapshot as SN
+
+    sc = spark.sparkContext
+
+    def jobs_in(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return sc.statusTracker().getJobIdsForGroup(group)
+
+    t = str(tmp_path / "tbl")
+    schema = "trip_key long, v string"
+    for b, rows in enumerate(([(1, "a")], [(2, "b")])):
+        SN.upsert_batch(spark.createDataFrame(rows, schema), b, t)
+    assert jobs_in("read-latest", lambda: SN.read_latest(spark, t)) == []
+    assert jobs_in("read-point",
+                   lambda: SN.read_point(spark, t, "trip_key", 2)) == []
+
+    before_write = []
+    real_write = SN._write_data
+
+    def write_data(df, table_dir):
+        before_write.append(list(sc.statusTracker().getJobIdsForGroup(
+            "upsert")))
+        return real_write(df, table_dir)
+
+    monkeypatch.setattr(SN, "_write_data", write_data)
+    batch = spark.createDataFrame([(3, "c")], schema)
+    jobs_in("upsert", lambda: SN.upsert_batch(batch, 2, t))
+    assert before_write == [[]]
+    monkeypatch.undo()
+
+    legacy = str(tmp_path / "legacy")
+    _legacy_table(spark, legacy, [(1, "a")])
+    assert [tuple(r) for r in SN.read_latest(spark, legacy).collect()] \
+        == [(1, "a")]
+    SN.upsert_batch(spark.createDataFrame([(2, "b")], schema), 0, legacy)
+    assert _manifest_columns(SN.latest_manifest(legacy)) == ["trip_key", "v"]
+    SN.analyze(legacy, ["v"])
+    assert SN.history(legacy)[-1]["batch"].startswith("analyze-")
+    assert _manifest_columns(SN.latest_manifest(legacy)) == ["trip_key", "v"]
+    SN.compact(spark, legacy, target_files=1)
+    man = SN.latest_manifest(legacy)
+    assert len(man["files"]) == 1
+    assert _manifest_columns(man) == ["trip_key", "v"]
+    assert sorted(map(tuple, SN.read_latest(spark, legacy).collect())) == [
+        (1, "a"), (2, "b")]
+
+
+def test_data_files_are_zstd_and_mixed_codecs_read(spark, tmp_path):
+    """Every data file the table writes is zstd parquet, and a version
+    that keeps earlier snappy files next to new zstd ones reads all
+    their rows."""
+    import pyarrow.parquet as pq
+
+    from jobsity_data_pipeline_spark.sources import snapshot as SN
+
+    def codecs(files):
+        out = set()
+        for f in files:
+            meta = pq.ParquetFile(f).metadata
+            for rg in range(meta.num_row_groups):
+                for c in range(meta.num_columns):
+                    out.add(meta.row_group(rg).column(c).compression)
+        return out
+
+    t = str(tmp_path / "tbl")
+    _legacy_table(spark, t, [(1, "a"), (2, "b")])
+    snappy = SN.latest_manifest(t)["files"]
+    assert codecs(snappy) == {"SNAPPY"}
+    SN.upsert_batch(
+        spark.createDataFrame([(2, "b"), (3, "c")], "trip_key long, v string"),
+        0, t)
+    files = SN.latest_manifest(t)["files"]
+    new = [f for f in files if f not in snappy]
+    assert len(files) > len(new) > 0
+    assert codecs(new) == {"ZSTD"}
+    rows = [(1, "a"), (2, "b"), (3, "c")]
+    assert sorted(map(tuple, SN.read_latest(spark, t).collect())) == rows
+    assert {tuple(r) for r in SN.read_point(
+        spark, t, "trip_key", 1).collect()} == {(1, "a")}
+
+    SN.compact(spark, t, target_files=1)
+    [compacted] = SN.latest_manifest(t)["files"]
+    assert codecs([compacted]) == {"ZSTD"}
+    assert sorted(map(tuple, SN.read_latest(spark, t).collect())) == rows
 
 
 def test_snapshot_compaction_preserves_history_and_idempotence(

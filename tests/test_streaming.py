@@ -232,7 +232,7 @@ def test_ingest_status_reports_progress(spark, src_dir, tmp_path):
 def test_stream_events_hourly_timeout_stops_and_raises(spark, monkeypatch):
     """A run that does not finish in time raises TimeoutError naming
     the query, instead of returning the partial memory-sink table as
-    the answer, and leaves no stream running."""
+    the answer, and leaves no stream running and no sink view."""
     from pyspark.sql.streaming import StreamingQuery
 
     monkeypatch.setattr(StreamingQuery, "awaitTermination",
@@ -240,3 +240,19 @@ def test_stream_events_hourly_timeout_stops_and_raises(spark, monkeypatch):
     with pytest.raises(TimeoutError, match="stream_events_hourly_"):
         ST.stream_events_hourly(spark, SF_SMOKE)
     assert spark.streams.active == []
+    assert not [t.name for t in spark.catalog.listTables()
+                if t.name.startswith("stream_events_hourly_")]
+
+
+def test_stream_events_hourly_leaves_no_view(spark):
+    """The memory-sink view each run registers is dropped before the
+    answer is returned: repeated calls leave no
+    ``stream_events_hourly_*`` table in the caller's catalog, and the
+    returned frames still collect the rollup."""
+    first = ST.stream_events_hourly(spark, SF_SMOKE)
+    second = ST.stream_events_hourly(spark, SF_SMOKE)
+    left = [t.name for t in spark.catalog.listTables()
+            if t.name.startswith("stream_events_hourly_")]
+    assert left == []
+    rows = sorted(map(tuple, first.collect()))
+    assert rows and rows == sorted(map(tuple, second.collect()))
