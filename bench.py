@@ -72,14 +72,14 @@ def _query_metrics(spark, group: str) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from jobsity_data_pipeline_spark.session import get_spark
+    from jobsity_data_pipeline_spark.session import get_spark, local_cpus
 
+    cpus = local_cpus()
     spark = get_spark(
         app_name="jobsity-bench",
         master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus) if cpus.isdigit() else 32,
+        shuffle_partitions=cpus,
         # the UI (off by default in get_spark) feeds the per-stage
         # shuffle/input byte counters; retained-job/stage limits are
         # raised so the per-query snapshot never races eviction

@@ -13,6 +13,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_cpus() -> int:
+    """Task threads of a local session: ``$SPARK_GRAFT_CPUS`` when it is
+    set to a number, else the CPUs this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+    return int(cpus) if cpus.isdigit() else len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "jobsity-data-pipeline-spark",
     master: str | None = None,
@@ -22,11 +29,11 @@ def get_spark(
     """Build (or reuse) a SparkSession with scale-aware defaults.
 
     On a real cluster ``master`` comes from spark-submit; locally we
-    default to ``local[$SPARK_GRAFT_CPUS]``.
+    default to ``local[local_cpus()]``.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     if shuffle_partitions is None:
-        shuffle_partitions = max(int(cpus) if cpus.isdigit() else 32, 8)
+        shuffle_partitions = max(cpus, 8)
 
     builder = (
         SparkSession.builder.appName(app_name)

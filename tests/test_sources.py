@@ -226,15 +226,16 @@ def _manifest_columns(man):
     return [f["name"] for f in json.loads(man["schema"])["fields"]]
 
 
-def _legacy_table(spark, t, rows):
+def _legacy_table(spark, t, rows, schema="trip_key long, v string"):
     """A table as written before manifests carried a schema: one
-    snappy data file set and a manifest without a ``schema`` field."""
+    snappy data file set with Spark's default v1 pages and a manifest
+    without a ``schema`` field."""
     import os
 
     from jobsity_data_pipeline_spark.sources import snapshot as SN
 
     d = os.path.join(t, "data-legacy")
-    spark.createDataFrame(rows, "trip_key long, v string").coalesce(1) \
+    spark.createDataFrame(rows, schema).coalesce(1) \
         .write.option("compression", "snappy").parquet(d)
     files = [os.path.join(d, n) for n in sorted(os.listdir(d))
              if n.endswith(".parquet")]
@@ -320,42 +321,120 @@ def test_reads_run_no_schema_job(spark, tmp_path, monkeypatch):
 
 
 def test_data_files_are_zstd_and_mixed_codecs_read(spark, tmp_path):
-    """Every data file the table writes is zstd parquet, and a version
-    that keeps earlier snappy files next to new zstd ones reads all
-    their rows."""
+    """Every data file the table writes is zstd parquet with v2 pages,
+    and a version that keeps earlier snappy v1 files next to new zstd
+    v2 ones reads all their rows, by read_latest and by read_point. On
+    a trips-shaped table the high-cardinality strings are
+    DELTA_BYTE_ARRAY, an encoding only v2 pages use."""
     import pyarrow.parquet as pq
 
     from jobsity_data_pipeline_spark.sources import snapshot as SN
 
-    def codecs(files):
-        out = set()
+    def chunks(files):
         for f in files:
             meta = pq.ParquetFile(f).metadata
             for rg in range(meta.num_row_groups):
                 for c in range(meta.num_columns):
-                    out.add(meta.row_group(rg).column(c).compression)
-        return out
+                    yield meta.row_group(rg).column(c)
+
+    def codecs(files):
+        return {ch.compression for ch in chunks(files)}
+
+    def delta_columns(files):
+        return {ch.path_in_schema for ch in chunks(files)
+                if "DELTA_BYTE_ARRAY" in ch.encodings}
+
+    trips = [
+        (f"r{i % 3}", f"POINT ({i}.25 45.{i})", f"POINT ({i}.75 44.{i})",
+         f"2018-05-{i:02d} 0{i}:{i:02d}:00", f"ds{i % 2}", f"{i * 40503:08x}")
+        for i in range(1, 7)
+    ]
+    for name, schema, rows, delta in (
+        ("kv", "trip_key long, v string", [(1, "a"), (2, "b"), (3, "c")],
+         set()),
+        ("trips", "region string, origin_coord string, "
+         "destination_coord string, datetime string, datasource string, "
+         "trip_key string", trips, {"trip_key", "origin_coord", "datetime"}),
+    ):
+        t = str(tmp_path / name)
+        _legacy_table(spark, t, rows[:2], schema)
+        snappy = SN.latest_manifest(t)["files"]
+        assert codecs(snappy) == {"SNAPPY"}
+        assert delta_columns(snappy) == set()
+        SN.upsert_batch(spark.createDataFrame(rows[1:], schema), 0, t)
+        files = SN.latest_manifest(t)["files"]
+        new = [f for f in files if f not in snappy]
+        assert len(files) > len(new) > 0
+        assert codecs(new) == {"ZSTD"}
+        assert delta_columns(new) >= delta
+        assert sorted(map(tuple, SN.read_latest(spark, t).collect())) == \
+            sorted(rows)
+        key_at = [c.split()[0] for c in schema.split(",")].index("trip_key")
+        for r in (rows[0], rows[-1]):  # one row of each file set
+            assert [tuple(x) for x in SN.read_point(
+                spark, t, "trip_key", r[key_at]).collect()] == [r]
+
+        SN.compact(spark, t, target_files=1)
+        [compacted] = SN.latest_manifest(t)["files"]
+        assert codecs([compacted]) == {"ZSTD"}
+        assert delta_columns([compacted]) >= delta
+        assert sorted(map(tuple, SN.read_latest(spark, t).collect())) == \
+            sorted(rows)
+
+
+def _assert_table_layout(t):
+    """Every file of the latest version lists its columns in the
+    manifest schema's order and holds its rows sorted by them."""
+    import pyarrow.parquet as pq
+
+    from jobsity_data_pipeline_spark.sources import snapshot as SN
+
+    man = SN.latest_manifest(t)
+    cols = _manifest_columns(man)
+    for f in man["files"]:
+        data = pq.ParquetFile(f).read()
+        assert data.column_names == cols, f
+        got = list(zip(*(data.column(c).to_pylist() for c in cols)))
+        assert got == sorted(got), f
+
+
+def test_every_written_file_set_has_the_table_layout(spark, tmp_path):
+    """A first version, an anti-join version, a stream drop and a
+    compaction without a cluster key all write their files in the
+    table's column order, rows sorted by those columns. The anti-join
+    puts the key first; the files must not."""
+    from jobsity_data_pipeline_spark.sources import snapshot as SN
+
+    schema = "region string, v string, trip_key long"
+
+    def rows(keys):
+        return [(f"r{k % 3}", f"v{k * 7 % 10}", k) for k in keys]
 
     t = str(tmp_path / "tbl")
-    _legacy_table(spark, t, [(1, "a"), (2, "b")])
-    snappy = SN.latest_manifest(t)["files"]
-    assert codecs(snappy) == {"SNAPPY"}
-    SN.upsert_batch(
-        spark.createDataFrame([(2, "b"), (3, "c")], "trip_key long, v string"),
-        0, t)
-    files = SN.latest_manifest(t)["files"]
-    new = [f for f in files if f not in snappy]
-    assert len(files) > len(new) > 0
-    assert codecs(new) == {"ZSTD"}
-    rows = [(1, "a"), (2, "b"), (3, "c")]
-    assert sorted(map(tuple, SN.read_latest(spark, t).collect())) == rows
-    assert {tuple(r) for r in SN.read_point(
-        spark, t, "trip_key", 1).collect()} == {(1, "a")}
+    # batch ids clear of the stream's micro-batch 0, which shares the
+    # token space
+    assert SN.upsert_batch(spark.createDataFrame(
+        rows(range(40, 0, -1)), schema), 10, t) == "published"
+    _assert_table_layout(t)
+    assert SN.upsert_batch(spark.createDataFrame(
+        rows(range(60, 20, -1)), schema), 11, t) == "published"
+    _assert_table_layout(t)
 
-    SN.compact(spark, t, target_files=1)
-    [compacted] = SN.latest_manifest(t)["files"]
-    assert codecs([compacted]) == {"ZSTD"}
-    assert sorted(map(tuple, SN.read_latest(spark, t).collect())) == rows
+    src = str(tmp_path / "src")
+    spark.createDataFrame(rows(range(80, 50, -1)), schema).coalesce(1) \
+        .write.parquet(src)
+    q = SN.start_snapshot_upsert(spark.readStream.schema(schema).parquet(src),
+                                 t, str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    assert [h["batch"] for h in SN.history(t)] == [
+        "batch10", "batch11", "batch0"]
+    _assert_table_layout(t)
+
+    SN.compact(spark, t, target_files=2)
+    assert len(SN.latest_manifest(t)["files"]) == 2
+    _assert_table_layout(t)
+    assert sorted(r.trip_key for r in SN.read_latest(spark, t).collect()) \
+        == list(range(1, 81))
 
 
 def test_snapshot_compaction_preserves_history_and_idempotence(
